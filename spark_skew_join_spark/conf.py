@@ -37,14 +37,14 @@ class SkewType(enum.Enum):
         return self in (SkewType.RIGHT, SkewType.CROSS)
 
 
-# Estimator for per-key frequencies driving the replication factor.
-#   exact  — distributed groupBy().count() capped at max_hot_keys (default;
-#            no over-estimation, safe for outer joins — SURVEY §4 Q4).
-#   cms    — Count-Min Sketch built via mapPartitions + treeReduce
-#            (scales when even the hot-key histogram is too big; biased
-#            upward by eps*N, so outer joins may over-replicate — kept
-#            semantically safe because replication only multiplies salt
-#            fan-out, matched pairs still join exactly once).
+# Estimator for per-key frequencies, which picks the hot keys and their
+# fragment counts. Output stays exact under all three: the estimate only
+# routes keys to the hot or cold half of the join, and unmatched rows come
+# from the data.
+#   exact  — distributed groupBy().count() capped at max_hot_keys (default).
+#   cms    — Count-Min Sketch built via mapPartitions + treeReduce (scales
+#            when even the hot-key histogram is too big; biased upward by
+#            eps*N, so a key may be called hot or over-fragmented).
 #   sample — exact counts over a Bernoulli sample, scaled up (cheapest
 #            pre-pass for very large inputs).
 ESTIMATORS = ("exact", "cms", "sample")
@@ -93,12 +93,6 @@ class SkewJoinConf:
     # collision ("ab","c") == ("a","bc") (quirk Q1). For equivalence
     # testing against the reference only; leave False in production.
     compat_concat_key: bool = False
-    # Join-strategy hint ("shuffle_hash", "merge", "shuffle_replicate_nl")
-    # applied to the salted join's right side. User hints on the inputs get
-    # buried under the hot-map attach joins and stop resolving — pass the
-    # strategy here instead. A 3-key ShuffledHashJoin skips the 2x sort a
-    # SortMergeJoin would pay on the salted stream.
-    join_hint: str | None = None
 
     def __post_init__(self) -> None:
         if self.estimator not in ESTIMATORS:

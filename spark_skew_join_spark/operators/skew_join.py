@@ -1,18 +1,25 @@
 """Skew-aware fragment-replicate equi-join — the reference's flagship operator.
 
-Re-expresses ``skewJoin``
-(``/root/reference/src/main/scala/org/anish/spark/skew/dfimplicits.scala:31-125``)
-as pure DataFrame composition. Shape of the algorithm (README.md:5-13 of the
-reference, Kleppmann DDIA ch.10 "skewed joins"):
+Re-expresses the reference's ``skewJoin`` (``dfimplicits.scala:31-125``)
+as pure DataFrame composition: the fragment-replicate join of DDIA ch.10
+"skewed joins" (reference README.md:5-13).
 
-1. a *sampling job* estimates per-key frequency on both sides;
-2. hot keys on the left fragment left rows into ``R_L`` salt buckets and
-   replicate each right row across all ``R_L`` buckets (mirrored for the
-   right side with ``R_R``);
-3. the equi-join runs on ``(key, salt_left, salt_right)`` so one hot key
-   now hashes to ``R_L × R_R`` distinct shuffle partitions;
-4. helper columns are dropped → output is identical (as a multiset) to the
-   plain join.
+1. a *pre-pass* estimates per-key frequency on both sides and keeps the
+   hot keys, gated by ``SkewType``;
+2. each side splits into hot rows and cold rows by a broadcast semi-join
+   and anti-join against the hot-key set (null keys never match, so they
+   land in the cold half);
+3. the cold halves run the plain ``left.join(right, on, how)``;
+4. the hot halves join by broadcasting the smaller side's hot fragment —
+   fragment-replicate, with Spark doing the replication. Only when neither
+   fragment fits ``spark.sql.autoBroadcastJoinThreshold`` (keys hot on
+   both sides) are the matched hot pairs salted: left rows fragment into
+   ``R_L`` buckets and each right row replicates across them, mirrored
+   for ``R_R``, and the join runs on ``(key, salt_left, salt_right)``;
+5. the halves are unioned. The hot and cold key sets are disjoint, so the
+   union equals the plain join for every join type and estimator:
+   unmatched hot rows come from the data (the join itself, or an anti-join
+   against the other side's distinct hot keys), never from the estimate.
 
 Deliberate departures from the reference, each documented in SURVEY §4:
 
@@ -24,56 +31,42 @@ Deliberate departures from the reference, each documented in SURVEY §4:
   mutable ``java.util.Random`` (``dfimplicits.scala:59-65``) — retry-safe
   (quirk Q3).
 * **No per-row UDFs**: the reference's four scalar UDFs
-  (``dfimplicits.scala:71-107``) become a broadcast hash join against a tiny
-  hot-key frequency table plus ``floor(rand()*R)`` / ``explode(sequence())``
-  — everything stays inside whole-stage codegen.
-* **Exact hot-key map by default** (no CMS over-estimation → outer joins are
-  exact, quirk Q4); CMS and sampling estimators are conf options for scales
-  where even the hot-key histogram is expensive.
+  (``dfimplicits.scala:71-107``) become broadcast joins against a tiny
+  hot-key table plus ``floor(rand()*R)`` / ``explode(sequence())`` —
+  everything stays inside whole-stage codegen.
+* **Exact for every estimator** (quirk Q4): CMS and sampling estimators
+  only choose which keys take the hot path, never which rows are kept.
 
-Scale design (100 TB, 1000 executors): the pre-pass is ONE job over just the
-key columns of both sides (column-pruned scans, map-side partial aggregation,
-top-K capped collect of at most ``max_hot_keys`` rows ≈ a few MB); the hot
-table is broadcast; cold keys pay zero overhead (R=1, salt=0); AQE skew-join
-remains available as the built-in alternative (``plans.aqe``).
+Scale design: the pre-pass is ONE job over just the key columns of both
+sides (column-pruned scans, map-side partial aggregation, a collect of at
+most ``max_hot_keys`` rows); AQE skew-join remains available as the
+built-in alternative (``plans.aqe``).
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..conf import SkewJoinConf, SkewType
+from ..conf import SkewJoinConf
 
-# Internal helper columns (reference: JOIN_KEY/_join_key_nbRcsSD1FW + salts,
-# dfimplicits.scala:18-21). Unlikely to collide with user columns.
+# Internal helper columns of the salted remainder (reference:
+# JOIN_KEY/_join_key_nbRcsSD1FW + salts, dfimplicits.scala:18-21).
 _S1 = "__sj_salt1"
 _S2 = "__sj_salt2"
 _RL = "__sj_repl_left"
 _RR = "__sj_repl_right"
-_MARK = "__sj_marker"
-# outer-join helpers: row markers + "key exists on the other side" flags
-_LM = "__sj_lmark"
-_RM = "__sj_rmark"
-_HL = "__sj_has_left"
-_HR = "__sj_has_right"
 
-_SEMI = {"semi", "left_semi", "leftsemi"}
-_ANTI = {"anti", "left_anti", "leftanti"}
+_SEMI_ANTI = {"semi", "leftsemi", "anti", "leftanti"}
+_KEEP_LEFT = {"left", "leftouter", "full", "fullouter", "outer"}
+_KEEP_RIGHT = {"right", "rightouter", "full", "fullouter", "outer"}
 
 
 def _normalize_on(on) -> list[tuple[str, str]]:
     """Accept a column name, a list of names, or a list of (left, right) pairs."""
-    if isinstance(on, str):
-        return [(on, on)]
-    pairs = []
-    for item in on:
-        if isinstance(item, str):
-            pairs.append((item, item))
-        else:
-            lc, rc = item
-            pairs.append((lc, rc))
+    on = [on] if isinstance(on, str) else on
+    pairs = [(c, c) if isinstance(c, str) else tuple(c) for c in on]
     if not pairs:
         raise ValueError("skew_join requires at least one join column")
     return pairs
@@ -208,13 +201,8 @@ def skew_join(
     (``dfimplicits.scala:116-124``): one copy of the key columns (left names),
     then remaining left columns, then remaining right columns.
 
-    All Spark join types are supported. inner/left/right/full run the salted
-    join directly (exact-by-construction: every matching pair agrees on
-    exactly one ``(salt1, salt2)`` combination — SURVEY §2 semantics
-    paragraph). semi/anti cannot be salted naively (exploded copies would
-    change multiplicity), so they run the salted *left* join against the
-    distinct right key set plus a match marker — same skew resistance, exact
-    multiplicity.
+    Every Spark equi-join type goes through one hot/cold split (module
+    docstring); semi/anti joins read only the right side's key columns.
     """
     conf = conf or SkewJoinConf()
     pairs = _normalize_on(on)
@@ -236,7 +224,6 @@ def skew_join(
                 )
             right = right.withColumnRenamed(rc, lc)
 
-    drop_compat = False
     if conf.compat_concat_key:
         # Reference-faithful mode (SURVEY §7 hard part c): equi-join on the
         # separator-less concat key (dfimplicits.scala:46-47,116), dropping
@@ -247,159 +234,104 @@ def skew_join(
         left = left.withColumn(_COMPAT_KEY, ckey)
         right = right.withColumn(_COMPAT_KEY, ckey).drop(*lnames)
         lnames = [_COMPAT_KEY]
-        drop_compat = True
 
-    if how_n in _SEMI or how_n in _ANTI:
-        rk = right.select(*lnames).distinct().withColumn(_MARK, F.lit(1))
-        joined = _salted_join(left, rk, lnames, "left", conf)
-        pred = F.col(_MARK).isNotNull() if how_n in _SEMI else F.col(_MARK).isNull()
-        out = joined.where(pred).select(*left.columns)
-    else:
-        out = _salted_join(left, right, lnames, how, conf)
-    return out.drop(_COMPAT_KEY) if drop_compat else out
+    if how_n in _SEMI_ANTI:
+        right = right.select(*lnames)
+    out = _split_join(left, right, lnames, how_n, conf)
+    return out.drop(_COMPAT_KEY) if conf.compat_concat_key else out
 
 
 _COMPAT_KEY = "_join_key_nbRcsSD1FW"  # the reference's literal helper name
 
 
-def _salted_join(
+def _split_join(
     left: DataFrame,
     right: DataFrame,
-    keys: Sequence[str],
+    keys: list[str],
     how: str,
     conf: SkewJoinConf,
 ) -> DataFrame:
     spark = left.sparkSession
     cap = _num_partitions(left, conf)
 
-    left_cols = list(left.columns)
     right_rest = [c for c in right.columns if c not in keys]
-    dup = set(left_cols) & set(right_rest)
+    dup = set(left.columns) & set(right_rest)
     if dup:
         raise ValueError(
             f"non-key column(s) {sorted(dup)} exist on both sides; rename or "
             "drop them before skew_join (output columns must be unambiguous)"
         )
-    out_cols = left_cols + right_rest
-    hot = _hot_key_rows(left, right, keys, conf, cap)
+    out_cols = list(left.columns) + right_rest
 
     # fragment counts per hot key, gated by skew side (SkewType.scala:14-28)
-    rows = []
-    for t in hot:
+    hot, rows_l, rows_r = [], 0, 0
+    for t in _hot_key_rows(left, right, keys, conf, cap):
         kv, cl, cr = t[:-2], t[-2], t[-1]
         rl = conf.replication(cl, cap) if conf.skew_type.left else 1
         rr = conf.replication(cr, cap) if conf.skew_type.right else 1
         if rl > 1 or rr > 1:
-            rows.append(kv + (rl, rr, cl > 0, cr > 0))
+            hot.append(kv + (rl, rr))
+            rows_l, rows_r = rows_l + cl, rows_r + cr
 
-    if not rows:
-        # no hot keys → the salted plan degenerates to the plain join;
-        # skip the helper columns entirely (zero overhead for cold data)
-        joined = left.join(right, on=list(keys), how=how)
-        return joined.select(*out_cols)
+    if not hot:
+        # no hot keys → the split degenerates to the plain join
+        return left.join(right, on=keys, how=how).select(*out_cols)
 
-    key_fields = left.select(*keys).schema
-    from pyspark.sql import types as T
+    repl = [T.StructField(c, T.IntegerType(), False) for c in (_RL, _RR)]
+    hot_schema = T.StructType(list(left.select(*keys).schema) + repl)
+    hot_df = F.broadcast(spark.createDataFrame(hot, schema=hot_schema))
+    lh, rh = (df.join(hot_df, on=keys, how="left_semi") for df in (left, right))
+    lc, rc = (df.join(hot_df, on=keys, how="left_anti") for df in (left, right))
 
-    how_pre = how.replace("_", "").lower()
-    is_outer = how_pre in ("left", "leftouter", "right", "rightouter", "full", "fullouter", "outer")
-    if is_outer and conf.estimator != "exact":
-        # The outer-join phantom filter drops rows based on the _HL/_HR
-        # presence flags; sketch estimators can overestimate a key onto a
-        # side it doesn't exist on, which would silently delete legitimate
-        # unmatched rows. Re-verify membership EXACTLY for the (few) hot
-        # keys: one broadcast semi-join per side, scanning only hot-key rows.
-        import warnings
+    def keys_of(df: DataFrame) -> DataFrame:
+        return F.broadcast(df.select(*keys).distinct())
 
-        warnings.warn(
-            f"skew_join: estimator={conf.estimator!r} with outer join — "
-            "verifying hot-key side membership exactly (extra pass per side) "
-            "so sketch overestimates cannot drop unmatched rows",
-            stacklevel=3,
-        )
-        kdf = F.broadcast(
-            spark.createDataFrame(
-                [t[: len(keys)] for t in rows], schema=T.StructType(list(key_fields))
-            )
-        )
-        present_l = {
-            tuple(r)
-            for r in left.join(kdf, on=list(keys), how="left_semi")
-            .select(*keys).distinct().collect()
-        }
-        present_r = {
-            tuple(r)
-            for r in right.join(kdf, on=list(keys), how="left_semi")
-            .select(*keys).distinct().collect()
-        }
-        rows = [
-            t[: len(keys)]
-            + (t[-4], t[-3], t[: len(keys)] in present_l, t[: len(keys)] in present_r)
-            for t in rows
-        ]
+    # Fit test: pre-pass row counts × schema row width against Spark's own
+    # broadcast threshold (-1 disables broadcasting, so nothing fits).
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    bytes_l = rows_l * left._jdf.schema().defaultSize()
+    bytes_r = rows_r * right._jdf.schema().defaultSize()
+    keep_l, keep_r = how in _KEEP_LEFT, how in _KEEP_RIGHT
+    if how in _SEMI_ANTI:
+        hot_half = [lh.join(keys_of(rh), on=keys, how=how)]
+    elif min(bytes_l, bytes_r) > limit:
+        hot_half = [_salted_pairs(left, right, hot_df, keys, conf.salt_seed)]
+    elif bytes_r <= bytes_l:
+        hot_half = [lh.join(F.broadcast(rh), on=keys, how="left" if keep_l else "inner")]
+        keep_l = False
+    else:
+        hot_half = [F.broadcast(lh).join(rh, on=keys, how="right" if keep_r else "inner")]
+        keep_r = False
+    # unmatched hot rows of the side the join above did not preserve
+    if keep_l:
+        hot_half.append(lh.join(keys_of(rh), on=keys, how="left_anti"))
+    if keep_r:
+        hot_half.append(rh.join(keys_of(lh), on=keys, how="left_anti"))
 
-    hot_schema = T.StructType(
-        list(key_fields)
-        + [
-            T.StructField(_RL, T.IntegerType(), False),
-            T.StructField(_RR, T.IntegerType(), False),
-            T.StructField(_HL, T.BooleanType(), False),
-            T.StructField(_HR, T.BooleanType(), False),
-        ]
-    )
-    hot_df = spark.createDataFrame(rows, schema=hot_schema)
+    out = lc.join(rc, on=keys, how=how)
+    for part in hot_half:
+        out = out.unionByName(part, allowMissingColumns=True)
+    return out.select(*out_cols)
 
-    how_n = how.replace("_", "").lower()
-    outer_left = how_n in ("left", "leftouter", "full", "fullouter", "outer")
-    outer_right = how_n in ("right", "rightouter", "full", "fullouter", "outer")
 
-    def attach(df: DataFrame, keep: list[str]) -> DataFrame:
-        out = df.join(F.broadcast(hot_df), on=list(keys), how="left")
-        out = out.withColumn(_RL, F.coalesce(F.col(_RL), F.lit(1))).withColumn(
-            _RR, F.coalesce(F.col(_RR), F.lit(1))
-        )
-        for flag in (_HL, _HR):
-            out = (
-                out.withColumn(flag, F.coalesce(F.col(flag), F.lit(False)))
-                if flag in keep
-                else out.drop(flag)
-            )
-        return out
-
-    # left rows: own fragment salt1 ∈ [0, R_L); replicate over salt2 = 0..R_R-1.
-    # The left side carries the "key exists on right" flag (readable even on
-    # rows whose right half is null-extended) and a row marker — used below
-    # to remove phantom null-extended rows from outer joins.
+def _salted_pairs(
+    left: DataFrame, right: DataFrame, hot_df: DataFrame, keys: list[str], seed: int
+) -> DataFrame:
+    """Matched pairs of the hot rows by salting: the inner join with the
+    hot-key table selects the hot rows and attaches their fragment counts;
+    left rows take their own fragment salt1 ∈ [0, R_L) and replicate over
+    salt2 ∈ [0, R_R); right rows mirror that (dfimplicits.scala:59-114), so
+    every matching pair meets on exactly one ``(salt1, salt2)``."""
     l2 = (
-        attach(left, keep=[_HR])
-        .withColumn(_S1, F.floor(F.rand(conf.salt_seed) * F.col(_RL)).cast("int"))
+        left.join(hot_df, on=keys)
+        .withColumn(_S1, F.floor(F.rand(seed) * F.col(_RL)).cast("int"))
         .withColumn(_S2, F.explode(F.sequence(F.lit(0), F.col(_RR) - 1)))
-        .withColumn(_LM, F.lit(1))
         .drop(_RL, _RR)
     )
-    # right rows: mirror (dfimplicits.scala:83-114)
     r2 = (
-        attach(right, keep=[_HL])
-        .withColumn(_S2, F.floor(F.rand(conf.salt_seed + 1) * F.col(_RR)).cast("int"))
+        right.join(hot_df, on=keys)
+        .withColumn(_S2, F.floor(F.rand(seed + 1) * F.col(_RR)).cast("int"))
         .withColumn(_S1, F.explode(F.sequence(F.lit(0), F.col(_RL) - 1)))
-        .withColumn(_RM, F.lit(1))
         .drop(_RL, _RR)
     )
-
-    if conf.join_hint:
-        r2 = r2.hint(conf.join_hint)
-    joined = l2.join(r2, on=list(keys) + [_S1, _S2], how=how)
-
-    # Outer-join phantom removal: a replicated/exploded copy that landed in a
-    # salt bucket its partner side left empty is null-extended by the join,
-    # but the key demonstrably exists on the other side (hot-map flag), so the
-    # true join matches it — the copy is a phantom, not a legitimate
-    # unmatched row. (The reference forwards joinType verbatim and ships this
-    # bug, dfimplicits.scala:116; with estimator="exact" the flags are exact,
-    # and with cms/sample the flags were re-verified exactly above for outer
-    # joins — the filter always restores textbook outer-join semantics.)
-    if outer_left:
-        joined = joined.where(~(F.col(_RM).isNull() & F.col(_HR)))
-    if outer_right:
-        joined = joined.where(~(F.col(_LM).isNull() & F.col(_HL)))
-    return joined.select(*out_cols)
+    return l2.join(r2, on=keys + [_S1, _S2]).drop(_S1, _S2)

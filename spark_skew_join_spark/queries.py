@@ -6213,33 +6213,30 @@ def hll_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact comparators in ONE action: a multi-distinct aggregate per
     # table unioned into a single 3-row job (VERDICT r4 #8 — the old
     # form ran one full countDistinct job per probe)
-    def _exact():
-        return (
-            t["orders"]
-            .agg(F.countDistinct("o_custkey").alias("n"))
-            .select(F.lit("orders.o_custkey").alias("key"), "n")
-            .unionByName(
-                t["lineitem"]
-                .agg(
-                    F.countDistinct("l_partkey").alias("np"),
-                    F.countDistinct("l_suppkey").alias("ns"),
-                )
-                .select(
-                    F.explode(
-                        F.map_from_arrays(
-                            F.array(
-                                F.lit("lineitem.l_partkey"),
-                                F.lit("lineitem.l_suppkey"),
-                            ),
-                            F.array("np", "ns"),
-                        )
-                    ).alias("key", "n")
-                )
+    exact_rows = (
+        t["orders"]
+        .agg(F.countDistinct("o_custkey").alias("n"))
+        .select(F.lit("orders.o_custkey").alias("key"), "n")
+        .unionByName(
+            t["lineitem"]
+            .agg(
+                F.countDistinct("l_partkey").alias("np"),
+                F.countDistinct("l_suppkey").alias("ns"),
             )
-            .collect()
+            .select(
+                F.explode(
+                    F.map_from_arrays(
+                        F.array(
+                            F.lit("lineitem.l_partkey"),
+                            F.lit("lineitem.l_suppkey"),
+                        ),
+                        F.array("np", "ns"),
+                    )
+                ).alias("key", "n")
+            )
         )
-
-    exact_rows = _exact()
+        .collect()
+    )
     exact_by_key = {r["key"]: int(r["n"]) for r in exact_rows}
     rows = []
     for name, df, cols in probes:

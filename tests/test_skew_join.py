@@ -7,10 +7,13 @@ skew sides, estimators, and the FIXTURES.md §B edge cases.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
 from spark_skew_join_spark import SkewJoinConf, SkewType, skew_join
+from spark_skew_join_spark.operators.diagnostics import partition_stats
 from spark_skew_join_spark.testing import assert_df_equal
 
 
@@ -143,30 +146,34 @@ def test_estimator_cms(spark, zipf_left, uniform_right):
 
 
 @pytest.mark.parametrize("estimator", ["cms", "sample"])
-@pytest.mark.parametrize("how", ["left", "full"])
+@pytest.mark.parametrize("how", ["left", "right", "full"])
 def test_estimator_outer_join_exact(spark, estimator, how):
-    """Outer joins with sketch estimators must verify presence flags exactly
-    — an overestimated key on the empty side must not delete legitimate
-    unmatched rows (ADVICE round 1)."""
+    """Outer joins with sketch estimators stay exact and silent: a hot key
+    that exists on one side only must keep all its unmatched rows, however
+    the estimator over-counts it on the other side (ADVICE round 1). Any
+    warning fails the test."""
     import warnings
 
-    # hot key 7 exists ONLY on the left → its left rows are unmatched and
-    # must all survive a left/full outer join
-    left = spark.createDataFrame(
-        [(7, f"l{i}") for i in range(200)] + [(k, f"l{k}") for k in range(100)],
-        "k bigint, pl string",
+    # hot key 7 exists ONLY on one side (left, then right in the mirrored
+    # case) → its rows are unmatched and must all survive the outer joins
+    # that preserve that side
+    only = spark.createDataFrame(
+        [(7, f"a{i}") for i in range(200)] + [(k, f"a{k}") for k in range(100)],
+        "k bigint, pa string",
     )
-    right = spark.createDataFrame(
-        [(k, f"r{k}") for k in range(100) for _ in range(3)], "k bigint, pr string"
+    other = spark.createDataFrame(
+        [(k, f"b{k}") for k in range(100) if k != 7 for _ in range(3)],
+        "k bigint, pb string",
     )
     conf = SkewJoinConf(
         replication_factor=0.5, hot_threshold=10,
         estimator=estimator, sample_fraction=0.9,
     )
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        actual = skew_join(left, right, "k", how, conf)
-    assert_df_equal(actual, plain(left, right, ["k"], how))
+    for left, right in ((only, other), (other, only)):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            actual = skew_join(left, right, "k", how, conf)
+        assert_df_equal(actual, plain(left, right, ["k"], how))
 
 
 def test_estimator_sample(spark, zipf_left, uniform_right):
@@ -180,20 +187,72 @@ def test_estimator_sample(spark, zipf_left, uniform_right):
     assert_df_equal(actual, plain(zipf_left, uniform_right, ["k"], "inner"))
 
 
+@contextmanager
+def _spark_conf(spark, settings: dict):
+    """Set Spark confs for the block, then restore the old values."""
+    old = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 def test_salting_actually_fragments(spark, zipf_left, uniform_right):
-    """The value proposition: hot keys spread across shuffle partitions.
+    """The value proposition as a balance property: with AQE (and so its
+    skew handling) off, the hottest key's output rows do not all sit in one
+    partition — on the broadcast hot path ("10MB") and on the salted path
+    ("-1"). A plain shuffle join on the same fixture puts them all in one."""
+    top = zipf_left.groupBy("k").count().orderBy(F.desc("count")).first()["k"]
+    for broadcast_limit in ("10MB", "-1"):
+        with _spark_conf(spark, {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": broadcast_limit,
+        }):
+            shuffled = zipf_left.join(uniform_right.hint("merge"), "k")
+            split = skew_join(zipf_left, uniform_right, "k", "inner", TEST_CONF)
+            s_plain = partition_stats(shuffled.where(F.col("k") == top))
+            s_skew = partition_stats(split.where(F.col("k") == top))
+        assert s_plain.total_records == s_skew.total_records > 0
+        assert s_plain.max == s_plain.total_records, "plain shuffle join should not spread the key"
+        assert s_skew.max < s_skew.total_records, f"hot key in one partition at {broadcast_limit}"
 
-    Verified structurally — the salted join plan joins on (k, salt1, salt2),
-    so rows of the hottest key land in multiple buckets."""
-    from spark_skew_join_spark.operators.skew_join import _hot_key_rows
 
-    hot = _hot_key_rows(zipf_left, uniform_right, ["k"], TEST_CONF, 8)
-    assert hot, "fixture should contain hot keys at this threshold"
-    top_key, cl, cr = hot[0][0], hot[0][1], hot[0][2]
-    assert cl >= 20
-    conf = TEST_CONF
-    r_l = conf.replication(cl, 8)
-    assert r_l > 1, "hottest key must fragment"
+@pytest.mark.parametrize("broadcast_limit", ["1024", "10MB"], ids=["salted", "broadcast"])
+@pytest.mark.parametrize(
+    "how", ["inner", "left", "right", "full", "left_semi", "left_anti"]
+)
+def test_key_hot_on_both_sides(spark, how, broadcast_limit):
+    """Key 1 is hot on both sides; keys 98 and 99 are hot on one side only,
+    so their rows are unmatched. With a 1 KB broadcast threshold neither
+    hot fragment fits and the matched hot pairs are salted; at 10 MB the
+    smaller hot fragment is broadcast (the right one, then the left one
+    with the sides swapped). Every case must equal the plain join, null
+    keys included."""
+    a = spark.createDataFrame(
+        [(1, f"a{i}") for i in range(120)]
+        + [(98, f"a{i}") for i in range(40)]
+        + [(k, f"a{k}") for k in range(2, 40)]
+        + [(None, "an")] * 3,
+        "k bigint, pa string",
+    )
+    b = spark.createDataFrame(
+        [(1, f"b{i}") for i in range(50)]
+        + [(99, f"b{i}") for i in range(30)]
+        + [(k, f"b{k}") for k in range(30, 60)]
+        + [(None, "bn")] * 2,
+        "k bigint, pb string",
+    )
+    conf = SkewJoinConf(replication_factor=0.1, hot_threshold=20)
+    with _spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": broadcast_limit}):
+        for left, right in ((a, b), (b, a)):
+            actual = skew_join(left, right, "k", how, conf)
+            if how == "inner" and broadcast_limit == "1024":
+                plan = actual._jdf.queryExecution().executedPlan().toString()
+                assert "Generate explode" in plan, "hot key did not take the salted path"
+            assert_df_equal(actual, plain(left, right, ["k"], how))
 
 
 def test_ambiguous_non_key_columns_rejected(spark):

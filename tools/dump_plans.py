@@ -36,16 +36,17 @@ def main() -> None:
         "(shuffles), absence of `BatchEvalPython` (no Python in hot paths).\n",
     ]
 
-    conf = SkewJoinConf(replication_factor=0.01, hot_threshold=200, join_hint="shuffle_hash")
+    conf = SkewJoinConf(replication_factor=0.01, hot_threshold=200)
     sj = skew_join(t["lineitem"], t["supplier"], [("l_suppkey", "s_suppkey")], "inner", conf)
     out.append(
         section(
-            "skew_join (fragment-replicate, exact hot-key map, shuffle_hash hint)",
+            "skew_join (hot/cold split, exact hot-key map)",
             plan_string(sj, "simple"),
-            "Two `BroadcastExchange`s attach the hot-key table to each side; two\n"
-            "`Generate explode` nodes replicate across salt buckets; the data\n"
-            "shuffle is a 3-key `ShuffledHashJoin` — hot keys hash across\n"
-            "R_L x R_R partitions. No Python anywhere.",
+            "Broadcast semi/anti joins against the hot-key table split each side;\n"
+            "the cold rows take the plain join and the two halves are unioned.\n"
+            "With broadcasting disabled (as here) the hot pairs are salted: two\n"
+            "`Generate explode` nodes replicate across salt buckets and hot keys\n"
+            "hash across R_L x R_R partitions. No Python anywhere.",
         )
     )
 

@@ -68,15 +68,13 @@ def main() -> None:
     record("plain_join", left.join(right.hint("shuffle_hash"), "k"))
 
     # 2) skew_join exact hot-key map (AQE still off → isolate our effect)
-    conf = SkewJoinConf(
-        replication_factor=0.001, hot_threshold=1000, join_hint="shuffle_hash"
-    )
+    conf = SkewJoinConf(replication_factor=0.001, hot_threshold=1000)
     record("skew_join_exact", skew_join(left, right, "k", "inner", conf))
 
     # 3) skew_join CMS estimator
     conf_cms = SkewJoinConf(
         replication_factor=0.001, hot_threshold=1000, estimator="cms",
-        sample_fraction=0.02, join_hint="shuffle_hash",
+        sample_fraction=0.02,
     )
     record("skew_join_cms", skew_join(left, right, "k", "inner", conf_cms))
 

@@ -51,7 +51,6 @@ def main() -> None:
                 hot_threshold=1000,
                 estimator=est,
                 sample_fraction=0.02,
-                join_hint="shuffle_hash",
             )
             got = fingerprint(skew_join(left, right, "k", how, conf))
             exp = fingerprint(
