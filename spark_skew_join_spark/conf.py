@@ -42,9 +42,10 @@ class SkewType(enum.Enum):
 # routes keys to the hot or cold half of the join, and unmatched rows come
 # from the data.
 #   exact  — distributed groupBy().count() capped at max_hot_keys (default).
-#   cms    — Count-Min Sketch built via mapPartitions + treeReduce (scales
-#            when even the hot-key histogram is too big; biased upward by
-#            eps*N, so a key may be called hot or over-fragmented).
+#   cms    — Count-Min Sketch built by Spark's count_min_sketch aggregate,
+#            both sides in one JVM job with no Python worker (scales when
+#            even the hot-key histogram is too big; biased upward by eps*N,
+#            so a key may be called hot or over-fragmented).
 #   sample — exact counts over a Bernoulli sample, scaled up (cheapest
 #            pre-pass for very large inputs).
 ESTIMATORS = ("exact", "cms", "sample")

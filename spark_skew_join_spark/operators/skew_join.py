@@ -47,6 +47,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..conf import SkewJoinConf
@@ -143,46 +144,51 @@ def _hot_key_rows(
 def _hot_key_rows_cms(
     left: DataFrame, right: DataFrame, keys: Sequence[str], conf: SkewJoinConf
 ) -> list[tuple]:
-    """CMS estimator: sketch both sides (mapPartitions + treeReduce), find
-    hot-key *candidates* from a Bernoulli sample (a key with freq >= thr
-    appears in a frac-sample w.p. 1-(1-frac)^thr ≈ 1), then look their
-    frequencies up in the sketches driver-side. Nothing bigger than the
-    83 KB sketches and the sampled key list ever reaches the driver."""
-    from ..sketch.cms import cms_from_dataframe
+    """CMS estimator: ONE Spark aggregate over the union of both sides'
+    key hashes builds two conditional ``count_min_sketch``es (each side's
+    hashes, the other side's nulled out); hot-key *candidates* come from a
+    Bernoulli sample (a key with freq >= thr appears in a frac-sample
+    w.p. 1-(1-frac)^thr ≈ 1) together with their Spark-computed hash, and
+    all candidates are estimated in one vectorized driver-side lookup.
+    No Python worker runs, and keys are never re-stringified in Python, so
+    booleans, doubles and timestamps hash exactly as Spark cast them.
+    Nothing bigger than the two sketches and the sampled key list ever
+    reaches the driver."""
+    from ..sketch.cms import CountMinSketch, count_min_sketch_agg, key_hash
 
-    cms_l = cms_from_dataframe(
-        left, list(keys), conf.cms_eps, conf.cms_delta, conf.cms_seed
-    )
-    cms_r = cms_from_dataframe(
-        right, list(keys), conf.cms_eps, conf.cms_delta, conf.cms_seed
-    )
-    frac = conf.sample_fraction
     aliases = [f"__k{i}" for i in range(len(keys))]
-
-    def sample_keys(df: DataFrame) -> DataFrame:
-        out = df.sample(fraction=frac, seed=conf.cms_seed).select(
-            *[F.col(k).alias(a) for k, a in zip(keys, aliases)]
+    both = (
+        left.select(*keys, F.lit(True).alias("__l"))
+        .unionByName(right.select(*keys, F.lit(False).alias("__l")))
+        .select(
+            *[F.col(k).alias(a) for k, a in zip(keys, aliases)],
+            key_hash(list(keys)).alias("__h"),
+            "__l",
         )
-        for a in aliases:
-            out = out.where(F.col(a).isNotNull())
-        return out.distinct()
+        .where(F.col("__h").isNotNull())
+    )
 
+    def side_sketch(is_side):
+        h = F.when(is_side, F.col("__h"))  # the aggregate skips the nulls
+        return count_min_sketch_agg(h, conf.cms_eps, conf.cms_delta, conf.cms_seed)
+
+    blobs = both.agg(side_sketch(F.col("__l")), side_sketch(~F.col("__l"))).first()
+    cms_l, cms_r = (CountMinSketch.from_spark(bytes(b)) for b in blobs)
     candidates = (
-        sample_keys(left)
-        .unionByName(sample_keys(right))
+        both.sample(fraction=conf.sample_fraction, seed=conf.cms_seed)
+        .select(*aliases, "__h")
         .distinct()
         .limit(conf.max_hot_keys * 4)
         .collect()
     )
-    sep = "\x00"
+    hashes = np.array([r["__h"] for r in candidates], dtype=np.int64)
+    est_l, est_r = cms_l.estimate_hashed(hashes), cms_r.estimate_hashed(hashes)
     thr = conf.effective_hot_threshold
-    out = []
-    for r in candidates:
-        key_vals = tuple(r[a] for a in aliases)
-        composite = sep.join(str(v) for v in key_vals)
-        cl, cr = cms_l.estimate(composite), cms_r.estimate(composite)
-        if cl >= thr or cr >= thr:
-            out.append(key_vals + (cl, cr))
+    out = [
+        tuple(r[a] for a in aliases) + (int(cl), int(cr))
+        for r, cl, cr in zip(candidates, est_l, est_r)
+        if cl >= thr or cr >= thr
+    ]
     out.sort(key=lambda t: -max(t[-2], t[-1]))
     return out[: conf.max_hot_keys]
 

@@ -12,9 +12,9 @@ that matters at p=14 below ~2.5·m): registers = max leading-zero rank
 per bucket; estimate = α·m²/Σ2^(-M); linear counting when the raw
 estimate is small and zero registers remain.
 
-Spark integration mirrors cms_from_dataframe: column-pruned scan → JVM
-``xxhash64`` (codegen) → Arrow batches → numpy per-partition registers →
-one combine stage → driver fold.  Python only ever sees 8-byte hashes
+Spark integration: column-pruned scan → JVM ``xxhash64`` (codegen) →
+Arrow batches → numpy per-partition registers → one combine stage →
+driver fold.  Python only ever sees 8-byte hashes
 and 16 KiB register arrays.  (`F.approx_count_distinct` is the built-in
 equivalent; this exists for sketch REUSE — persist, merge across days,
 intersect via inclusion-exclusion — which the built-in aggregate cannot
@@ -128,9 +128,9 @@ def hll_from_dataframe(df, key_cols: list[str], p: int = 14,
                        combine_partitions: int = 8,
                        hash_fn: str = "xxhash64") -> HyperLogLog:
     """Distributed HLL over the tuple of ``key_cols`` (NULL tuples
-    skipped, matching COUNT(DISTINCT) semantics). Same two-level
-    mapInPandas shape as cms_from_dataframe. ``hash_fn="md5"`` builds
-    the 60-bit SQL-replayable variant."""
+    skipped, matching COUNT(DISTINCT) semantics), built by a two-level
+    mapInPandas (per partition, then a combine stage). ``hash_fn="md5"``
+    builds the 60-bit SQL-replayable variant."""
     from pyspark.sql import functions as F
 
     from .theta import _hash_col

@@ -359,9 +359,9 @@ def kll_compat_by_group(df, group_col: str, key_col: str, value_col: str,
 
 def kll_from_dataframe(df, value_col: str, k: int = 200, seed: int = 1,
                        combine_partitions: int = 8) -> KLL:
-    """Distributed KLL over a numeric column (NULLs skipped).  Same
-    two-level mapInPandas shape as cms_from_dataframe: per-partition
-    sketches → bounded combine stage → driver fold; only ~3k-float64
+    """Distributed KLL over a numeric column (NULLs skipped).  Two-level
+    mapInPandas build: per-partition sketches → bounded combine stage →
+    driver fold; only ~3k-float64
     buffers cross the Python boundary."""
     from pyspark.sql import functions as F
 

@@ -217,7 +217,8 @@ def streaming_hot_keys(
 
     Keys are canonicalized and hashed JVM-side with the SAME
     ``spark_key_expr``/xxhash64 path as the batch builder, sharded by
-    ``pmod(hash, n_shards)`` (each key always lands on one shard), and
+    ``pmod(hash, n_shards)`` (each key always lands on one shard; rows
+    with a null key column are skipped, as in the batch builder), and
     each shard folds ONE CMS + a bounded hot-candidate map as grouped
     state.  A key enters the hot map when a trigger sees it and its
     accumulated CMS estimate crosses ``hot_threshold`` (estimates only
@@ -234,13 +235,13 @@ def streaming_hot_keys(
     ``max_hot_keys`` candidates — independent of stream length."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..sketch.cms import CountMinSketch, spark_key_expr
+    from ..sketch.cms import CountMinSketch, key_hash, spark_key_expr
 
     hashed = events.select(
-        spark_key_expr(key_cols).alias("__k"),
-    ).where(F.col("__k").isNotNull()).select(
-        "__k", F.xxhash64(F.col("__k")).alias("__h")
-    ).withColumn("__shard", F.pmod(F.col("__h"), F.lit(n_shards)).cast("int"))
+        spark_key_expr(key_cols).alias("__k"), key_hash(key_cols).alias("__h")
+    ).where(F.col("__h").isNotNull()).withColumn(
+        "__shard", F.pmod(F.col("__h"), F.lit(n_shards)).cast("int")
+    )
 
     out_schema = (
         "shard int, key string, est_freq bigint, n_events bigint, "
@@ -256,16 +257,16 @@ def streaming_hot_keys(
             hot = pickle.loads(hot_blob)
         else:
             n, cms, hot = 0, CountMinSketch(eps, delta, seed), {}
-        seen: dict[str, int] = {}
+        seen = []
         for pdf in pdfs:
             n += len(pdf)
             cms.add_hashed(pdf["__h"].to_numpy())
-            for k_str, h in zip(pdf["__k"], pdf["__h"]):
-                seen[k_str] = int(h)
-        for k_str, h in seen.items():
-            est = cms.estimate_hashed(h)
-            if est >= hot_threshold:
-                hot[k_str] = est
+            seen.append(pdf[["__k", "__h"]].drop_duplicates("__k"))
+        if seen:
+            trig = pd.concat(seen).drop_duplicates("__k")
+            est = cms.estimate_hashed(trig["__h"].to_numpy())
+            is_hot = est >= hot_threshold
+            hot.update(zip(trig["__k"][is_hot], est[is_hot].tolist()))
         if len(hot) > max_hot_keys:
             hot = dict(
                 sorted(hot.items(), key=lambda kv: (-kv[1], kv[0]))[:max_hot_keys]

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from spark_skew_join_spark.sketch.cms import CountMinSketch, cms_from_dataframe
 
 
@@ -107,3 +109,49 @@ def test_estimate_hashed_matches_estimate(spark):
     }
     for k in keys:
         assert cms.estimate_hashed(hashes[k]) == cms.estimate(k) >= 3
+
+
+@pytest.mark.parametrize(
+    "eps, delta, seed",
+    [(0.005, 1e-8, 1), (0.01, 1e-3, 7), (0.3, 0.05, -3), (0.0005, 1e-6, 2**31 - 1)],
+)
+def test_layout_matches_spark_aggregate(spark, eps, delta, seed):
+    """A Python-built table equals Spark's ``count_min_sketch`` aggregate
+    over the same int64 items bit for bit, and ``estimate_hashed`` equals
+    the JVM's ``CountMinSketch.estimateCount`` on the same bytes."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from spark_skew_join_spark.sketch.cms import count_min_sketch_agg
+
+    rng = np.random.default_rng(seed & 0xFFFF)
+    edges = np.array([0, -1, 2**62, -(2**62), 2**63 - 1, -(2**63)], dtype=np.int64)
+    items = np.concatenate([
+        edges,
+        rng.integers(-(2**63), 2**63 - 1, 2_000, dtype=np.int64),
+        np.repeat(edges[:4], 50),
+    ])
+    df = spark.createDataFrame([(int(h),) for h in items], "h bigint")
+    blob = bytes(df.agg(count_min_sketch_agg(F.col("h"), eps, delta, seed)).first()[0])
+
+    local = CountMinSketch(eps, delta, seed)
+    local.add_hashed(items)
+    built = CountMinSketch.from_spark(blob)
+    assert (built.depth, built.width) == (local.depth, local.width)
+    assert np.array_equal(built.hash_a, local.hash_a)
+    assert np.array_equal(built.table, local.table)
+    assert built.total == local.total == len(items)
+
+    jvm_cms = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
+        bytearray(blob)
+    )
+    probes = np.concatenate([edges, items[6:100], np.array([12345], dtype=np.int64)])
+    est = local.estimate_hashed(probes)
+    assert [jvm_cms.estimateCount(int(h)) for h in probes] == est.tolist()
+    assert local.estimate_hashed(int(probes[0])) == est[0]
+
+
+def test_default_sizing():
+    """Width stays ⌈e/ε⌉; depth is Spark's ⌈log2(1/δ)⌉."""
+    cms = CountMinSketch()
+    assert (cms.depth, cms.width) == (27, 544)

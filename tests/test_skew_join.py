@@ -187,6 +187,48 @@ def test_estimator_sample(spark, zipf_left, uniform_right):
     assert_df_equal(actual, plain(zipf_left, uniform_right, ["k"], "inner"))
 
 
+@pytest.mark.parametrize(
+    "dtype, freqs",
+    [
+        ("boolean", {True: 3_000, False: 1_500}),
+        # Python's str() and Spark's CAST(x AS STRING) differ on these
+        ("double", {1e20: 3_000, 1.5e-7: 1_500, 0.25: 700}),
+    ],
+)
+def test_cms_hot_keys_match_exact_on_non_string_keys(spark, dtype, freqs):
+    """The CMS estimator finds the same hot keys with the same fragment
+    counts as the exact one on boolean and double keys, whose Spark
+    string form differs from Python's, and the join stays exact."""
+    from dataclasses import replace
+
+    from spark_skew_join_spark.operators.skew_join import _hot_key_rows
+
+    left = spark.createDataFrame(
+        [(k, i) for k, n in freqs.items() for i in range(n)],
+        f"k {dtype}, v bigint",
+    )
+    right = spark.createDataFrame(
+        [(k, f"r{k}") for k in freqs] * 2, f"k {dtype}, tag string"
+    )
+    exact = SkewJoinConf(
+        replication_factor=0.002, hot_threshold=100, num_partitions=8
+    )
+    cap = exact.num_partitions
+
+    def fragments(conf):
+        return {
+            r[0]: (conf.replication(r[1], cap), conf.replication(r[2], cap))
+            for r in _hot_key_rows(left, right, ["k"], conf, cap)
+        }
+
+    cms = replace(exact, estimator="cms")
+    want = fragments(exact)
+    assert set(want) == set(freqs)
+    assert fragments(cms) == want
+    actual = skew_join(left, right, "k", "inner", cms)
+    assert_df_equal(actual, plain(left, right, ["k"], "inner"))
+
+
 @contextmanager
 def _spark_conf(spark, settings: dict):
     """Set Spark confs for the block, then restore the old values."""
