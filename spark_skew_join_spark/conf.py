@@ -13,6 +13,8 @@ import enum
 import math
 from dataclasses import dataclass
 
+import numpy as np
+
 
 class SkewType(enum.Enum):
     """Which side(s) of the join are skewed.
@@ -111,7 +113,10 @@ class SkewJoinConf:
         # int(freq * rf) >= 2  ⇔  freq >= 2 / rf
         return max(2, math.ceil(2.0 / self.replication_factor))
 
-    def replication(self, freq: int, num_partitions: int) -> int:
+    def replication(self, freq: int | np.ndarray, num_partitions: int) -> int | np.ndarray:
         """clamp(int(freq * replication_factor), 1, num_partitions) — the
-        reference's fragment-count formula (``dfimplicits.scala:76``)."""
-        return max(1, min(int(freq * self.replication_factor), num_partitions))
+        reference's fragment-count formula (``dfimplicits.scala:76``). An
+        int for a scalar ``freq``, an int64 array for an array of them."""
+        r = np.trunc(np.multiply(freq, self.replication_factor))
+        r = np.maximum(1, np.minimum(r, num_partitions)).astype(np.int64)
+        return int(r) if r.ndim == 0 else r

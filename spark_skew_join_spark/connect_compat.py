@@ -53,9 +53,12 @@ CONNECT_ESCAPES: dict[str, tuple[str, str]] = {
     ),
     "spark_skew_join_spark/operators/skew_join.py": (
         "graceful-fallback",
-        "the replication cap reads spark.sql.shuffle.partitions first "
-        "(always readable on Connect); sparkContext.defaultParallelism "
-        "is only the last-resort branch",
+        "uses only APIs Connect has: the pre-pass fetches with toArrow, "
+        "the hot-key table is createDataFrame(Arrow table), the fit test "
+        "reads spark.sql.autoBroadcastJoinThreshold through spark.conf and "
+        "the row width from df.schema; the replication cap reads "
+        "spark.sql.shuffle.partitions, with sparkContext."
+        "defaultParallelism only as the last-resort branch",
     ),
     "spark_skew_join_spark/sketch/bloom.py": (
         "loud-error",

@@ -5,9 +5,10 @@ as pure DataFrame composition: the fragment-replicate join of DDIA ch.10
 "skewed joins" (reference README.md:5-13).
 
 1. a *pre-pass* estimates per-key frequency on both sides and keeps the
-   hot keys, gated by ``SkewType``;
+   hot keys, gated by ``SkewType``; its result comes back as Arrow and
+   becomes the hot-key table ``(keys, R_L, R_R)``, a local relation;
 2. each side splits into hot rows and cold rows by a broadcast semi-join
-   and anti-join against the hot-key set (null keys never match, so they
+   and anti-join against the hot-key table (null keys never match, so they
    land in the cold half);
 3. the cold halves run the plain ``left.join(right, on, how)``;
 4. the hot halves join by broadcasting the smaller side's hot fragment —
@@ -33,21 +34,30 @@ Deliberate departures from the reference, each documented in SURVEY §4:
 * **No per-row UDFs**: the reference's four scalar UDFs
   (``dfimplicits.scala:71-107``) become broadcast joins against a tiny
   hot-key table plus ``floor(rand()*R)`` / ``explode(sequence())`` —
-  everything stays inside whole-stage codegen.
+  everything stays inside whole-stage codegen, and no Python worker runs
+  when the join executes: the hot-key table is built on the driver from
+  the pre-pass's Arrow result, not from Python rows.
 * **Exact for every estimator** (quirk Q4): CMS and sampling estimators
   only choose which keys take the hot path, never which rows are kept.
 
 Scale design: the pre-pass is ONE job over just the key columns of both
-sides (column-pruned scans, map-side partial aggregation, a collect of at
-most ``max_hot_keys`` rows); AQE skew-join remains available as the
-built-in alternative (``plans.aqe``).
+sides (column-pruned scans, map-side partial aggregation, an Arrow fetch
+of at most ``max_hot_keys`` rows). The fragment counts are numpy over that
+fetch, and the hot-key table goes back to Spark as a ``LocalRelation``
+with an explicit schema, so the broadcast needs no RDD and no Python
+worker. The fit test reads the broadcast threshold through
+``spark.conf`` and the row width from the Python schema, so the operator
+needs no JVM bridge and runs under Spark Connect. AQE skew-join remains
+available as the built-in alternative (``plans.aqe``).
 """
 
 from __future__ import annotations
 
+import re
 from typing import Sequence
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..conf import SkewJoinConf
@@ -86,16 +96,60 @@ def _num_partitions(df: DataFrame, conf: SkewJoinConf) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+_BYTE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _byte_string(value: str) -> int:
+    """A Spark byte-size config value (``-1``, ``1024``, ``10MB``,
+    ``10485760b``) in bytes: binary units, bytes when unitless, as Spark's
+    ``bytesConf`` reads it. Read through ``spark.conf`` instead of the
+    JVM's parsed value, so it works under Spark Connect too."""
+    m = re.fullmatch(r"(-?)(\d+)([kmgtp]?)b?", value.strip().lower())
+    if not m:
+        raise ValueError(f"not a Spark byte string: {value!r}")
+    sign, digits, unit = m.groups()
+    return (-1 if sign else 1) * (int(digits) << _BYTE_SHIFT[unit])
+
+
+_DEFAULT_SIZE = {
+    T.NullType: 1, T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2,
+    T.IntegerType: 4, T.LongType: 8, T.FloatType: 4, T.DoubleType: 8,
+    T.DateType: 4, T.TimestampType: 8, T.TimestampNTZType: 8, T.TimeType: 8,
+    T.YearMonthIntervalType: 4, T.DayTimeIntervalType: 8,
+    T.CalendarIntervalType: 16, T.StringType: 20, T.BinaryType: 100,
+    T.VariantType: 2048, T.GeometryType: 2048, T.GeographyType: 2048,
+}
+
+
+def _default_size(dt: T.DataType) -> int:
+    """Spark's ``DataType.defaultSize``: the per-row width estimate its
+    planner compares with the broadcast threshold, computed from the
+    Python schema so no JVM call is needed."""
+    if isinstance(dt, T.StructType):
+        return sum(_default_size(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _default_size(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _default_size(dt.keyType) + _default_size(dt.valueType)
+    if isinstance(dt, T.DecimalType):
+        return 8 if dt.precision <= 18 else 16
+    if isinstance(dt, (T.CharType, T.VarcharType)):
+        return dt.length
+    if isinstance(dt, T.UserDefinedType):
+        return _default_size(dt.sqlType())
+    return _DEFAULT_SIZE[type(dt)]
+
+
 def _hot_key_rows(
     left: DataFrame,
     right: DataFrame,
     keys: Sequence[str],
     conf: SkewJoinConf,
-    cap: int,
-) -> list[tuple]:
+) -> tuple[pa.Table, np.ndarray, np.ndarray]:
     """One combined frequency job over both inputs (the reference runs two —
-    quirk Q6); returns rows (k0..kn, freq_left, freq_right) for keys hot on
-    either side, top-``max_hot_keys`` by max-side frequency."""
+    quirk Q6) for the keys hot on either side, top-``max_hot_keys`` by
+    max-side frequency: an Arrow table of the key columns ``__k0..__kn``
+    and two int64 arrays, the left and right frequency of each key."""
     if conf.estimator == "cms":
         return _hot_key_rows_cms(left, right, keys, conf)
 
@@ -129,31 +183,28 @@ def _hot_key_rows(
     # null keys never equi-match — keep them out of the broadcast table
     for a in aliases:
         counts = counts.where(F.col(a).isNotNull())
-    rows = (
+    hot = (
         counts.orderBy(F.greatest("__cl", "__cr").desc(), *aliases)
         .limit(conf.max_hot_keys)
-        .collect()
+        .toArrow()
     )
-    return [
-        tuple(r[a] for a in aliases)
-        + (int(r["__cl"] * scale), int(r["__cr"] * scale))
-        for r in rows
-    ]
+    cl, cr = ((hot[c].to_numpy() * scale).astype(np.int64) for c in ("__cl", "__cr"))
+    return hot.select(aliases), cl, cr
 
 
 def _hot_key_rows_cms(
     left: DataFrame, right: DataFrame, keys: Sequence[str], conf: SkewJoinConf
-) -> list[tuple]:
+) -> tuple[pa.Table, np.ndarray, np.ndarray]:
     """CMS estimator: ONE Spark aggregate over the union of both sides'
     key hashes builds two conditional ``count_min_sketch``es (each side's
     hashes, the other side's nulled out); hot-key *candidates* come from a
     Bernoulli sample (a key with freq >= thr appears in a frac-sample
-    w.p. 1-(1-frac)^thr ≈ 1) together with their Spark-computed hash, and
-    all candidates are estimated in one vectorized driver-side lookup.
-    No Python worker runs, and keys are never re-stringified in Python, so
-    booleans, doubles and timestamps hash exactly as Spark cast them.
-    Nothing bigger than the two sketches and the sampled key list ever
-    reaches the driver."""
+    w.p. 1-(1-frac)^thr ≈ 1) fetched as Arrow together with their
+    Spark-computed hash, and all candidates are estimated in one
+    vectorized driver-side lookup. No Python worker runs, and keys are
+    never re-stringified in Python, so booleans, doubles and timestamps
+    hash exactly as Spark cast them. Nothing bigger than the two sketches
+    and the sampled key list ever reaches the driver."""
     from ..sketch.cms import CountMinSketch, count_min_sketch_agg, key_hash
 
     aliases = [f"__k{i}" for i in range(len(keys))]
@@ -179,18 +230,14 @@ def _hot_key_rows_cms(
         .select(*aliases, "__h")
         .distinct()
         .limit(conf.max_hot_keys * 4)
-        .collect()
+        .toArrow()
     )
-    hashes = np.array([r["__h"] for r in candidates], dtype=np.int64)
+    hashes = candidates["__h"].to_numpy()
     est_l, est_r = cms_l.estimate_hashed(hashes), cms_r.estimate_hashed(hashes)
-    thr = conf.effective_hot_threshold
-    out = [
-        tuple(r[a] for a in aliases) + (int(cl), int(cr))
-        for r, cl, cr in zip(candidates, est_l, est_r)
-        if cl >= thr or cr >= thr
-    ]
-    out.sort(key=lambda t: -max(t[-2], t[-1]))
-    return out[: conf.max_hot_keys]
+    top = np.maximum(est_l, est_r)
+    hot = np.flatnonzero(top >= conf.effective_hot_threshold)
+    hot = hot[np.argsort(-top[hot], kind="stable")][: conf.max_hot_keys]
+    return candidates.select(aliases).take(hot), est_l[hot], est_r[hot]
 
 
 def skew_join(
@@ -250,6 +297,35 @@ def skew_join(
 _COMPAT_KEY = "_join_key_nbRcsSD1FW"  # the reference's literal helper name
 
 
+def _hot_key_table(
+    left: DataFrame, right: DataFrame, keys: list[str], conf: SkewJoinConf
+) -> tuple[DataFrame, int, int] | None:
+    """The broadcast hot-key table ``(keys..., R_L, R_R)``, a LocalRelation
+    built from the pre-pass's Arrow result, and the number of hot rows on
+    each side; None when no key fragments. The explicit schema keeps every
+    key exact: without it a TIMESTAMP_NTZ wall time that does not exist in
+    the session time zone (a DST gap) fails to convert."""
+    # fragment counts per hot key, gated by skew side (SkewType.scala:14-28)
+    cap = _num_partitions(left, conf)
+    hot, cl, cr = _hot_key_rows(left, right, keys, conf)
+    rl = conf.replication(cl, cap) if conf.skew_type.left else np.ones_like(cl)
+    rr = conf.replication(cr, cap) if conf.skew_type.right else np.ones_like(cr)
+    is_hot = (rl > 1) | (rr > 1)
+    if not is_hot.any():
+        return None
+
+    repl = [T.StructField(c, T.IntegerType(), False) for c in (_RL, _RR)]
+    schema = T.StructType(list(left.select(*keys).schema) + repl)
+    hot = (
+        hot.filter(pa.array(is_hot))
+        .append_column(_RL, pa.array(rl[is_hot], pa.int32()))
+        .append_column(_RR, pa.array(rr[is_hot], pa.int32()))
+        .rename_columns(schema.names)
+    )
+    hot_df = F.broadcast(left.sparkSession.createDataFrame(hot, schema=schema))
+    return hot_df, int(cl[is_hot].sum()), int(cr[is_hot].sum())
+
+
 def _split_join(
     left: DataFrame,
     right: DataFrame,
@@ -258,8 +334,6 @@ def _split_join(
     conf: SkewJoinConf,
 ) -> DataFrame:
     spark = left.sparkSession
-    cap = _num_partitions(left, conf)
-
     right_rest = [c for c in right.columns if c not in keys]
     dup = set(left.columns) & set(right_rest)
     if dup:
@@ -269,23 +343,11 @@ def _split_join(
         )
     out_cols = list(left.columns) + right_rest
 
-    # fragment counts per hot key, gated by skew side (SkewType.scala:14-28)
-    hot, rows_l, rows_r = [], 0, 0
-    for t in _hot_key_rows(left, right, keys, conf, cap):
-        kv, cl, cr = t[:-2], t[-2], t[-1]
-        rl = conf.replication(cl, cap) if conf.skew_type.left else 1
-        rr = conf.replication(cr, cap) if conf.skew_type.right else 1
-        if rl > 1 or rr > 1:
-            hot.append(kv + (rl, rr))
-            rows_l, rows_r = rows_l + cl, rows_r + cr
-
-    if not hot:
+    hot = _hot_key_table(left, right, keys, conf)
+    if hot is None:
         # no hot keys → the split degenerates to the plain join
         return left.join(right, on=keys, how=how).select(*out_cols)
-
-    repl = [T.StructField(c, T.IntegerType(), False) for c in (_RL, _RR)]
-    hot_schema = T.StructType(list(left.select(*keys).schema) + repl)
-    hot_df = F.broadcast(spark.createDataFrame(hot, schema=hot_schema))
+    hot_df, rows_l, rows_r = hot
     lh, rh = (df.join(hot_df, on=keys, how="left_semi") for df in (left, right))
     lc, rc = (df.join(hot_df, on=keys, how="left_anti") for df in (left, right))
 
@@ -294,9 +356,9 @@ def _split_join(
 
     # Fit test: pre-pass row counts × schema row width against Spark's own
     # broadcast threshold (-1 disables broadcasting, so nothing fits).
-    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    bytes_l = rows_l * left._jdf.schema().defaultSize()
-    bytes_r = rows_r * right._jdf.schema().defaultSize()
+    limit = _byte_string(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    bytes_l = rows_l * _default_size(left.schema)
+    bytes_r = rows_r * _default_size(right.schema)
     keep_l, keep_r = how in _KEEP_LEFT, how in _KEEP_RIGHT
     if how in _SEMI_ANTI:
         hot_half = [lh.join(keys_of(rh), on=keys, how=how)]

@@ -7,7 +7,9 @@ skew sides, estimators, and the FIXTURES.md §B edge cases.
 
 from __future__ import annotations
 
+import datetime as dt
 from contextlib import contextmanager
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -216,9 +218,10 @@ def test_cms_hot_keys_match_exact_on_non_string_keys(spark, dtype, freqs):
     cap = exact.num_partitions
 
     def fragments(conf):
+        hot, cl, cr = _hot_key_rows(left, right, ["k"], conf)
         return {
-            r[0]: (conf.replication(r[1], cap), conf.replication(r[2], cap))
-            for r in _hot_key_rows(left, right, ["k"], conf, cap)
+            k: (conf.replication(l, cap), conf.replication(r, cap))
+            for k, l, r in zip(hot.column(0).to_pylist(), cl, cr)
         }
 
     cms = replace(exact, estimator="cms")
@@ -295,6 +298,142 @@ def test_key_hot_on_both_sides(spark, how, broadcast_limit):
                 plan = actual._jdf.queryExecution().executedPlan().toString()
                 assert "Generate explode" in plan, "hot key did not take the salted path"
             assert_df_equal(actual, plain(left, right, ["k"], how))
+
+
+def test_replication_vectorized_matches_scalar_formula():
+    """``SkewJoinConf.replication`` over an array equals the reference's
+    per-key formula ``clamp(int(freq * rf), 1, P)`` evaluated in Python."""
+    import numpy as np
+
+    freqs = [0, 1, 9, 10, 19, 20, 99, 1_234, 10**9, 2**53]
+    for rf, cap in ((0.1, 8), (1e-3, 200), (0.37, 1), (2.5, 0)):
+        conf = SkewJoinConf(replication_factor=rf)
+        want = [max(1, min(int(f * rf), cap)) for f in freqs]
+        got = conf.replication(np.array(freqs, dtype=np.int64), cap)
+        assert got.dtype == np.int64 and got.tolist() == want
+        assert [conf.replication(f, cap) for f in freqs] == want
+
+
+@pytest.mark.parametrize("broadcast_limit", ["10MB", "-1"], ids=["broadcast", "salted"])
+@pytest.mark.parametrize("estimator", ["exact", "cms"])
+def test_hot_key_table_is_a_local_relation(spark, estimator, broadcast_limit):
+    """The hot-key table is built from the pre-pass's Arrow result, so the
+    executed plan scans it as a LocalTableScan: no RDD built from Python
+    rows and no Python evaluation anywhere in the join. The inputs come
+    from ``spark.range`` so that any RDD scan would be the hot table's."""
+    left = spark.range(4_000).select(
+        F.when(F.col("id") % 2 == 0, 1).otherwise(F.col("id")).alias("k"),
+        F.col("id").alias("v"),
+    )
+    right = spark.range(1, 4_000).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("w")
+    )
+    conf = SkewJoinConf(replication_factor=0.1, hot_threshold=20, estimator=estimator)
+    with _spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": broadcast_limit}):
+        actual = skew_join(left, right, "k", "inner", conf)
+        rows = actual.collect()
+        plan = actual._jdf.queryExecution().executedPlan().toString()
+    assert len(rows) == left.join(right, "k").count()
+    assert "LocalTableScan" in plan, plan
+    for node in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert node not in plan, f"{node} in the skew_join plan:\n{plan}"
+    assert ("Generate explode" in plan) == (broadcast_limit == "-1")
+
+
+_DST_GAP = dt.datetime(2021, 3, 14, 2, 30)  # no such wall time in Los Angeles
+
+# key columns' DDL, then one tuple per key value: hot on the left, hot on
+# the right, then a cold one (booleans have no third value)
+_KEY_TYPES = {
+    "bigint": ("k bigint", [(1,), (-(2**62),), (0,)]),
+    "int": ("k int", [(7,), (-1,), (2**31 - 1,)]),
+    "string": ("k string", [("hot",), ("",), ("ü ß",)]),
+    "boolean": ("k boolean", [(True,), (False,)]),
+    "double": ("k double", [(1e20,), (1.5e-7,), (-0.25,)]),
+    "decimal": ("k decimal(12,3)", [
+        (Decimal("123456789.123"),), (Decimal("-0.001"),), (Decimal("1.500"),)]),
+    "date": ("k date", [
+        (dt.date(2021, 3, 14),), (dt.date(1970, 1, 1),), (dt.date(1900, 1, 1),)]),
+    "timestamp": ("k timestamp", [
+        (dt.datetime(2021, 3, 14, 10, 30),), (dt.datetime(2021, 11, 7, 8, 30),),
+        (dt.datetime(1969, 12, 31, 23, 59, 59, 999999),)]),
+    "timestamp_ntz": ("k timestamp_ntz", [
+        (dt.datetime(2021, 11, 7, 1, 30),), (dt.datetime(2000, 1, 1),),
+        (dt.datetime(1969, 12, 31, 23, 59, 59, 999999),)]),
+    "timestamp_ntz_dst_gap": ("k timestamp_ntz", [
+        (_DST_GAP,), (_DST_GAP + dt.timedelta(minutes=15),),
+        (dt.datetime(2021, 3, 14, 3, 0),)]),
+    "binary": ("k binary", [(b"\x00\x01",), (b"hot",), (b"",)]),
+    "array": ("k array<int>", [([1, 2],), ([3],), ([],)]),
+    "struct": ("k struct<a:string,b:int>", [(("x", 1),), (("y", 2),), (("x", 2),)]),
+    "composite": ("k1 string, k2 int", [("a", 1), ("a", 2), ("b", 1)]),
+}
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+@pytest.mark.parametrize("key_type", list(_KEY_TYPES))
+def test_hot_keys_round_trip_every_key_type(spark, key_type, tz):
+    """Every hot key survives the Arrow round trip into the hot-key table
+    under a UTC and a non-UTC session time zone: semi-joined back onto the
+    inputs, the table selects exactly the hot keys' rows (so no hot key
+    silently turns cold), and ``skew_join`` equals the plain join. The
+    first key is hot on the left, the second on the right."""
+    from spark_skew_join_spark.operators.skew_join import _hot_key_table
+
+    ddl, values = _KEY_TYPES[key_type]
+    keys = [c.split()[0] for c in ddl.split(", ")]
+    hot_l, hot_r, *cold = values
+    nulls = (None,) * len(keys)
+    left_rows = [hot_l + (f"l{i}",) for i in range(40)] + [hot_r + ("l",)]
+    right_rows = [hot_l + ("r",)] + [hot_r + (f"r{i}",) for i in range(25)]
+    for v in cold:
+        left_rows.append(v + ("lc",))
+        right_rows.append(v + ("rc",))
+    conf = SkewJoinConf(replication_factor=0.1, hot_threshold=20)
+    with _spark_conf(spark, {"spark.sql.session.timeZone": tz}):
+        left = spark.createDataFrame(left_rows + [nulls + ("ln",)] * 2, f"{ddl}, pl string")
+        right = spark.createDataFrame(right_rows + [nulls + ("rn",)], f"{ddl}, pr string")
+        hot_df, rows_l, rows_r = _hot_key_table(left, right, keys, conf)
+        assert (hot_df.count(), rows_l, rows_r) == (2, 41, 26)
+        assert left.join(hot_df, on=keys, how="left_semi").count() == 41
+        assert right.join(hot_df, on=keys, how="left_semi").count() == 26
+        actual = skew_join(left, right, keys, "inner", conf)
+        assert_df_equal(actual, plain(left, right, keys, "inner"))
+
+
+def test_default_size_matches_spark(spark):
+    """The fit test's row width, computed from the Python schema, equals
+    the JVM's ``StructType.defaultSize`` for every key type above and for
+    the types Spark sizes specially."""
+    from pyspark.sql import types as T
+
+    from spark_skew_join_spark.operators.skew_join import _default_size
+
+    for ddl, _values in _KEY_TYPES.values():
+        df = spark.createDataFrame([], f"{ddl}, pl string")
+        assert _default_size(df.schema) == df._jdf.schema().defaultSize(), ddl
+    others = [
+        T.ByteType(), T.ShortType(), T.FloatType(), T.NullType(),
+        T.DecimalType(18, 0), T.DecimalType(19, 2), T.DecimalType(38, 10),
+        T.CharType(5), T.VarcharType(7), T.TimeType(6), T.VariantType(),
+        T.CalendarIntervalType(), T.DayTimeIntervalType(), T.YearMonthIntervalType(),
+        T.MapType(T.StringType(), T.LongType()), T.ArrayType(T.DoubleType()),
+    ]
+    from_json = spark._jvm.org.apache.spark.sql.types.DataType.fromJson
+    for t in others:
+        assert _default_size(t) == from_json(t.json()).defaultSize(), t.simpleString()
+
+
+@pytest.mark.parametrize("value", ["-1", "0", "1024", "10MB", "10485760b", "2k", "3g", "-1mb"])
+def test_broadcast_threshold_parsed_like_spark(spark, value):
+    """The broadcast threshold read through ``spark.conf`` (Connect-safe)
+    parses to the byte count Spark's own config reader gives."""
+    from spark_skew_join_spark.operators.skew_join import _byte_string
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    with _spark_conf(spark, {key: value}):
+        jvm = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        assert _byte_string(spark.conf.get(key)) == jvm
 
 
 def test_ambiguous_non_key_columns_rejected(spark):
