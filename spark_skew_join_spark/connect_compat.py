@@ -84,8 +84,8 @@ CONNECT_ESCAPES: dict[str, tuple[str, str]] = {
     ),
     "spark_skew_join_spark/queries.py": (
         "graceful-fallback",
-        "family caches key on id(sparkContext) for classic sessions "
-        "and fall back to id(session) under Connect (_session_key)",
+        "the family memo keys on id(sparkContext) for classic sessions "
+        "and falls back to id(session) under Connect (_session_key)",
     ),
 }
 

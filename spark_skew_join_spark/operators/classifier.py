@@ -290,8 +290,8 @@ def quality_classifier(
     final self-join re-derived hashed_features twice at consumption
     (guide §5 persist-when-reused; §2.4 remove shuffles outright — the
     y/score self-join is gone: both come off the same cached row).
-    Cache ownership sits in the dedup session-cache ledger (bench.py
-    releases per line; tests via clear_band_cache)."""
+    Cache ownership sits in the dedup session-cache ledger (freed by a
+    scoped release_entries or clear_band_cache)."""
     from .dedup import _session_cache
 
     feats = hashed_features(docs, id_col, text_col, n_buckets)

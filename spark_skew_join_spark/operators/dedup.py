@@ -28,8 +28,9 @@ from ..functions.text import fingerprint
 # stats, cap anti-join, both self-join sides, star pairs); without a persist
 # each consumer re-runs the projection/signature shuffle — measured 3.5×
 # slower at sf0.1. The operators cache them here; ``clear_band_cache``
-# (also called by queries.clear_dedup_cache / bench.py) releases the blocks
-# and drops any spill tables.
+# (also called by queries.clear_dedup_cache) releases the blocks and drops
+# any spill tables, and ``cache_snapshot``/``entries_since``/
+# ``release_entries`` release the entries registered within one scope.
 #
 # Cache modes (VERDICT r3 #5 — executor memory is the wrong home for a
 # billion-row band list at 100 TB):
@@ -90,31 +91,18 @@ def _release_df(df: DataFrame) -> None:
         pass
 
 
-_CKPT_LEDGER: list[DataFrame] = []  # ckpt-mode subset of _CACHED_BANDS
-
-
 def register_ckpt(df: DataFrame) -> DataFrame:
     """Register an ALREADY-localCheckpointed frame in the session-cache
     ledger (released via release_entries / clear_band_cache, which
-    unpersist the wrapped RDD). RELEASE IS ONE-WAY: a localCheckpoint's
+    unpersist the wrapped RDD). A checkpoint entry is the ledger entry
+    with ``not df.is_cached``. RELEASE IS ONE-WAY: a localCheckpoint's
     lineage is truncated, so a released frame can never be re-executed
     (ADVICE r14 #1) — callers must fully consume the result before any
     ledger release; tests/test_ckpt_invariant.py pins that no non-EAGER
-    registry query registers a ckpt entry (bench.py's non-eager retry
-    re-runs the same plan after releasing)."""
+    registry query registers a ckpt entry, so a caller may release a
+    lazy query's entries and re-run the same plan."""
     _CACHED_BANDS.append(df)
-    _CKPT_LEDGER.append(df)
     return df
-
-
-def ckpt_snapshot() -> int:
-    """Length of the ckpt-entry ledger — pair with ckpt_entries_since
-    to detect ckpt registrations in a code region."""
-    return len(_CKPT_LEDGER)
-
-
-def ckpt_entries_since(snap: int) -> list:
-    return _CKPT_LEDGER[snap:]
 
 
 def _session_cache(df: DataFrame, mode=True) -> DataFrame:
@@ -156,7 +144,7 @@ def _session_cache(df: DataFrame, mode=True) -> DataFrame:
 def cache_snapshot() -> tuple[int, int]:
     """Current lengths of the band/spill registries — pair with
     ``entries_since`` / ``release_entries`` for scoped release
-    (bench.py's per-line cache hygiene, VERDICT r11 #1a)."""
+    (VERDICT r11 #1a)."""
     return (len(_CACHED_BANDS), len(_SPILL_TABLES))
 
 
@@ -167,37 +155,33 @@ def entries_since(snap: tuple[int, int]) -> tuple[list, list]:
     return list(_CACHED_BANDS[nb:]), list(_SPILL_TABLES[ns:])
 
 
-def release_entries(bands: list, spills: list) -> None:
-    """Unpersist the given band frames and drop the given spill tables,
-    removing them from the registries (identity-based — DataFrame
+def _unregister(bands: list, spills: list) -> None:
+    """Remove the given entries from the registries without releasing
+    them — their new owner releases them (identity-based — DataFrame
     __eq__ builds a Column, so list.remove is unusable here)."""
     band_ids = {id(b) for b in bands}
+    _CACHED_BANDS[:] = [b for b in _CACHED_BANDS if id(b) not in band_ids]
+    spill_ids = {id(s) for s in spills}
+    _SPILL_TABLES[:] = [s for s in _SPILL_TABLES if id(s) not in spill_ids]
+
+
+def release_entries(bands: list, spills: list) -> None:
+    """Unpersist the given band frames and drop the given spill tables,
+    removing them from the registries."""
     for df in bands:
         _release_df(df)
-    _CACHED_BANDS[:] = [b for b in _CACHED_BANDS if id(b) not in band_ids]
-    _CKPT_LEDGER[:] = [b for b in _CKPT_LEDGER if id(b) not in band_ids]
-    spill_ids = {id(s) for s in spills}
     for spark, name in spills:
         try:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
-        except Exception:
+        except Exception:  # session already stopped — nothing to drop
             pass
-    _SPILL_TABLES[:] = [s for s in _SPILL_TABLES if id(s) not in spill_ids]
+    _unregister(bands, spills)
 
 
 def clear_band_cache() -> None:
     """Release every operator-cached band/signature DataFrame — unpersist
     memory blocks and drop spill tables (idempotent)."""
-    for df in _CACHED_BANDS:
-        _release_df(df)
-    _CACHED_BANDS.clear()
-    _CKPT_LEDGER.clear()
-    for spark, name in _SPILL_TABLES:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-        except Exception:  # session already stopped — nothing to drop
-            pass
-    _SPILL_TABLES.clear()
+    release_entries(*entries_since((0, 0)))
 
 
 def exact_dedup(

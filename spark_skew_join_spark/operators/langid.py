@@ -528,8 +528,8 @@ def langid_classifier(
     # consumption (guide §5: persist when reused and recompute is the
     # expensive side; for the planted entry the recompute was a second
     # full tokenize pass inside the same timed line). Ownership moves to
-    # the dedup session-cache ledger so bench.py releases the blocks
-    # when the line completes and tests release via clear_band_cache.
+    # the dedup session-cache ledger, whose scoped release
+    # (release_entries) or clear_band_cache frees the blocks.
     from .dedup import _session_cache
 
     # "ckpt": the relation is consumed by the doc count, every GD

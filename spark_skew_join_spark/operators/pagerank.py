@@ -68,10 +68,10 @@ def pagerank(edges: DataFrame, src_col: str, dst_col: str,
     # verts/trans (and the final surviving rank checkpoint below) are
     # registered in the session-cache ledger (ADVICE r14 #2): a bare
     # localCheckpoint would strand three persisted block-sets per call
-    # to the async ContextCleaner — bench.py releases them when the
-    # line completes, tests via clear_band_cache. Release is one-way
-    # (register_ckpt doc); pagerank callers are EAGER-construction
-    # lines, whose bench retry reconstructs the plan from scratch.
+    # to the async ContextCleaner — the caller's scoped release
+    # (release_entries) or clear_band_cache frees them. Release is
+    # one-way (register_ckpt doc); pagerank callers are
+    # EAGER-construction lines, whose re-run rebuilds the plan.
     if checkpoint_interval is not None:
         verts = register_ckpt(verts.localCheckpoint())
     n = F.broadcast(verts.agg(F.count(F.lit(1)).alias("__n")))
@@ -412,7 +412,7 @@ def label_propagation(
     what the oracle replays; pick even/odd rounds consciously if you
     chase a fixpoint.  Labels spread ONE hop per round from singleton
     initialization, so size ``rounds`` ≳ community diameter + margin:
-    tools/stress_lpa.py on 200 planted 5k-vertex blocks (diameter ~5)
+    a stress run on 200 planted 5k-vertex blocks (diameter ~5)
     recovers 6%/81%/98% of vertices at 4/8/12 rounds.
 
     ``track_convergence=True`` (VERDICT r8 #8) counts, per round, how
@@ -436,7 +436,7 @@ def label_propagation(
     round-10 table) — an LPA round references the previous labels
     ONCE, so the un-checkpointed chain grows linearly and a wider
     cadence only skips 2|V|-row cache write/reads. Measured on the
-    10M-edge power-law stress (tools/sweep_lpa.py, BASELINE.md
+    10M-edge power-law stress (BASELINE.md
     round-11 table): cadence 4 is fastest on both runs (19.0/22.7 s vs
     35.0/33.6 s at cadence 1) with 2.7× less stage input
     (16.0 → 6.0 GB); cadence 8 reads even less but pays optimizer/

@@ -32,7 +32,7 @@ import weakref
 # cannot destroy them itself; callers release them via
 # clear_pq_broadcasts() once results are materialized (the dedup
 # clear_band_cache pattern — ADVICE r8 #4). queries.clear_dedup_cache
-# calls it, so the bench/selfcheck loops never accumulate them.
+# calls it, so registry loops never accumulate them.
 # WEAK references: the scorer closure inside the returned DataFrame is
 # the strong ref, so a library user who drops the DataFrame without
 # ever calling the cleanup still gets normal GC + ContextCleaner

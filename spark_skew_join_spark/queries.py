@@ -15,6 +15,7 @@ Conventions that make cross-engine value-hashing deterministic:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -29,6 +30,7 @@ from .functions.text import (
     token_count,
 )
 from .operators.dedup import (
+    _session_cache,
     exact_dedup,
     minhash_pairs,
     ngram_jaccard_pairs,
@@ -664,15 +666,18 @@ FROM orders
 # LLM-pipeline extensions: dedup / text analysis / similarity / multimodal
 # --------------------------------------------------------------------------
 
-# The fuzzy-dedup family (ngram / minhash / clusters / fuzzy-survivors)
-# shares one plan-equal shingle subtree and one MinHash pair list. Round 2
-# rebuilt + persisted them per query (3× the work, never unpersisted, and
-# bench timings became cache-order-dependent — VERDICT r2 #1/#7). One
-# materialization per (session, sf_dir) is cached here; ``clear_dedup_cache``
-# releases the executor memory (bench.py and the test suite call it).
+# Query families share materialized artifacts: the fuzzy-dedup family one
+# shingle table and MinHash pair list, the exact-substring family one
+# detected-runs table, and so on. Round 2 rebuilt + persisted them per
+# query (3× the work, never unpersisted — VERDICT r2 #1/#7). Each
+# ``_*_family`` builder below holds only its build logic; ``_family``
+# memoizes all of them in ONE dict keyed (family, session, sf_dir).
+# Builders register every checkpoint they make in the operators.dedup
+# ledger, the memo takes those entries over (one owner per block), and
+# ``clear_dedup_cache`` is the one release path.
 
 def _session_key(spark: SparkSession):
-    """Family-cache key component. Classic sessions key on the
+    """Family-memo key component. Classic sessions key on the
     SparkContext identity (survives newSession clones); Spark Connect
     has no SparkContext — fall back to the session object itself."""
     try:
@@ -681,79 +686,97 @@ def _session_key(spark: SparkSession):
         return id(spark)
 
 
-_DEDUP_FAMILY_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
+# (family, session key, sf_dir) -> (value, band frames, spill tables)
+_FAMILIES: dict[tuple, tuple] = {}
 
 
-def _dedup_family(
-    spark: SparkSession, sf_dir: str, stage_times: dict | None = None
-) -> tuple[DataFrame, DataFrame]:
+def _family(build: Callable) -> Callable:
+    """Memoize a ``_<name>_family(spark, sf_dir)`` builder in
+    ``_FAMILIES``. A miss runs ``build`` and moves the operators.dedup
+    ledger entries it registered into the memo entry, so a scoped
+    ``release_entries`` elsewhere never frees a memoized frame. If
+    ``build`` raises, those entries are released before the error
+    propagates — a failed build strands no blocks."""
+    from .operators import dedup as dd
+
+    name = build.__name__[1 : -len("_family")]
+
+    @functools.wraps(build)
+    def family(spark: SparkSession, sf_dir: str):
+        key = (name, _session_key(spark), sf_dir)
+        hit = _FAMILIES.get(key)
+        if hit is not None:
+            return hit[0]
+        snap = dd.cache_snapshot()
+        try:
+            value = build(spark, sf_dir)
+        except BaseException:
+            dd.release_entries(*dd.entries_since(snap))
+            raise
+        bands, spills = dd.entries_since(snap)
+        dd._unregister(bands, spills)
+        _FAMILIES[key] = (value, bands, spills)
+        return value
+
+    return family
+
+
+def clear_dedup_cache() -> None:
+    """Release every shared artifact: each family memo entry, the
+    operators.dedup band ledger, and the pq LUT broadcasts
+    (idempotent). Memoized frames must not be used afterwards —
+    checkpoint release is one-way (``register_ckpt``)."""
+    from .operators.dedup import clear_band_cache, release_entries
+    from .operators.pq import clear_pq_broadcasts
+
+    while _FAMILIES:
+        _, bands, spills = _FAMILIES.popitem()[1]
+        release_entries(bands, spills)
+    clear_band_cache()
+    # LUT broadcasts pq_topk left alive for its lazy result DataFrames
+    # (one per lut_chunk — ADVICE r8 #4)
+    clear_pq_broadcasts()
+
+
+@_family
+def _dedup_family(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(shingle_df, minhash_pair_df) shared by the dedup query family.
 
-    Both are eagerly localCheckpointed at build (the timed family-build
-    line); later family members read the materialized blocks through a
-    constant-size LogicalRDD plan. The pair list is the verified
-    (id_a, id_b, jaccard) output of ``minhash_pairs`` at the family's
-    standing parameters (threshold=0.5, n=8).
-
-    ``stage_times`` (bench.py's dedup stage sub-lines, redefined for
-    the eager build): "shingles" = shingle build + checkpoint wall,
-    "construct" = minhash_pairs construction incl. its internal eager
-    signature/band checkpoints, "pairs" = candidate join + prefilter +
-    verify execution (the pair checkpoint)."""
-    import time as _time
-
-    key = (_session_key(spark), sf_dir)
-    hit = _DEDUP_FAMILY_CACHE.get(key)
-    if hit is not None:
-        return hit
+    Both are eagerly localCheckpointed at build; later family members
+    read the materialized blocks through a constant-size LogicalRDD
+    plan. The pair list is the verified (id_a, id_b, jaccard) output of
+    ``minhash_pairs`` at the family's standing parameters
+    (threshold=0.5, n=8)."""
     docs = load_tables(spark, sf_dir)["documents"]
     # localCheckpoint, not persist (r14): persist substitutes cached
     # blocks only AFTER analysis, so every consumer action re-analyzed
     # the full shingle/signature/verify logical tree (~6x-embedded
     # 32-agg subtree — BASELINE r14 anatomy); the checkpoint truncates
-    # to a LogicalRDD leaf. Measured fresh-JVM A/B
-    # (tools/ab_dedup_ckpt.py, alternating): build 30.7/19.9 s vs
-    # 42.1/29.9, six benched consumers 20.5/15.2 s vs 52.9/25.6 —
-    # ckpt won every adjacent comparison. Eager: runs inside the timed
-    # dedup_family_build line. release_family handles the RDD blocks.
-    t0 = _time.perf_counter()
-    sh = shingles(docs, n=8).localCheckpoint()
-    t1 = _time.perf_counter()
-    lazy_pairs = minhash_pairs(
+    # to a LogicalRDD leaf. Measured fresh-JVM A/B (alternating): build
+    # 30.7/19.9 s vs 42.1/29.9, six consumers 20.5/15.2 s vs
+    # 52.9/25.6 — ckpt won every adjacent comparison.
+    sh = _session_cache(shingles(docs, n=8), mode="ckpt")
+    pairs = minhash_pairs(
         docs, threshold=0.5, n=8, shingle_df=sh, cache_bands="ckpt"
     )
-    t2 = _time.perf_counter()
-    pairs = lazy_pairs.localCheckpoint()
-    if stage_times is not None:
-        stage_times["shingles"] = t1 - t0
-        stage_times["construct"] = t2 - t1
-        stage_times["pairs"] = _time.perf_counter() - t2
-    _DEDUP_FAMILY_CACHE[key] = (sh, pairs)
-    return sh, pairs
+    return sh, _session_cache(pairs, mode="ckpt")
 
 
 # The exact-substring family (dedup_exact_substr / substr_dedup_clean_docs /
 # pipeline_train_mix) shares one detected-runs table at the standing
 # parameters (k=16, min_tokens=32) — previously each member re-ran the
 # window-table shuffle (~7.9 s duplicated inside the capstone alone,
-# VERDICT r5 wrong #2). Same per-(session, sf_dir) idiom as _dedup_family;
-# bench.py times the materialization as its own `substr_family_build` line.
-_SUBSTR_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# VERDICT r5 wrong #2).
+@_family
 def _substr_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted exact_substring_runs(documents, k=16, min_tokens=32)
+    """Checkpointed exact_substring_runs(documents, k=16, min_tokens=32)
     shared by the exact-substring query family."""
     from .operators.substr_dedup import exact_substring_runs
 
-    key = (_session_key(spark), sf_dir)
-    hit = _SUBSTR_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_tables(spark, sf_dir)["documents"]
-    runs = exact_substring_runs(docs, k=16, min_tokens=32).localCheckpoint()
-    _SUBSTR_CACHE[key] = runs
-    return runs
+    return _session_cache(
+        exact_substring_runs(docs, k=16, min_tokens=32), mode="ckpt"
+    )
 
 
 # The span-REMOVED corpus (doc_id, n_tokens, n_removed, clean_text) is
@@ -761,107 +784,41 @@ def _substr_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline_train_mix references it four times in one job graph (DSIR
 # corpus + DSIR target + packing input + final join) — unpersisted,
 # Spark re-ran the ~2 s rebuild per reference (capstone 17 s instead of
-# ~7 s). bench.py materializes it inside the substr_family_build line.
-_SUBSTR_CLEAN_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# ~7 s).
+@_family
 def _substr_clean_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted remove_duplicate_spans(documents, runs=_substr_family)
+    """Checkpointed remove_duplicate_spans(documents, runs=_substr_family)
     at the standing family parameters."""
     from .operators.substr_dedup import remove_duplicate_spans
 
-    key = (_session_key(spark), sf_dir)
-    hit = _SUBSTR_CLEAN_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_tables(spark, sf_dir)["documents"]
-    cleaned = remove_duplicate_spans(
-        docs, runs=_substr_family(spark, sf_dir)
-    ).localCheckpoint()
-    _SUBSTR_CLEAN_CACHE[key] = cleaned
-    return cleaned
+    return _session_cache(
+        remove_duplicate_spans(docs, runs=_substr_family(spark, sf_dir)),
+        mode="ckpt",
+    )
 
 
 # DSIR weights over the RAW corpus (target = src0, md5 bucketing) feed
 # both dsir_importance_docs and dsir_resample_docs — identical ~4 s gram
-# aggregations. Same family idiom; the capstone's weights are over the
-# span-CLEANED text and stay separate.
-_DSIR_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# aggregations. The capstone's weights are over the span-CLEANED text and
+# stay separate.
+@_family
 def _dsir_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted importance_weights(documents, target=src0, md5)."""
+    """Checkpointed importance_weights(documents, target=src0, md5)."""
     from .operators.dsir import importance_weights
 
-    key = (_session_key(spark), sf_dir)
-    hit = _DSIR_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_tables(spark, sf_dir)["documents"]
-    weights = importance_weights(
-        docs, docs.where(F.col("source") == "src0"), hash_fn="md5"
-    ).localCheckpoint()
-    _DSIR_CACHE[key] = weights
-    return weights
+    return _session_cache(
+        importance_weights(
+            docs, docs.where(F.col("source") == "src0"), hash_fn="md5"
+        ),
+        mode="ckpt",
+    )
 
 
-# Which registered queries read each family cache (bench.py releases a
-# family's persisted artifacts as soon as its LAST benched consumer
-# line completes — VERDICT r11 #1a; membership is asserted by
-# tests/test_plans.py::test_family_consumer_ledger so the ledger can't
-# rot when queries are added or renamed).
-FAMILY_CONSUMERS: dict[str, tuple[str, ...]] = {
-    "dedup": (
-        "dedup_ngram_jaccard",
-        "dedup_containment_docs",
-        "near_dup_leakage_sources",
-        "dedup_minhash_docs",
-        "dedup_clusters_docs",
-        "dedup_fuzzy_survivors",
-        "cluster_split_docs",
-        "incremental_minhash_docs",
-    ),
-    "winnow": ("doc_fingerprint_winnow", "winnow_overlap_pairs"),
-    "substr": (
-        "dedup_exact_substr",
-        "substr_dedup_clean_docs",
-        "pipeline_train_mix",
-    ),
-    "dsir": ("dsir_importance_docs", "dsir_resample_docs"),
-    "langid": ("langid_softmax_docs", "langid_softmax_eval"),
-    "copurchase": (
-        "triangle_count_copurchase",
-        "kcore_copurchase",
-        "label_propagation_copurchase",
-    ),
-    "quality": (
-        "quality_classifier_docs",
-        "classifier_calibration_docs",
-    ),
-    "ann": (
-        "ann_pq_topk",
-        "ann_pq_refined_topk",
-        "ann_ivf_topk",
-        "ann_ivf_refined_topk",
-        "ann_ivfpq_topk",
-        "ann_ivfpq_refined_topk",
-    ),
-    "tok": (
-        "bpe_train_docs",
-        "bpe_tokenize_docs",
-        "wordpiece_train_docs",
-        "wordpiece_tokenize_docs",
-        "unigram_tokenizer_docs",
-        "unigram_tokenize_docs",
-    ),
-}
-
-
-_COPURCHASE_CACHE: dict = {}
-
-
+@_family
 def _copurchase_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted canonical part co-purchase edge list (src < dst,
+    """Checkpointed canonical part co-purchase edge list (src < dst,
     distinct, no self-loops) — the identical graph kcore_copurchase,
     label_propagation_copurchase, and triangle_count_copurchase each
     rebuilt per entry. Built from per-order sorted part-set arrays
@@ -872,10 +829,6 @@ def _copurchase_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1. Assumes bounded basket size (TPC-H orders hold <= 7 parts;
     the assoc_rules contract) — a corpus with million-item baskets
     would cap or fall back to the join form."""
-    key = (_session_key(spark), sf_dir)
-    hit = _COPURCHASE_CACHE.get(key)
-    if hit is not None:
-        return hit
     li = load_tables(spark, sf_dir)["lineitem"].select(
         "l_orderkey", "l_partkey"
     )
@@ -902,35 +855,24 @@ def _copurchase_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("p.src", "p.dst")
         .distinct()
-        .localCheckpoint()
     )
-    _COPURCHASE_CACHE[key] = edges
-    return edges
+    return _session_cache(edges, mode="ckpt")
 
 
-_LANGID_CACHE: dict = {}
-
-
+@_family
 def _langid_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted char_tf_counts(documents, 128 buckets, bigrams) — the
+    """Checkpointed char_tf_counts(documents, 128 buckets, bigrams) — the
     granular per-(doc, bucket) count table both langid classifiers
     train from (VERDICT r12 next-round #1): the 128-bucket entry reads
     it as-is, the 64-bucket eval entry folds bucket % 64 (exact, since
     md5_32 % 128 % 64 == md5_32 % 64), so the corpus tokenizes ONCE
-    per bench run instead of once per entry."""
+    per session instead of once per entry."""
     from .operators.langid import char_tf_counts
 
-    key = (_session_key(spark), sf_dir)
-    hit = _LANGID_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_tables(spark, sf_dir)["documents"]
-    tf = char_tf_counts(docs, n_buckets=128, n=2).localCheckpoint()
-    _LANGID_CACHE[key] = tf
-    return tf
-
-
-_QUALITY_CACHE: dict = {}
+    return _session_cache(
+        char_tf_counts(docs, n_buckets=128, n=2), mode="ckpt"
+    )
 
 
 def _gopher_mwl_label() -> "F.Column":
@@ -948,8 +890,9 @@ def _gopher_mwl_label() -> "F.Column":
     return mwl > 4.5
 
 
+@_family
 def _quality_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted quality_classifier output at the standing parameters
+    """Checkpointed quality_classifier output at the standing parameters
     (Gopher mean-word-length weak label, 64 buckets, 6 iterations,
     lr=2.0) — quality_classifier_docs returns it verbatim and
     classifier_calibration_docs sweeps it; each previously re-ran the
@@ -957,16 +900,13 @@ def _quality_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     two consumers). Training collects at family construction."""
     from .operators.classifier import quality_classifier
 
-    key = (_session_key(spark), sf_dir)
-    hit = _QUALITY_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_tables(spark, sf_dir)["documents"]
-    scored = quality_classifier(
-        docs, _gopher_mwl_label(), n_buckets=64, iters=6, lr=2.0
-    ).localCheckpoint()
-    _QUALITY_CACHE[key] = scored
-    return scored
+    return _session_cache(
+        quality_classifier(
+            docs, _gopher_mwl_label(), n_buckets=64, iters=6, lr=2.0
+        ),
+        mode="ckpt",
+    )
 
 
 def _par_actions(*thunks):
@@ -987,9 +927,7 @@ def _par_actions(*thunks):
         return [f.result() for f in futures]
 
 
-_ANN_CACHE: dict = {}
-
-
+@_family
 def _ann_family(spark: SparkSession, sf_dir: str) -> dict:
     """Shared trained ANN models for the IVF/PQ registry entries
     (r14, the quality-family pattern at model granularity): ONE
@@ -999,8 +937,8 @@ def _ann_family(spark: SparkSession, sf_dir: str) -> dict:
     ivfpq_refined — previously each entry re-ran the identical
     training at construction. Training is deterministic (hash-ordered
     sample, fixed iterations), so shared models are bit-identical to
-    per-entry ones and every downstream row is unchanged. The cached
-    values are two driver-side float lists (~16x64 + 16x32x4 floats)
+    per-entry ones and every downstream row is unchanged. The memoized
+    value holds two driver-side float lists (~16x64 + 16x32x4 floats)
     plus, since r15, two SHARED DERIVED CORPUS RELATIONS (guide §1.2
     don't-recompute, the r14 family pattern one artifact level deeper):
 
@@ -1012,21 +950,16 @@ def _ann_family(spark: SparkSession, sf_dir: str) -> dict:
       re-run by all four PQ/IVF-PQ entries).
 
     Both are eager localCheckpoints (constant-size LogicalRDD plans for
-    every consumer) registered in the session-cache ledger; the bench's
-    ann_family_build line pays their materialization and
-    release_family/release_entries drop the blocks after the last
-    consumer. Deterministic given the shared models, so every
-    downstream row is unchanged (pinned in tests/test_ann_family.py).
-    The two model trainings run as one Spark action chain each and are
-    independent, so the family overlaps them (guide §2.6)."""
-    from .operators.dedup import _session_cache
+    every consumer), released with the rest of the memo by
+    ``clear_dedup_cache``. Deterministic given the shared models, so
+    every downstream row is unchanged (pinned in
+    tests/test_ann_family.py). The two model trainings run as one Spark
+    action chain each and are independent, so the family overlaps them
+    (guide §2.6); if one chain fails, ``_family`` releases the other's
+    checkpoint."""
     from .operators.pq import encode_pq, train_pq
     from .operators.similarity import _fit_centroids, assign_centroids
 
-    key = (_session_key(spark), sf_dir)
-    hit = _ANN_CACHE.get(key)
-    if hit is not None:
-        return hit
     e = load_tables(spark, sf_dir)["embeddings"]
 
     def _ivf_chain():
@@ -1038,19 +971,15 @@ def _ann_family(spark: SparkSession, sf_dir: str) -> dict:
         return books, _session_cache(encode_pq(e, books), mode="ckpt")
 
     (cents, assign), (books, codes) = _par_actions(_ivf_chain, _pq_chain)
-    models = {
+    return {
         "centroids": cents,
         "books": books,
         "assign": assign,
         "codes": codes,
     }
-    _ANN_CACHE[key] = models
-    return models
 
 
-_TOK_CACHE: dict = {}
-
-
+@_family
 def _tok_family(spark: SparkSession, sf_dir: str) -> dict:
     """Shared tokenizer-trainer artifacts (r15, the ANN-family pattern
     at model granularity — guide §1.2 don't-recompute): ONE
@@ -1059,21 +988,16 @@ def _tok_family(spark: SparkSession, sf_dir: str) -> dict:
     vocab, unigram-LM 40 pieces), whose outputs serve the six tokenizer
     registry entries. Previously each *_tokenize_docs entry re-ran the
     IDENTICAL training its *_train_docs sibling ran, and every one of
-    the six lines re-ran the same word-frequency aggregation (~12
-    corpus aggregations + 6 trainings per bench run for 4 distinct
-    artifacts). Each trainer is deterministic and order-independent
-    (integer counts, full tie-breaks), so shared models are
-    bit-identical to per-entry ones — pinned in
-    tests/test_tok_family.py. Cached values are driver-side
-    lists/sets, not DataFrames (the _ANN_CACHE shape)."""
+    the six entries re-ran the same word-frequency aggregation (~12
+    corpus aggregations + 6 trainings for 4 distinct artifacts). Each
+    trainer is deterministic and order-independent (integer counts,
+    full tie-breaks), so shared models are bit-identical to per-entry
+    ones — pinned in tests/test_tok_family.py. The memoized value is
+    driver-side lists/sets, not DataFrames."""
     from .operators.bpe import train_bpe, word_frequencies
     from .operators.unigram import train_unigram
     from .operators.wordpiece import train_wordpiece, wordpiece_vocab
 
-    key = (_session_key(spark), sf_dir)
-    hit = _TOK_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_tables(spark, sf_dir)["documents"]
     words = word_frequencies(docs).collect()
     models = {
@@ -1084,119 +1008,7 @@ def _tok_family(spark: SparkSession, sf_dir: str) -> dict:
     models["wp_vocab"] = wordpiece_vocab(
         docs, models["wp"], words_rows=words
     )
-    _TOK_CACHE[key] = models
     return models
-
-
-def build_family(family: str, spark: SparkSession, sf_dir: str) -> None:
-    """Materialize one family's shared artifacts (idempotent)."""
-    if family == "dedup":
-        sh, pairs = _dedup_family(spark, sf_dir)
-        sh.count()
-        pairs.count()
-    elif family == "winnow":
-        _winnow_family(spark, sf_dir).count()
-    elif family == "substr":
-        _substr_family(spark, sf_dir).count()
-        _substr_clean_family(spark, sf_dir).count()
-    elif family == "dsir":
-        _dsir_family(spark, sf_dir).count()
-    elif family == "langid":
-        _langid_family(spark, sf_dir).count()
-    elif family == "copurchase":
-        _copurchase_family(spark, sf_dir).count()
-    elif family == "quality":
-        _quality_family(spark, sf_dir).count()
-    elif family == "ann":
-        _ann_family(spark, sf_dir)
-    elif family == "tok":
-        _tok_family(spark, sf_dir)
-    else:
-        raise KeyError(f"unknown family {family!r}")
-
-
-def release_family(family: str) -> None:
-    """Unpersist ONE family's shared DataFrames (idempotent; the
-    band/spill entries its build registered are scoped separately via
-    operators.dedup.cache_snapshot/release_entries)."""
-    if family == "ann":
-        # model lists are driver-side, but the derived assign/codes
-        # relations (r15) hold checkpoint blocks — release them (the
-        # bench's ledger-scoped release also covers them; this keeps
-        # non-bench callers leak-free and stays idempotent)
-        from .operators.dedup import _release_df
-
-        for models in _ANN_CACHE.values():
-            for v in models.values():
-                if isinstance(v, DataFrame):
-                    _release_df(v)
-        _ANN_CACHE.clear()
-        return
-    if family == "tok":
-        # driver-side merge lists / vocab sets, no Spark storage
-        _TOK_CACHE.clear()
-        return
-    caches: tuple[dict, ...] = {
-        "dedup": (_DEDUP_FAMILY_CACHE,),
-        "winnow": (_WINNOW_CACHE,),
-        "substr": (_SUBSTR_CACHE, _SUBSTR_CLEAN_CACHE),
-        "dsir": (_DSIR_CACHE,),
-        "langid": (_LANGID_CACHE,),
-        "copurchase": (_COPURCHASE_CACHE,),
-        "quality": (_QUALITY_CACHE,),
-    }[family]
-    from .operators.dedup import _release_df
-
-    for cache in caches:
-        for val in cache.values():
-            for df in val if isinstance(val, tuple) else (val,):
-                _release_df(df)
-        cache.clear()
-
-
-def clear_dedup_cache() -> None:
-    """Unpersist the shared dedup-family DataFrames AND the operator-level
-    LSH band caches (idempotent)."""
-    from .operators.dedup import clear_band_cache
-
-    for sh, pairs in _DEDUP_FAMILY_CACHE.values():
-        for df in (pairs, sh):
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped — nothing to release
-                pass
-    _DEDUP_FAMILY_CACHE.clear()
-    for fps in _WINNOW_CACHE.values():
-        try:
-            fps.unpersist()
-        except Exception:
-            pass
-    _WINNOW_CACHE.clear()
-    for runs in _SUBSTR_CACHE.values():
-        try:
-            runs.unpersist()
-        except Exception:
-            pass
-    _SUBSTR_CACHE.clear()
-    for cleaned in _SUBSTR_CLEAN_CACHE.values():
-        try:
-            cleaned.unpersist()
-        except Exception:
-            pass
-    _SUBSTR_CLEAN_CACHE.clear()
-    for weights in _DSIR_CACHE.values():
-        try:
-            weights.unpersist()
-        except Exception:
-            pass
-    _DSIR_CACHE.clear()
-    clear_band_cache()
-    # LUT broadcasts pq_topk left alive for its lazy result DataFrames
-    # (one per lut_chunk — ADVICE r8 #4)
-    from .operators.pq import clear_pq_broadcasts
-
-    clear_pq_broadcasts()
-
 
 def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
@@ -2252,7 +2064,7 @@ def dedup_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     therefore the band buckets and Hamming distances — SQL-replayable,
     flipping this entry from rows-only to EXACT (the HLL/Bloom/theta
     precedent). The fast xxhash64 default remains for non-oracle use."""
-    from .operators.dedup import _session_cache, simhash64
+    from .operators.dedup import simhash64
 
     t = load_tables(spark, sf_dir)
     # md5 mode can't reuse the family's int64-hashed shingle set — it
@@ -5161,22 +4973,13 @@ FROM documents GROUP BY 1
 
 
 # The winnow family (per-doc stats + overlap pairs) shares one fingerprint
-# table at the standing parameters (k=16, w=12) — same persist-once idiom
-# as _dedup_family; clear_dedup_cache releases it too.
-_WINNOW_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# table at the standing parameters (k=16, w=12).
+@_family
 def _winnow_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (_session_key(spark), sf_dir)
-    hit = _WINNOW_CACHE.get(key)
-    if hit is not None:
-        return hit
     from .operators.fingerprint import winnow_fingerprints
 
     docs = load_tables(spark, sf_dir)["documents"]
-    fps = winnow_fingerprints(docs, k=16, w=12).localCheckpoint()
-    _WINNOW_CACHE[key] = fps
-    return fps
+    return _session_cache(winnow_fingerprints(docs, k=16, w=12), mode="ckpt")
 
 
 def doc_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9690,8 +9493,8 @@ def label_propagation_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor label, ties to the smallest).  The oracle replays all four
     rounds as an unrolled MATERIALIZED CTE chain (the kcore technique),
     so every vertex's final label and community size are EXACT-checked.
-    Since r11 the default checkpoint cadence is 4 (tools/sweep_lpa.py:
-    LPA lineage grows linearly, so one checkpoint at the final round
+    Since r11 the default checkpoint cadence is 4 (a 10M-edge cadence
+    sweep, BASELINE.md round-11 table: LPA lineage grows linearly, so one checkpoint at the final round
     beats per-round cache write/reads — result bit-identical), so this
     4-round query checkpoints once. Construction still runs eager jobs
     (EAGER_QUERIES)."""

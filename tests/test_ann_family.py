@@ -75,9 +75,10 @@ def test_pq_topk_on_checkpointed_codes_equals_inline(spark, vecs):
     ck.unpersist()
 
 
-def test_ann_family_registers_and_releases_spark_storage(spark, tmp_path):
-    """release_family('ann') must unpersist the derived relations (they
-    are DataFrames now, not just driver-side lists)."""
+def test_ann_family_registers_and_releases_spark_storage(spark):
+    """The memo, not the band ledger, owns the derived relations (they
+    are checkpointed DataFrames, not just driver-side lists):
+    clear_dedup_cache frees their blocks and drops the memo entry."""
     from spark_skew_join_spark import queries as q
     from spark_skew_join_spark.operators import dedup as dd
 
@@ -85,7 +86,11 @@ def test_ann_family_registers_and_releases_spark_storage(spark, tmp_path):
     snap = dd.cache_snapshot()
     fam = q._ann_family(spark, sf)
     assert fam["assign"].count() > 0 and fam["codes"].count() > 0
-    assert dd.cache_snapshot() > snap  # derived relations registered
-    q.release_family("ann")
-    dd.release_entries(*dd.entries_since(snap))
-    assert q._ANN_CACHE == {}
+    assert dd.cache_snapshot() == snap
+    rdds = [fam[k]._jdf.queryExecution().analyzed().rdd() for k in ("assign", "codes")]
+    assert all(r.getStorageLevel().useMemory() for r in rdds)
+    q.clear_dedup_cache()
+    assert not any(
+        r.getStorageLevel().useMemory() or r.getStorageLevel().useDisk() for r in rdds
+    )
+    assert not [key for key in q._FAMILIES if key[0] == "ann"]

@@ -2,17 +2,17 @@
 
 A ``_session_cache(mode="ckpt")`` frame is a localCheckpoint — releasing
 its blocks truncates lineage IRRECOVERABLY, so any path that releases
-entries and then re-executes the same DataFrame crashes. bench.py's
-``_cold_noop`` retry for NON-eager cache-warm lines does exactly that
-(release, then re-run the same plan) — safe only while no non-eager
-line registers a ckpt entry. This test pins that invariant over the
-whole registry: constructing every non-EAGER query must register zero
-ckpt entries.
+entries and then re-executes the same DataFrame crashes. A caller that
+releases a lazy query's entries (``release_entries``) and then re-runs
+the same plan is safe only while no non-eager query registers a ckpt
+entry. This test pins that invariant over the whole registry:
+constructing every non-EAGER query must register zero ckpt entries.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -24,30 +24,27 @@ def test_non_eager_queries_register_no_ckpt_entries(spark):
     from spark_skew_join_spark import queries as q
     from spark_skew_join_spark.operators import dedup as dd
 
-    # bench builds every family in its own timed line BEFORE the
-    # consumer lines run, so family-build ckpt registrations are never
-    # attributed to (or released by) a consumer line — mirror that
-    # order here, otherwise the first consumer constructed triggers
-    # the family build and inherits its ckpt entries
-    for fam in q.FAMILY_CONSUMERS:
-        q.build_family(fam, spark, SF_DIR)
+    # build every family through the memo first: the memo takes its
+    # builds' ckpt entries out of the ledger, so only each query's own
+    # registrations are seen below
+    for name, build in list(vars(q).items()):
+        if re.fullmatch(r"_\w+_family", name):
+            build(spark, SF_DIR)
     bad = []
     for name, fn in q.QUERIES.items():
         if name in q.EAGER_QUERIES:
             continue
         snap = dd.cache_snapshot()
-        ck = dd.ckpt_snapshot()
         fn(spark, SF_DIR)  # construction only — non-eager lines are lazy
-        if dd.ckpt_entries_since(ck):
+        bands, spills = dd.entries_since(snap)
+        if any(not b.is_cached for b in bands):  # a ckpt entry
             bad.append(name)
-        dd.release_entries(*dd.entries_since(snap))
-    for fam in q.FAMILY_CONSUMERS:
-        q.release_family(fam)
+        dd.release_entries(bands, spills)
     q.clear_dedup_cache()
     assert not bad, (
-        "non-EAGER queries registered ckpt session-cache entries — "
-        "bench.py's _cold_noop retry would re-execute a released "
-        f"localCheckpoint: {bad}"
+        "non-EAGER queries registered ckpt session-cache entries — a "
+        "caller releasing them and re-running the plan would re-execute "
+        f"a released localCheckpoint: {bad}"
     )
 
 

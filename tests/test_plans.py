@@ -182,30 +182,31 @@ def test_driver_window_marker():
         ), "an entry outside the window is staler than one inside"
 
 
-def test_family_consumer_ledger():
-    """FAMILY_CONSUMERS (bench.py's release schedule) cannot rot: every
-    listed consumer is a registered query, and every registered query
-    whose source touches a family helper is listed under that family."""
+def test_families_share_one_memo():
+    """Every ``_*_family`` builder is memoized through ``_family``, and
+    ``queries.py`` keeps no other module-level cache dict — a new family
+    cannot bring back a hand-rolled cache with its own release rules."""
+    import ast
     import inspect
 
     from spark_skew_join_spark import queries as q
 
-    pats = {
-        "dedup": ("_dedup_family(",),
-        "winnow": ("_winnow_family(",),
-        "substr": ("_substr_family(", "_substr_clean_family("),
-        "dsir": ("_dsir_family(",),
-        "langid": ("_langid_family(",),
-        "copurchase": ("_copurchase_family(",),
-        "quality": ("_quality_family(",),
-        "ann": ("_ann_family(",),
-        "tok": ("_tok_family(",),
-    }
-    for fam, consumers in q.FAMILY_CONSUMERS.items():
-        for c in consumers:
-            assert c in q.QUERIES, (fam, c)
-    for name, fn in q.QUERIES.items():
-        src = inspect.getsource(fn)
-        for fam, needles in pats.items():
-            if any(n in src for n in needles):
-                assert name in q.FAMILY_CONSUMERS[fam], (name, fam)
+    tree = ast.parse(inspect.getsource(q))
+    families = [
+        node for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+        and node.name.startswith("_") and node.name.endswith("_family")
+        and node.name != "_family"
+    ]
+    assert len(families) >= 10
+    for node in families:
+        decorators = [ast.unparse(d) for d in node.decorator_list]
+        assert decorators == ["_family"], (node.name, decorators)
+    caches = []
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None:
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names = [ast.unparse(t) for t in targets]
+            if "CACHE" in " ".join(names).upper() or ast.unparse(node.value) in ("{}", "dict()"):
+                caches += names
+    assert caches == ["_FAMILIES"], caches

@@ -157,8 +157,8 @@ def main() -> None:
     rows = []
     for name in QUERIES:
         # EAGER_QUERIES do their real work (per-round checkpoints,
-        # sketch folds) at plan CONSTRUCTION — snapshot before it, as
-        # bench.py re-times them, so their shuffle bytes are attributed
+        # sketch folds) at plan CONSTRUCTION — snapshot before it, so
+        # their shuffle bytes are attributed
         # to their own row instead of vanishing between windows
         # (VERDICT r8 #4)
         eager = name in q.EAGER_QUERIES
@@ -193,7 +193,7 @@ def main() -> None:
             "completed-stage input / shuffle-read / shuffle-write bytes.\n"
             "Rows marked `*` are EAGER_QUERIES: their window opens BEFORE\n"
             "plan construction (per-round checkpoints / sketch folds do\n"
-            "the real work there), matching bench.py's timing semantics.\n"
+            "the real work there), so construction-time work is counted.\n"
             "Stages completing late can still leak into the next row —\n"
             "read totals, not row-exact attribution.\n"
             "Regenerate: `python tools/shuffle_audit.py`.\n\n"
