@@ -57,13 +57,6 @@ def _snapshot_diff(self: DataFrame, new: DataFrame, key_cols,
     return snapshot_diff(self, new, key_cols, compare_cols)
 
 
-def _get_hll(self: DataFrame, key_cols, p: int = 14):
-    from .sketch.hll import hll_from_dataframe
-
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    return hll_from_dataframe(self, key_cols, p)
-
-
 def _bottom_k(self: DataFrame, id_col: str, k: int) -> DataFrame:
     from .operators.bottomk import bottom_k_sample
 
@@ -108,12 +101,6 @@ def _semdedup(self: DataFrame, threshold: float = 0.4, n_clusters: int = 8,
                     centroid_source, dim, cluster_cap)
 
 
-def _get_kll(self: DataFrame, value_col: str, k: int = 200, seed: int = 1):
-    from .sketch.kll import kll_from_dataframe
-
-    return kll_from_dataframe(self, value_col, k, seed)
-
-
 def _temperature_mix(self: DataFrame, alpha: float, total: int,
                      source_col: str = "source",
                      id_col: str = "doc_id") -> DataFrame:
@@ -144,14 +131,6 @@ def _get_bloom(self: DataFrame, key_cols, m_bits: int = 1 << 20, k: int = 7):
 
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     return bloom_from_dataframe(self, key_cols, m_bits, k)
-
-
-def _get_theta(self: DataFrame, key_cols, k: int = 1024,
-               hash_fn: str = "xxhash64"):
-    from .sketch.theta import theta_from_dataframe
-
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    return theta_from_dataframe(self, key_cols, k, hash_fn)
 
 
 def _bm25_topk(self: DataFrame, query_terms, k: int = 20, k1: float = 1.2,
@@ -295,7 +274,6 @@ def register_dataframe_api() -> None:
     _METHODS.update(
         skew_join=_skew_join,
         get_cms=_get_cms,
-        get_hll=_get_hll,
         count_per_partition=count_per_partition,
         show_count_per_partition=show_count_per_partition,
         partition_stats=partition_stats,
@@ -309,12 +287,10 @@ def register_dataframe_api() -> None:
         exact_substring_runs=_exact_substring_runs,
         remove_duplicate_spans=_remove_duplicate_spans,
         semdedup=_semdedup,
-        get_kll=_get_kll,
         temperature_mix=_temperature_mix,
         sequence_packing=_sequence_packing,
         incremental_exact_dedup=_incremental_exact_dedup,
         get_bloom=_get_bloom,
-        get_theta=_get_theta,
         bm25_topk=_bm25_topk,
         link_records=_link_records,
         zorder_key=_zorder_key,

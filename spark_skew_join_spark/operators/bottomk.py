@@ -1,7 +1,8 @@
 """Bottom-k sketch: deterministic mergeable uniform sample + quantiles.
 
-Completes the sketch family (cms.py frequencies, hll.py distinct
-counts, heavy.py heavy hitters) with the quantile question: keep the k
+Completes the sketch family (cms.py frequencies, Spark's DataSketches
+HLL for distinct counts, heavy.py heavy hitters) with a deterministic
+answer to the quantile question: keep the k
 rows whose ``xxhash64(id)`` is smallest.  Because the hash is a fixed
 function of the row identity, the sample is a uniform draw that is
 ALSO deterministic — independent of partitioning, engine, and run —

@@ -681,8 +681,8 @@ def simhash64(
     Pass ``shingle_df`` (columns: id, shingle) to reuse an already
     materialized shingle set — the dedup query family shares one.
 
-    ``hash_fn="md5"`` (VERDICT r8 #2, the HLL/Bloom/theta/CMS
-    precedent): the 64 hash bits come from the first 16 hex chars of
+    ``hash_fn="md5"`` (VERDICT r8 #2, the Bloom precedent): the 64
+    hash bits come from the first 16 hex chars of
     md5(raw n-char substring) as two 32-bit halves — bit-equal in ANSI
     SQL (``CAST('0x' || SUBSTRING(MD5(s), off, 8) AS BIGINT)``) — so
     every fingerprint bit, and therefore the Hamming distances, replay

@@ -40,7 +40,13 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Per-column stats rows: (column, dtype, n, n_null, n_distinct,
     min_num, max_num, mean, min_str, max_str).  One scan for all
     columns; exact distincts (Spark plans the multi-distinct with one
-    expand, still a single pass over the data)."""
+    expand).
+
+    ``df`` is scanned twice, by two keyless aggregates that are
+    cross-joined (see below), so it must be a stable source: the same
+    rows on every evaluation.  For a non-deterministic or concurrently
+    changing input, ``localCheckpoint`` it first, or the two passes
+    may see different rows."""
     cols = list(cols) if cols is not None else [f.name for f in df.schema.fields]
     # TWO single-row aggregations instead of one (r15): the multi-
     # distinct rewrite plans count_distinct through an Expand whose
@@ -293,8 +299,8 @@ def mad_outliers(
     Scale shape: two key-partitioned aggregation passes (median, then
     MAD of deviations) and two equi-joins back on the key — no windows,
     no global sort; exact per-key medians at 100 TB are the point where
-    you'd swap in the KLL sketch (sketch/kll.py) for one pass, at a
-    bounded rank-error cost.
+    you'd swap in Spark's KLL sketch (``kll_sketch_agg_double``) for
+    one pass, at a bounded rank-error cost.
 
     Output: (key, n, median, mad, n_outliers, outlier_frac).
     """

@@ -38,25 +38,21 @@ from .operators.dedup import (
 )
 from .operators.similarity import cosine_topk, lsh_topk
 from .operators.skew_join import skew_join
+from .sketch.bounds import hll_error, kll_rank_error, theta_error
 from .sources.tables import load_tables
 
 # conf that engages salting on the driver tables (hottest key ≈660 rows at
 # sf0.01): a key with >=200 rows fragments, R = clamp(freq/100, 1, P)
 SKEW_CONF = SkewJoinConf(replication_factor=0.01, hot_threshold=200)
 
+# sketch sizes of the DataSketches registry lines: HLL lgConfigK, KLL k,
+# theta lgNomEntries (k = 256)
+HLL_LG_K = 14
+KLL_K = 200
+THETA_LG_K = 8
+
 _DEC_MONEY = "decimal(18,2)"
 _DEC_PROD = "decimal(24,6)"
-
-
-def _null_first(keys) -> list:
-    """Sort a sketch-result key set that may mix ``None`` (the NULL
-    group, ADVICE r6 #2) with real values: None sorts first, the rest
-    by natural order. Plain ``sorted()`` raises TypeError on the mix
-    (ADVICE r7 #1)."""
-    ks = list(keys)
-    return [k for k in ks if k is None] + sorted(
-        k for k in ks if k is not None
-    )
 
 
 def _dsum(col_expr, dec: str = _DEC_MONEY):
@@ -5937,219 +5933,82 @@ FROM m CROSS JOIN orph
 
 
 def hll_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL MERGEABILITY as a query — the property the built-in
-    approx_count_distinct cannot offer (sketch/hll.py docstring): one
-    distributed pass builds a distinct-token sketch PER SOURCE
-    (the bounded-memory grouped two-level mapInPandas fold of
-    hll_by_group — per-partition group slices, never a whole group on
-    one worker; ADVICE r5 #4), the driver max-merges the ~16 KiB
-    register arrays, and the merged estimate is gated against the
-    exact corpus-wide distinct-token count — the union was never
-    recomputed from data.  Per-source rows gate their own estimates
-    the same way; exact comparators come from ONE unioned aggregate
-    action.  Built in md5-compat mode (60-bit values from the first 15
-    md5 hex chars), so the SQL oracle replays every register (index =
-    top 14 bits, rank = 47 − bit_length of the 46-bit tail) and both
-    the per-source AND merged-union ESTIMATES hash-match."""
-    from .sketch.hll import HyperLogLog, hll_by_group
-
+    """HLL MERGEABILITY as a query — what the built-in
+    approx_count_distinct cannot offer: one ``hll_sketch_agg`` per
+    source (DataSketches, lgConfigK=14), then ``hll_union_agg`` folds
+    those sketches into the corpus-wide union row — the union is never
+    recomputed from the tokens.  Each row carries the exact distinct
+    token count and is kept only when its sketch estimate is within
+    ``hll_error(14)`` = 2.44% of it, so a gate miss shows up as a
+    missing row against the exact oracle.  One lazy plan; the union
+    row's crossJoin pairs two 1-row aggregates (SCALAR_BNL_OK)."""
     t = load_tables(spark, sf_dir)
     toks = t["documents"].select(
         "source",
         F.explode(F.split("text", " ")).alias("tok"),
     )
-    per_source = hll_by_group(toks, "source", ["tok"], hash_fn="md5")
-    merged = HyperLogLog(14, 60)
-    for s in per_source.values():
-        merged = merged.merge(s)
-    # exact distincts (per source + corpus) in one action
-    exact_rows = (
-        toks.groupBy("source").agg(F.countDistinct("tok").alias("n"))
-        .unionByName(
-            toks.agg(F.countDistinct("tok").alias("n"))
-            .select(F.lit("__union__").alias("source"), "n")
-        )
-        .collect()
+    per_source = toks.groupBy("source").agg(
+        F.hll_sketch_agg("tok", HLL_LG_K).alias("sk"),
+        F.countDistinct("tok").alias("exact"),
     )
-    exact = {r["source"]: int(r["n"]) for r in exact_rows}
-    rows = []
-    # NULL groups survive as key None (ADVICE r6 #2); sort them first so
-    # a mixed None/str key set never hits TypeError (ADVICE r7 #1).
-    for name in _null_first(per_source) + ["__union__"]:
-        est = (merged if name == "__union__" else per_source[name]).estimate()
-        ex = exact[name]
-        rows.append((name, float(est), ex, float(abs(est - ex) / ex)))
-    out = spark.createDataFrame(
-        rows, "source string, hll_estimate double, exact bigint, rel_err double"
+    union = (
+        per_source.agg(F.hll_union_agg("sk").alias("sk"))
+        .crossJoin(toks.agg(F.countDistinct("tok").alias("exact")))
+        .select(F.lit("__union__").alias("source"), "sk", "exact")
     )
-    # round IN-PLAN (KLL r13 lesson: Python round() rounds the true
-    # binary value, Spark/DuckDB ROUND the shortest-decimal HALF_UP —
-    # a .x5 estimate would flip sides) and gate on the rounded value,
-    # matching the oracle's WHERE exactly
-    return out.select(
-        "source",
-        F.round("hll_estimate", 1).alias("hll_estimate"),
-        "exact",
-        F.round("rel_err", 6).alias("rel_err"),
-    ).where(F.col("rel_err") < 0.025)  # 3-sigma p=14 bound
+    err = F.abs(F.hll_sketch_estimate("sk") - F.col("exact"))
+    return (
+        per_source.unionByName(union)
+        .where(err <= F.lit(hll_error(HLL_LG_K)) * F.col("exact"))
+        .select("source", "exact")
+    )
 
 
 def hll_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable HyperLogLog distinct counts (sketch/hll.py — the
-    distinct-count companion to the reference's getCMS) next to the
-    exact answers: one row per audited key with the HLL estimate and
-    relative error.  md5-compat mode (VERDICT r7 direction: the
-    theta/CMS/Bloom SQL-replay idiom applied to HLL): the oracle
-    rebuilds all 16384 registers per probe and replays the harmonic
-    estimate + linear-counting branch, so the ESTIMATE hash-matches —
-    no longer rows-only.  The p=14 error bound (|err| < 2.5%, 3 sigma)
-    stays pinned here AND in tests/test_hll.py. Sketch builds are
-    eager (driver folds 16 KiB register arrays) → EAGER_QUERIES."""
-    from .sketch.hll import hll_from_dataframe
-
+    """HLL distinct counts (DataSketches ``hll_sketch_agg``, the
+    distinct-count companion to the reference's getCMS) audited against
+    the exact answers: one row per key column with its exact distinct
+    count, kept only when the lgConfigK=14 estimate is within
+    ``hll_error(14)`` = 3·1.04/√2^14 = 2.44% of it.  The estimate stays
+    in the plan, so the oracle is the exact COUNT(DISTINCT) and a gate
+    miss shows up as a missing row.  One lazy plan: one aggregate per
+    probe, unioned."""
     t = load_tables(spark, sf_dir)
     probes = [
-        ("orders.o_custkey", t["orders"], ["o_custkey"]),
-        ("lineitem.l_partkey", t["lineitem"], ["l_partkey"]),
-        ("lineitem.l_suppkey", t["lineitem"], ["l_suppkey"]),
-    ]
-    # exact comparators in ONE action: a multi-distinct aggregate per
-    # table unioned into a single 3-row job (VERDICT r4 #8 — the old
-    # form ran one full countDistinct job per probe)
-    exact_rows = (
-        t["orders"]
-        .agg(F.countDistinct("o_custkey").alias("n"))
-        .select(F.lit("orders.o_custkey").alias("key"), "n")
-        .unionByName(
-            t["lineitem"]
-            .agg(
-                F.countDistinct("l_partkey").alias("np"),
-                F.countDistinct("l_suppkey").alias("ns"),
-            )
-            .select(
-                F.explode(
-                    F.map_from_arrays(
-                        F.array(
-                            F.lit("lineitem.l_partkey"),
-                            F.lit("lineitem.l_suppkey"),
-                        ),
-                        F.array("np", "ns"),
-                    )
-                ).alias("key", "n")
-            )
-        )
-        .collect()
-    )
-    exact_by_key = {r["key"]: int(r["n"]) for r in exact_rows}
-    rows = []
-    for name, df, cols in probes:
-        est = hll_from_dataframe(df, cols, hash_fn="md5").estimate()
-        exact = exact_by_key[name]
-        rows.append((name, float(est), int(exact),
-                     float(abs(est - exact) / exact)))
-    out = spark.createDataFrame(
-        rows, "key string, hll_estimate double, exact bigint, rel_err double"
-    )
-    # round IN-PLAN + gate on the rounded value (the KLL r13 lesson)
-    return out.select(
-        "key",
-        F.round("hll_estimate", 1).alias("hll_estimate"),
-        "exact",
-        F.round("rel_err", 6).alias("rel_err"),
-    ).where(F.col("rel_err") < 0.025)  # 3-sigma bound enforced
-
-
-def _hll_md5_est_sql(key_sql: str, from_sql: str) -> str:
-    """DuckDB scalar subquery: the p=14 md5-compat HLL estimate of
-    DISTINCT ``key_sql`` over ``from_sql`` — registers (index = top 14
-    bits, rank = 47 − bit_length(46-bit tail), exact via bin(), no
-    float log) then the harmonic estimate with the linear-counting
-    branch, the exact arithmetic of HyperLogLog.estimate()."""
-    return f"""(
-  WITH __ks AS (SELECT DISTINCT CAST({key_sql} AS VARCHAR) AS k
-                FROM {from_sql}),
-  __hv AS (SELECT CAST(('0x' || SUBSTRING(MD5(k), 1, 15)) AS BIGINT) AS h
-           FROM __ks),
-  __regs AS (
-    SELECT h >> 46 AS idx,
-           MAX(CASE WHEN (h & 70368744177663) = 0 THEN 47
-                    ELSE 47 - length(bin(h & 70368744177663)) END) AS r
-    FROM __hv GROUP BY 1
-  ),
-  __agg AS (
-    SELECT 16384 - COUNT(*) AS zeros,
-           (0.7213 / (1 + 1.079 / 16384.0)) * 16384.0 * 16384.0
-             / ((16384 - COUNT(*)) * 1.0 + SUM(POWER(2.0, -r))) AS raw
-    FROM __regs
-  )
-  SELECT CASE WHEN raw <= 2.5 * 16384 AND zeros > 0
-              THEN 16384.0 * LN(16384.0 / zeros) ELSE raw END
-  FROM __agg
-)"""
-
-
-_HLL_PROBES_SQL = " UNION ALL ".join(
-    f"""SELECT '{name}' AS key,
-       ROUND({_hll_md5_est_sql(col, tbl)}, 1) AS hll_estimate,
-       CAST((SELECT COUNT(DISTINCT {col}) FROM {tbl}) AS BIGINT) AS exact,
-       ROUND(ABS({_hll_md5_est_sql(col, tbl)}
-                 - (SELECT COUNT(DISTINCT {col}) FROM {tbl}))
-             / (SELECT COUNT(DISTINCT {col}) FROM {tbl}), 6) AS rel_err"""
-    for name, tbl, col in [
         ("orders.o_custkey", "orders", "o_custkey"),
         ("lineitem.l_partkey", "lineitem", "l_partkey"),
         ("lineitem.l_suppkey", "lineitem", "l_suppkey"),
     ]
-)
+    rows = functools.reduce(DataFrame.unionByName, [
+        t[tbl].agg(
+            F.hll_sketch_estimate(F.hll_sketch_agg(col, HLL_LG_K)).alias("est"),
+            F.countDistinct(col).alias("exact"),
+        ).select(F.lit(name).alias("key"), "exact", "est")
+        for name, tbl, col in probes
+    ])
+    err = F.abs(F.col("est") - F.col("exact"))
+    return rows.where(
+        err <= F.lit(hll_error(HLL_LG_K)) * F.col("exact")
+    ).select("key", "exact")
 
-HLL_DISTINCT_SQL = f"""
-SELECT * FROM ({_HLL_PROBES_SQL}) WHERE rel_err < 0.025
+
+HLL_DISTINCT_SQL = """
+SELECT 'orders.o_custkey' AS key, COUNT(DISTINCT o_custkey) AS exact
+FROM orders
+UNION ALL
+SELECT 'lineitem.l_partkey', COUNT(DISTINCT l_partkey) FROM lineitem
+UNION ALL
+SELECT 'lineitem.l_suppkey', COUNT(DISTINCT l_suppkey) FROM lineitem
 """
 
 
 HLL_UNION_SQL = """
 WITH toks AS (
   SELECT source, UNNEST(string_split(text, ' ')) AS tok FROM documents
-),
-keys AS (SELECT DISTINCT source, tok FROM toks),
-hv AS (
-  SELECT source,
-         CAST(('0x' || SUBSTRING(MD5(tok), 1, 15)) AS BIGINT) AS h
-  FROM keys
-),
-branches AS (
-  SELECT source AS grp, h FROM hv
-  UNION ALL
-  SELECT '__union__' AS grp, h FROM (SELECT DISTINCT h FROM hv)
-),
-regs AS (
-  SELECT grp, h >> 46 AS idx,
-         MAX(CASE WHEN (h & 70368744177663) = 0 THEN 47
-                  ELSE 47 - length(bin(h & 70368744177663)) END) AS r
-  FROM branches GROUP BY 1, 2
-),
-agg AS (
-  SELECT grp, 16384 - COUNT(*) AS zeros,
-         (0.7213 / (1 + 1.079 / 16384.0)) * 16384.0 * 16384.0
-           / ((16384 - COUNT(*)) * 1.0 + SUM(POWER(2.0, -r))) AS raw
-  FROM regs GROUP BY 1
-),
-est AS (
-  SELECT grp,
-         CASE WHEN raw <= 2.5 * 16384 AND zeros > 0
-              THEN 16384.0 * LN(16384.0 / zeros) ELSE raw END AS e
-  FROM agg
-),
-ex AS (
-  SELECT source AS grp, COUNT(DISTINCT tok) AS n FROM toks GROUP BY 1
-  UNION ALL
-  SELECT '__union__', COUNT(DISTINCT tok) FROM toks
 )
-SELECT grp AS source, ROUND(e.e, 1) AS hll_estimate,
-       CAST(x.n AS BIGINT) AS exact,
-       ROUND(ABS(e.e - x.n) / x.n, 6) AS rel_err
-FROM est e JOIN ex x USING (grp)
-WHERE ROUND(ABS(e.e - x.n) / x.n, 6) < 0.025
+SELECT source, COUNT(DISTINCT tok) AS exact FROM toks GROUP BY source
+UNION ALL
+SELECT '__union__', COUNT(DISTINCT tok) FROM toks
 """
 
 
@@ -6581,197 +6440,139 @@ SELECT table_name, n_total, n_kept, n_total - n_kept AS n_deleted FROM m
 """
 
 
-def kll_quantiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PER-GROUP deterministic quantile sketches in batch (the grouped
-    sibling of kll_quantiles_orders): one md5-compat KLL register set
-    per order priority (sketch/kll.py::kll_compat_by_group — one count
-    job for per-group thresholds, then ONE shuffle-free filtered scan
-    collects every group's <=~2k registers), median + p90 estimates
-    alongside the exact per-group percentiles from ONE aggregate
-    action. EXACT since r13: estimates, ranks, and the within_bound
-    gate are integer/IEEE-replayable by the SQL oracle (VERDICT r12
-    #3 — the hll_distinct_stats md5-mode recipe applied to quantiles;
-    the seeded-compaction KLL build remains available as
-    kll_by_group for deployments that want the tighter O(1/k) bound
-    over replayability)."""
-    from .sketch.kll import kll_compat_by_group
+def _kll_rank_errors(o: DataFrame, keys: list[str], probes) -> DataFrame:
+    """Per ``keys`` group of ``o`` (value column ``v``): ``n``, the exact
+    percentiles ``xs`` at ``probes``, and ``err<i>`` = |R(est) − q| for
+    the k=200 DataSketches KLL estimate ``est`` of probe ``i``, where
+    R(est) = #{v ≤ est}/n is the estimate's exact rank, counted by
+    joining the estimates back to the rows (a 1-row broadcast when
+    ``keys`` is empty)."""
+    ranks_arr = F.array(*[F.lit(q) for q in probes])
+    per = o.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.percentile("v", list(probes)).alias("xs"),
+        F.kll_sketch_get_quantile_double(
+            F.kll_sketch_agg_double("v", KLL_K), ranks_arr
+        ).alias("es"),
+    )
+    on = functools.reduce(
+        lambda a, b: a & b,
+        [F.col(f"o.{k}").eqNullSafe(F.col(f"g.{k}")) for k in keys],
+        F.lit(True),
+    )
+    counted = o.alias("o").join(per.alias("g"), on).groupBy(
+        *[F.col(f"g.{k}").alias(k) for k in keys]
+    ).agg(
+        F.any_value("g.n").alias("n"),
+        F.any_value("g.xs").alias("xs"),
+        *[
+            F.sum((F.col("o.v") <= F.col("g.es")[i]).cast("long")).alias(f"r{i}")
+            for i in range(len(probes))
+        ],
+    )
+    return counted.select(*keys, "n", "xs", *[
+        F.abs(F.col(f"r{i}") / F.col("n") - q).alias(f"err{i}")
+        for i, q in enumerate(probes)
+    ])
 
+
+def kll_quantiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-group quantile sketches in batch (the grouped sibling of
+    kll_quantiles_orders): one ``groupBy`` aggregate builds a k=200
+    DataSketches KLL sketch per order priority next to the exact median
+    and p90, and a priority's row is kept only when both sketch
+    estimates have an exact rank within ``kll_rank_error(200)`` of 0.5
+    and 0.9.  The estimates stay in the plan, so the oracle is the exact
+    percentile SQL and a gate miss shows up as a missing row."""
     t = load_tables(spark, sf_dir)
-    o = t["orders"].select("o_orderpriority", "o_orderkey", "o_totalprice")
-    sketches = kll_compat_by_group(
-        o, "o_orderpriority", "o_orderkey", "o_totalprice", k=200
-    )
-    exact = {
-        r["o_orderpriority"]: (r["n"], r["qs"][0], r["qs"][1])
-        for r in o.where(F.col("o_totalprice").isNotNull())
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("percentile(o_totalprice, array(0.5, 0.9))").alias("qs"),
-        )
-        .collect()
-    }
-    rows = []
-    # None-first sort: NULL priority groups are a real key (ADVICE r7 #1)
-    for p in _null_first(sketches):
-        s = sketches[p]
-        n, ex50, ex90 = exact[p]
-        bound = s.rank_error_bound()
-        est50, est90 = s.quantile(0.5), s.quantile(0.9)
-        rows.append(
-            (p, int(n), float(est50), float(ex50), float(est90),
-             float(ex90),
-             bool(abs(s.rank(ex50) - 0.5) <= bound
-                  and abs(s.rank(ex90) - 0.9) <= bound))
-        )
-    out = spark.createDataFrame(
-        rows,
-        "priority string, n bigint, kll_p50 double, exact_p50 double, "
-        "kll_p90 double, exact_p90 double, within_bound boolean",
-    )
+    o = t["orders"].select(
+        F.col("o_orderpriority").alias("priority"),
+        F.col("o_totalprice").cast("double").alias("v"),
+    ).where(F.col("v").isNotNull())
+    errs = _kll_rank_errors(o, ["priority"], (0.5, 0.9))
+    # δ = 1e-6 per sketch: the documented 99% single-rank error
+    # 2.296/k^0.9723 (1.33% at k=200) times √(ln(1/δ)/ln 100) = 1.73,
+    # the √ln(1/δ) growth of the KLL bound (Karnin–Lang–Liberty 2016)
+    eps = kll_rank_error(KLL_K, delta=1e-6)
     # round IN-PLAN: Python's round() rounds the true binary value
     # while Spark/DuckDB ROUND use the shortest-decimal HALF_UP repr —
     # a .xx5 interpolation midpoint (common: prices have 2 decimals)
     # lands on opposite sides (seen at sf0.001, exact_p50 = .175)
-    return out.where(F.col("within_bound")).select(
+    return errs.where((F.col("err0") <= eps) & (F.col("err1") <= eps)).select(
         "priority", "n",
-        F.round("kll_p50", 2).alias("kll_p50"),
-        F.round("exact_p50", 2).alias("exact_p50"),
-        F.round("kll_p90", 2).alias("kll_p90"),
-        F.round("exact_p90", 2).alias("exact_p90"),
-        "within_bound",
+        F.round(F.col("xs")[0], 2).alias("exact_p50"),
+        F.round(F.col("xs")[1], 2).alias("exact_p90"),
     )
+
+
+KLL_PROBES = (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
 
 
 def kll_quantiles_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic mergeable quantile sketch over o_totalprice: one
-    row per probed quantile with the sketch estimate, the EXACT
-    normalized rank of that estimate, and the rank error. EXACT since
-    r13 (VERDICT r12 #3): the md5-compat mode (sketch/kll.py::
-    KLLCompat) makes every compaction coin a hash bit of the row key
-    and compacts eagerly, collapsing the cascade to the
-    order-independent register set {x : md5_60(key) >> (60-H) == 0}
-    with weight 2^H — the SQL oracle replays registers, estimates,
-    ranks, and the error gate bit-for-bit (the hll/theta/CMS md5-mode
-    precedent). The seeded-compaction KLL (kll_from_dataframe) remains
-    the tight-bound non-replayable path, still covered by
-    tests/test_kll.py and the streaming quantile parity test. Sketch
-    build is eager → EAGER_QUERIES."""
-    from .sketch.kll import kll_compat_from_dataframe
-
+    """Mergeable quantile sketch over o_totalprice: one aggregate builds
+    a k=200 DataSketches KLL sketch next to the exact percentiles at
+    seven probes, and a probe's row (q, exact percentile) is kept only
+    when the sketch's estimate has an exact rank within
+    ``kll_rank_error(200)`` of q.  The KLL build is unseeded, so the
+    gate is probabilistic (δ below); the estimates stay in the plan and
+    the oracle is the exact percentile SQL, so a miss shows up as a
+    missing row."""
     t = load_tables(spark, sf_dir)
-    o = t["orders"].where(F.col("o_totalprice").isNotNull())
-    sketch = kll_compat_from_dataframe(o, "o_orderkey", "o_totalprice", k=200)
-    probes = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
-    ests = {q: sketch.quantile(q) for q in probes}
-    # exact normalized ranks of all 7 estimates in one aggregate action
-    exact = o.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(
-                F.when(F.col("o_totalprice") <= F.lit(ests[q]), 1).otherwise(0)
-            ).alias(f"r_{int(q * 100)}")
-            for q in probes
-        ],
-    ).collect()[0]
-    n = exact["n"]
-    rows = [
-        (
-            float(q),
-            float(ests[q]),
-            float(exact[f"r_{int(q * 100)}"] / n),
-            float(abs(exact[f"r_{int(q * 100)}"] / n - q)),
-        )
-        for q in probes
-    ]
-    out = spark.createDataFrame(
-        rows, "q double, kll_estimate double, exact_rank double, rank_err double"
-    )
+    o = t["orders"].select(F.col("o_totalprice").cast("double").alias("v")) \
+        .where(F.col("v").isNotNull())
+    errs = _kll_rank_errors(o, [], KLL_PROBES)
+    rows = errs.select(F.explode(F.array(*[
+        F.struct(F.lit(q).alias("q"), F.col("xs")[i].alias("x"),
+                 F.col(f"err{i}").alias("err"))
+        for i, q in enumerate(KLL_PROBES)
+    ])).alias("p")).select("p.*")
+    # δ = 1e-6 per sketch: the documented 99% single-rank error
+    # 2.296/k^0.9723 (1.33% at k=200) times √(ln(1/δ)/ln 100) = 1.73,
+    # the √ln(1/δ) growth of the KLL bound (Karnin–Lang–Liberty 2016)
+    eps = kll_rank_error(KLL_K, delta=1e-6)
     # round IN-PLAN (HALF_UP decimal semantics shared with the oracle's
-    # ROUND; Python round() diverges on .xx5 doubles) and gate on the
-    # rounded error, matching the SQL WHERE clause exactly
-    return (
-        out.select(
-            "q",
-            F.round("kll_estimate", 6).alias("kll_estimate"),
-            F.round("exact_rank", 6).alias("exact_rank"),
-            F.round("rank_err", 6).alias("rank_err"),
-        )
-        .where(F.col("rank_err") <= F.lit(float(sketch.rank_error_bound())))
+    # ROUND; Python round() diverges on .xx5 doubles)
+    return rows.where(F.col("err") <= eps).select(
+        "q", F.round("x", 2).alias("exact_quantile")
     )
 
 
-# DuckDB replay of the md5-compat register set: same integer H
-# (MIN b with (ceil(n/k)-1)>>b = 0 ≡ bit_length), same 60-bit hash
-# (first 15 md5 hex chars), same clamp(ceil(q·m),1,m) register rank,
-# same (count << H)/n rank arithmetic, same 3/(2·sqrt(m)) gate.
+# Spark's Percentile interpolation, replicated bit-for-bit:
+# pos = q*(n-1); if floor(pos)=ceil(pos) take the value, else
+# lo*(ceil(pos)-pos) + hi*(pos-floor(pos)) — QUANTILE_CONT's different
+# FP formula lands .xx5 midpoints on the other side of the round-2
+# boundary (seen at sf0.001).
 KLL_QUANTILES_SQL = """
-WITH nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM orders
-            WHERE o_totalprice IS NOT NULL),
-lv AS (SELECT n, (SELECT MIN(b) FROM range(0, 62) t(b)
-                  WHERE ((((n + 199) // 200) - 1) >> b) = 0) AS h FROM nn),
-samp AS (
-  SELECT o_totalprice AS v
-  FROM orders, lv
-  WHERE o_totalprice IS NOT NULL
-    AND (CAST(('0x' || SUBSTRING(MD5(CAST(o_orderkey AS VARCHAR)), 1, 15))
-              AS BIGINT) >> (60 - lv.h)) = 0
-),
-mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM samp),
-srt AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v) AS rn FROM samp),
--- DOUBLE probes: a bare decimal list types DECIMAL in DuckDB — the
--- driver's hash is dtype-sensitive, and DECIMAL q*m is exact decimal
--- arithmetic where Spark's double q*m can ceil differently
+WITH base AS (SELECT o_totalprice AS v FROM orders
+              WHERE o_totalprice IS NOT NULL),
+nn AS (SELECT COUNT(*) AS n FROM base),
+srt AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v) AS rn FROM base),
+-- DOUBLE probes: a bare decimal list types DECIMAL in DuckDB
 probes AS (SELECT UNNEST([0.01::DOUBLE, 0.1::DOUBLE, 0.25::DOUBLE,
                           0.5::DOUBLE, 0.75::DOUBLE, 0.9::DOUBLE,
                           0.99::DOUBLE]) AS q),
-est AS (
-  SELECT p.q, s.v AS est
-  FROM probes p, mm, srt s
-  WHERE s.rn = LEAST(mm.m, GREATEST(1, CAST(CEIL(p.q * mm.m) AS BIGINT)))
-),
-rk AS (
-  SELECT e.q, e.est,
-         (SELECT COUNT(*) FROM orders o
-          WHERE o.o_totalprice <= e.est) * 1.0 / nn.n AS xr
-  FROM est e, nn
+pos AS (SELECT q, q * (n - 1) AS p FROM probes, nn),
+lohi AS (
+  SELECT pos.q, pos.p,
+         MAX(CASE WHEN s.rn = CAST(FLOOR(pos.p) AS BIGINT) + 1 THEN s.v END) AS lo,
+         MAX(CASE WHEN s.rn = CAST(CEIL(pos.p) AS BIGINT) + 1 THEN s.v END) AS hi
+  FROM pos, srt s GROUP BY pos.q, pos.p
 )
-SELECT q, ROUND(est, 6) AS kll_estimate, ROUND(xr, 6) AS exact_rank,
-       ROUND(ABS(xr - q), 6) AS rank_err
-FROM rk, lv
-WHERE ROUND(ABS(xr - q), 6)
-      <= 3.0 * SQRT((CAST(1 AS BIGINT) << lv.h) * 1.0 / lv.n)
+SELECT q,
+       ROUND(CASE WHEN FLOOR(p) = CEIL(p) THEN lo
+                  ELSE lo * (CEIL(p) - p) + hi * (p - FLOOR(p)) END, 2)
+         AS exact_quantile
+FROM lohi
 ORDER BY q
 """
 
 
 KLL_BY_PRIORITY_SQL = """
-WITH base AS (SELECT o_orderpriority AS g, o_totalprice AS v,
-                     CAST(('0x' || SUBSTRING(MD5(CAST(o_orderkey AS VARCHAR)),
-                                             1, 15)) AS BIGINT) AS u
+WITH base AS (SELECT o_orderpriority AS g, o_totalprice AS v
               FROM orders WHERE o_totalprice IS NOT NULL),
 gn AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n FROM base GROUP BY g),
-lv AS (SELECT g, n, (SELECT MIN(b) FROM range(0, 62) t(b)
-                     WHERE ((((n + 199) // 200) - 1) >> b) = 0) AS h FROM gn),
-samp AS (SELECT b.g, b.v
-         FROM base b JOIN lv ON b.g IS NOT DISTINCT FROM lv.g
-         WHERE (b.u >> (60 - lv.h)) = 0),
-gm AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS m FROM samp GROUP BY g),
-srt AS (SELECT g, v,
-               ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS rn
-        FROM samp),
-est AS (
-  SELECT s.g,
-         MAX(CASE WHEN s.rn = LEAST(gm.m, GREATEST(1,
-                    CAST(CEIL(0.5::DOUBLE * gm.m) AS BIGINT))) THEN s.v END) AS e50,
-         MAX(CASE WHEN s.rn = LEAST(gm.m, GREATEST(1,
-                    CAST(CEIL(0.9::DOUBLE * gm.m) AS BIGINT))) THEN s.v END) AS e90
-  FROM srt s JOIN gm ON s.g IS NOT DISTINCT FROM gm.g GROUP BY s.g),
--- exact percentiles replicate Spark's Percentile interpolation
--- bit-for-bit: pos = q*(n-1); if floor(pos)=ceil(pos) take the value,
--- else lo*(ceil(pos)-pos) + hi*(pos-floor(pos)) — QUANTILE_CONT's
--- different FP formula lands .xx5 midpoints on the other side of the
--- round-2 boundary (seen at sf0.001)
+-- exact percentiles with Spark's Percentile interpolation (see
+-- KLL_QUANTILES_SQL)
 exr AS (SELECT g, v, ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS rn
         FROM base),
 exs AS (SELECT r.g,
@@ -6785,34 +6586,17 @@ exs AS (SELECT r.g,
                    THEN r.v ELSE 0 END) AS hi90,
           MAX(gn.n) AS n
         FROM exr r JOIN gn ON r.g IS NOT DISTINCT FROM gn.g
-        GROUP BY r.g),
-ex AS (SELECT g,
-         CASE WHEN FLOOR(0.5::DOUBLE * (n - 1)) = CEIL(0.5::DOUBLE * (n - 1)) THEN lo50
-              ELSE lo50 * (CEIL(0.5::DOUBLE * (n - 1)) - 0.5::DOUBLE * (n - 1))
-                   + hi50 * (0.5::DOUBLE * (n - 1) - FLOOR(0.5::DOUBLE * (n - 1))) END AS x50,
-         CASE WHEN FLOOR(0.9::DOUBLE * (n - 1)) = CEIL(0.9::DOUBLE * (n - 1)) THEN lo90
-              ELSE lo90 * (CEIL(0.9::DOUBLE * (n - 1)) - 0.9::DOUBLE * (n - 1))
-                   + hi90 * (0.9::DOUBLE * (n - 1) - FLOOR(0.9::DOUBLE * (n - 1))) END AS x90
-       FROM exs),
-rk AS (SELECT lv.g, lv.n, lv.h, gm.m, est.e50, est.e90, ex.x50, ex.x90,
-         ((SELECT COUNT(*) FROM samp s2
-           WHERE s2.g IS NOT DISTINCT FROM lv.g AND s2.v <= ex.x50)
-          * (CAST(1 AS BIGINT) << lv.h)) * 1.0 / lv.n AS r50,
-         ((SELECT COUNT(*) FROM samp s2
-           WHERE s2.g IS NOT DISTINCT FROM lv.g AND s2.v <= ex.x90)
-          * (CAST(1 AS BIGINT) << lv.h)) * 1.0 / lv.n AS r90
-       FROM lv
-       JOIN gm ON lv.g IS NOT DISTINCT FROM gm.g
-       JOIN est ON lv.g IS NOT DISTINCT FROM est.g
-       JOIN ex ON lv.g IS NOT DISTINCT FROM ex.g)
-SELECT g AS priority, n, ROUND(e50, 2) AS kll_p50, ROUND(x50, 2) AS exact_p50,
-       ROUND(e90, 2) AS kll_p90, ROUND(x90, 2) AS exact_p90,
-       (ABS(r50 - 0.5) <= 3.0 * SQRT((CAST(1 AS BIGINT) << h) * 1.0 / n)
-        AND ABS(r90 - 0.9)
-            <= 3.0 * SQRT((CAST(1 AS BIGINT) << h) * 1.0 / n)) AS within_bound
-FROM rk
-WHERE ABS(r50 - 0.5) <= 3.0 * SQRT((CAST(1 AS BIGINT) << h) * 1.0 / n)
-  AND ABS(r90 - 0.9) <= 3.0 * SQRT((CAST(1 AS BIGINT) << h) * 1.0 / n)
+        GROUP BY r.g)
+SELECT g AS priority, n,
+       ROUND(CASE WHEN FLOOR(0.5::DOUBLE * (n - 1)) = CEIL(0.5::DOUBLE * (n - 1)) THEN lo50
+                  ELSE lo50 * (CEIL(0.5::DOUBLE * (n - 1)) - 0.5::DOUBLE * (n - 1))
+                       + hi50 * (0.5::DOUBLE * (n - 1) - FLOOR(0.5::DOUBLE * (n - 1))) END, 2)
+         AS exact_p50,
+       ROUND(CASE WHEN FLOOR(0.9::DOUBLE * (n - 1)) = CEIL(0.9::DOUBLE * (n - 1)) THEN lo90
+                  ELSE lo90 * (CEIL(0.9::DOUBLE * (n - 1)) - 0.9::DOUBLE * (n - 1))
+                       + hi90 * (0.9::DOUBLE * (n - 1) - FLOOR(0.9::DOUBLE * (n - 1))) END, 2)
+         AS exact_p90
+FROM exs
 ORDER BY priority
 """
 
@@ -7672,151 +7456,82 @@ UNIGRAM_TRAIN_SQL, UNIGRAM_TOKENIZE_SQL = _unigram_sqls()
 
 
 def theta_sketch_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV/theta distinct SET-OPERATION estimates (sketch/theta.py) —
-    the question HLL cannot answer: per order priority, one k=256
-    sketch of distinct o_custkey is built in a SINGLE bounded two-level
-    fold (theta_by_group), then every priority pair reports distinct /
-    union / intersection / Jaccard ESTIMATES (customer-audience overlap
-    across priorities, J ≈ 0.76 at this fixture).  hash_fn="md5"
-    derives a 60-bit hash from md5's first 15 hex chars, so KMV — pure
-    order statistics over a deterministic hash — is reproduced EXACTLY
-    by the SQL oracle: the estimate columns hash-match, they are not
-    merely row-count-gated (unique among the sketch queries).  An
-    in-query gate additionally pins each per-priority estimate within
-    4·RSE (RSE = 1/sqrt(k−2)) of the exact distinct count.  Sketch
-    builds collect at construction → EAGER_QUERIES."""
-    import itertools
-
-    from .sketch.theta import intersection_estimate, theta_by_group
-
-    K = 256
+    """Theta (KMV) distinct SET-OPERATION estimates — the question HLL
+    cannot answer: per order priority one DataSketches
+    ``theta_sketch_agg`` of distinct o_custkey (lgNomEntries=8, k=256),
+    then for every priority pair the exact distinct counts of A, B,
+    A ∪ B and A ∩ B.  A pair's row is kept only when the sketch
+    estimates of |A|, |B| and |A ∪ B| (``theta_union``) are within
+    ``theta_error(8)`` = 3/√256 of their exact counts and |A ∩ B|
+    (``theta_intersection``) and |A ∖ B| (``theta_difference``) within
+    that fraction of |A ∪ B| — DataSketches states set-operation error
+    against the union.  The estimates stay in the plan, so the oracle
+    is exact SQL and a gate miss shows up as a missing row.  The pair
+    self-join is a non-equi join over one row per priority
+    (SCALAR_BNL_OK)."""
     t = load_tables(spark, sf_dir)
-    orders = t["orders"]
-    sk = theta_by_group(orders, "o_orderpriority", ["o_custkey"], k=K,
-                        hash_fn="md5")
-    # exact keeps NULL groups (the sketch does too, under key None —
-    # ADVICE r7 #1); only NULL key VALUES are dropped, matching
-    # theta_by_group's isNotNull filter on key_cols.
-    exact = {
-        r["o_orderpriority"]: r["n"]
-        for r in orders.where(F.col("o_custkey").isNotNull())
-        .groupBy("o_orderpriority")
-        .agg(F.countDistinct("o_custkey").alias("n"))
-        .collect()
-    }
-    for g, s in sk.items():
-        est, true = s.estimate(), exact[g]
-        assert abs(est - true) <= 4.0 * s.rse() * true + 1e-9, \
-            f"theta estimate out of envelope: {g} est={est} true={true}"
-    rows = []
-    for ta, tb in itertools.combinations(_null_first(sk), 2):
-        a, b = sk[ta], sk[tb]
-        eu = a.merge(b).estimate()
-        ei = intersection_estimate(a, b)
-        rows.append((
-            ta, tb, float(a.estimate()), float(b.estimate()),
-            float(eu), float(ei), float(ei / eu if eu else 0.0),
-        ))
-    out = spark.createDataFrame(
-        rows,
-        "type_a string, type_b string, est_a double, est_b double, "
-        "est_union double, est_inter double, est_jaccard double",
+    d = (
+        t["orders"].where(F.col("o_custkey").isNotNull())
+        .select(F.col("o_orderpriority").alias("p"), F.col("o_custkey").alias("c"))
+        .distinct()
     )
-    # round IN-PLAN (the KLL r13 lesson)
-    return out.select(
-        "type_a", "type_b",
-        *[F.round(c, 4).alias(c) for c in
-          ("est_a", "est_b", "est_union", "est_inter", "est_jaccard")],
+    per = d.groupBy("p").agg(
+        F.theta_sketch_agg("c", THETA_LG_K).alias("sk"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    a, b = per.alias("a"), per.alias("b")
+    pairs = a.join(b, F.col("a.p") < F.col("b.p")).select(
+        F.col("a.p").alias("type_a"), F.col("b.p").alias("type_b"),
+        F.col("a.sk").alias("sk_a"), F.col("b.sk").alias("sk_b"),
+        F.col("a.n").alias("exact_a"), F.col("b.n").alias("exact_b"),
+    )
+    x, y = d.alias("x"), d.alias("y")
+    inter = (
+        x.join(y, (F.col("x.c") == F.col("y.c")) & (F.col("x.p") < F.col("y.p")))
+        .groupBy(F.col("x.p").alias("type_a"), F.col("y.p").alias("type_b"))
+        .agg(F.count(F.lit(1)).alias("exact_inter"))
+    )
+    rows = (
+        pairs.join(inter, ["type_a", "type_b"], "left")
+        .fillna(0, ["exact_inter"])
+        .withColumn("exact_union",
+                    F.col("exact_a") + F.col("exact_b") - F.col("exact_inter"))
+    )
+    eps = F.lit(theta_error(THETA_LG_K))
+    union_n = F.col("exact_union")
+    checks = [
+        (F.col("sk_a"), F.col("exact_a"), F.col("exact_a")),
+        (F.col("sk_b"), F.col("exact_b"), F.col("exact_b")),
+        (F.theta_union("sk_a", "sk_b", THETA_LG_K), union_n, union_n),
+        (F.theta_intersection("sk_a", "sk_b"), F.col("exact_inter"), union_n),
+        (F.theta_difference("sk_a", "sk_b"),
+         F.col("exact_a") - F.col("exact_inter"), union_n),
+    ]
+    within = functools.reduce(lambda p, q: p & q, [
+        F.abs(F.theta_sketch_estimate(sk) - exact) <= eps * scale
+        for sk, exact, scale in checks
+    ])
+    return rows.where(within).select(
+        "type_a", "type_b", "exact_a", "exact_b", "exact_union", "exact_inter"
     )
 
 
-# KMV is deterministic order statistics over the md5-derived 60-bit
-# hash, so the ORACLE replays the whole sketch in SQL: rank the distinct
-# hashes per group, keep the k smallest, theta = the k-th (full space
-# 2^60 when unsaturated), estimate = n·2^60/theta with n the retained
-# values strictly below theta.  Union ranks the distinct union of
-# hashes (KMV mergeability: k-smallest of the union ≡ merge of the
-# k-smallest sets); intersection counts kept_a ∩ kept_b below
-# LEAST(theta_a, theta_b).  All divisions double-typed to mirror the
-# Python float path bit-for-bit.
 THETA_SKETCH_SQL = """
-WITH hv AS (
-  SELECT DISTINCT o_orderpriority AS et,
-         CAST(('0x' || SUBSTRING(MD5(CAST(o_custkey AS VARCHAR)), 1, 15))
-              AS BIGINT) AS h
-  FROM orders
-  WHERE o_custkey IS NOT NULL AND o_orderpriority IS NOT NULL
+WITH d AS (
+  SELECT DISTINCT o_orderpriority AS p, o_custkey AS c
+  FROM orders WHERE o_custkey IS NOT NULL
 ),
-ranked AS (
-  SELECT et, h, ROW_NUMBER() OVER (PARTITION BY et ORDER BY h) AS rn,
-         COUNT(*) OVER (PARTITION BY et) AS cnt
-  FROM hv
-),
-kept AS (SELECT * FROM ranked WHERE rn <= 256),
-marg AS (
-  SELECT et,
-         CASE WHEN MAX(cnt) >= 256 THEN MAX(CASE WHEN rn = 256 THEN h END)
-              ELSE 1152921504606846976 END AS th,
-         CASE WHEN MAX(cnt) >= 256 THEN 255 ELSE MAX(cnt) END AS n
-  FROM kept GROUP BY et
-),
-est AS (
-  SELECT et,
-         n * CAST(1152921504606846976 AS DOUBLE) / CAST(th AS DOUBLE) AS e,
-         th
-  FROM marg
-),
-pairs AS (
-  SELECT a.et AS ta, b.et AS tb, a.e AS ea, a.th AS tha,
-         b.e AS eb, b.th AS thb
-  FROM est a JOIN est b ON a.et < b.et
-),
-uh AS (
-  SELECT p.ta, p.tb, v.h
-  FROM (SELECT DISTINCT ta, tb FROM pairs) p
-  JOIN hv v ON v.et IN (p.ta, p.tb)
-  GROUP BY p.ta, p.tb, v.h
-),
-ur AS (
-  SELECT ta, tb, h,
-         ROW_NUMBER() OVER (PARTITION BY ta, tb ORDER BY h) AS rn,
-         COUNT(*) OVER (PARTITION BY ta, tb) AS cnt
-  FROM uh
-),
-um AS (
-  SELECT ta, tb,
-         CASE WHEN MAX(cnt) >= 256 THEN MAX(CASE WHEN rn = 256 THEN h END)
-              ELSE 1152921504606846976 END AS th,
-         CASE WHEN MAX(cnt) >= 256 THEN 255 ELSE MAX(cnt) END AS n
-  FROM ur WHERE rn <= 256 GROUP BY ta, tb
-),
-uest AS (
-  SELECT ta, tb,
-         n * CAST(1152921504606846976 AS DOUBLE) / CAST(th AS DOUBLE) AS eu
-  FROM um
-),
-icnt AS (
-  SELECT p.ta, p.tb,
-         COUNT(CASE WHEN kb.h < LEAST(p.tha, p.thb) THEN 1 END) AS n
-  FROM pairs p
-  LEFT JOIN kept ka ON ka.et = p.ta
-  LEFT JOIN kept kb ON kb.et = p.tb AND kb.h = ka.h
-  GROUP BY p.ta, p.tb
-),
-iest AS (
-  SELECT i.ta, i.tb,
-         i.n * CAST(1152921504606846976 AS DOUBLE)
-           / CAST(LEAST(p.tha, p.thb) AS DOUBLE) AS ei
-  FROM icnt i JOIN pairs p ON p.ta = i.ta AND p.tb = i.tb
+per AS (SELECT p, COUNT(*) AS n FROM d GROUP BY p),
+inter AS (
+  SELECT x.p AS ta, y.p AS tb, COUNT(*) AS n
+  FROM d x JOIN d y ON x.c = y.c AND x.p < y.p
+  GROUP BY 1, 2
 )
-SELECT p.ta AS type_a, p.tb AS type_b,
-       ROUND(p.ea, 4) AS est_a, ROUND(p.eb, 4) AS est_b,
-       ROUND(u.eu, 4) AS est_union, ROUND(i.ei, 4) AS est_inter,
-       ROUND(CASE WHEN u.eu > 0 THEN i.ei / u.eu ELSE 0.0 END, 4)
-         AS est_jaccard
-FROM pairs p
-JOIN uest u ON u.ta = p.ta AND u.tb = p.tb
-JOIN iest i ON i.ta = p.ta AND i.tb = p.tb
+SELECT a.p AS type_a, b.p AS type_b, a.n AS exact_a, b.n AS exact_b,
+       a.n + b.n - COALESCE(i.n, 0) AS exact_union,
+       COALESCE(i.n, 0) AS exact_inter
+FROM per a JOIN per b ON a.p < b.p
+LEFT JOIN inter i ON i.ta = a.p AND i.tb = b.p
 """
 
 
@@ -10469,7 +10184,6 @@ ORACLES: dict[str, str] = {
 # construction+execution so the reported number includes the eager work.
 # Any new iterative/pre-pass query must be added here (ADVICE r2 #1).
 EAGER_QUERIES = (
-    "theta_sketch_orders",
     # per-round localCheckpoint at plan construction (3^rounds lineage guard)
     "kcore_copurchase",
     "label_propagation_copurchase",
@@ -10512,8 +10226,6 @@ EAGER_QUERIES = (
     "entity_resolution_customers",
     "bloom_membership_orders",
     "skew_join_lineitem_supplier",
-    "kll_quantiles_orders",
-    "hll_union_sources",
     "skew_join_multicol",
     "q3_via_skew_join",
     # _session_cache(ordered, "auto") at plan construction runs an eager
@@ -10527,12 +10239,8 @@ EAGER_QUERIES = (
     # edge-list localCheckpoint at plan construction (lineage truncation
     # ahead of the 10 lazy iterations)
     "pagerank_nations",
-    # HLL sketch builds fold on the driver at plan construction
-    "hll_distinct_stats",
     # seed-centroid collect (8 rows) at plan construction
     "semdedup_embeddings",
-    # per-group sketch builds fold on the driver at plan construction
-    "kll_quantiles_by_priority",
     # merge_upsert's default on_duplicate="error" runs an eager
     # duplicate-source-key check job at plan construction (ADVICE r5 #2)
     "merge_upsert_orders",
@@ -10595,6 +10303,15 @@ SCALAR_BNL_OK = (
     "semdedup_embeddings",  # n_clusters-row centroid table broadcast:
     # each vector fans out exactly x n_clusters for scoring (the IVF
     # assignment shape), bounded by the quantizer size — never data x data
+    "hll_union_sources",  # 1-row union sketch x 1-row exact corpus count
+    "kll_quantiles_orders",  # 1-row KLL estimates broadcast to rank them
+    "theta_sketch_orders",  # a.p < b.p pairs over one sketch row per
+    # priority (5 rows at TPC-H), never data x data
+    # profile_table's two keyless 1-row aggregates cross-joined: it
+    # splits the distinct counts from the decimal/string aggregates so
+    # both stay on the hash-aggregate path (operators/profile.py)
+    "profile_orders",
+    "schema_drift_orders",  # profiles both snapshots with profile_table
 )
 
 # Correct-but-quadratic oracle formulations whose scale-path siblings are

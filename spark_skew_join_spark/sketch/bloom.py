@@ -1,24 +1,25 @@
 """Mergeable Bloom filter (numpy bit array, Kirsch-Mitzenmacher hashing).
 
-Third member of the sketch family (cms.py frequencies, hll.py distinct
-counts): the Bloom filter answers the MEMBERSHIP question a 100 TB
-pipeline asks constantly — "was this URL / doc hash / customer key seen
-before?" — with a fixed-size, associatively mergeable bit array and a
-one-sided error guarantee (no false negatives, bounded false-positive
-rate).  Classic use at scale: seen-URL dedup across crawl shards, and
-shipping a compact membership summary of one table to prefilter another
-without shuffling either.
+Member of the sketch family (cms.py frequencies; Spark's DataSketches
+``hll_sketch_agg`` for distinct counts): the Bloom filter answers the
+MEMBERSHIP question a 100 TB pipeline asks constantly — "was this URL /
+doc hash / customer key seen before?" — with a fixed-size, associatively
+mergeable bit array and a one-sided error guarantee (no false negatives,
+bounded false-positive rate). Classic use at scale: seen-URL dedup
+across crawl shards, and shipping a compact membership summary of one
+table to prefilter another without shuffling either.
 
 Hashing: Spark's JVM ``xxhash64`` with two seeds runs codegen-side; the
 k probe positions derive as h1 + i*h2 (Kirsch & Mitzenmacher 2006 —
 two independent hashes simulate k with no detectable loss), so Python
 only ever sees two 8-byte hashes per row, never the keys.
 
-Spark integration mirrors hll_from_dataframe: column-pruned scan → JVM
-hashes → Arrow batches → numpy per-partition bit arrays → one combine
-stage → driver fold.  Union of Bloom filters over the same (m, k,
-seeds) is bitwise OR — exactly associative, so bloom(A ∪ B) ≡
-bloom(A) | bloom(B) bit-for-bit (pinned in tests/test_bloom.py).
+Spark integration (Spark's ``bloom_filter_agg`` is not a registered
+function): column-pruned scan → JVM hashes → Arrow batches → numpy
+per-partition bit arrays → one combine stage → driver fold. Union of
+Bloom filters over the same (m, k, seeds) is bitwise OR — exactly
+associative, so bloom(A ∪ B) ≡ bloom(A) | bloom(B) bit-for-bit (pinned
+in tests/test_bloom.py).
 
 False-positive envelope for n inserted keys: fp ≈ (1 - e^(-k·n/m))^k;
 ``fp_bound`` below returns it so callers can gate observed rates.
@@ -142,8 +143,8 @@ def _hashed(df, key_cols: list[str], hash_fn: str = "xxhash64"):
     ``hash_fn="md5"``: h1/h2 are the first/second 15 hex chars of one
     md5 (60 bits each) — bit-equal in ANSI SQL
     (``CAST('0x' || SUBSTRING(MD5(key), 1, 15) AS BIGINT)``), so a
-    DuckDB oracle can replay every probe position (the theta-sketch
-    md5-compat precedent). xxhash64 stays the fast default."""
+    DuckDB oracle can replay every probe position. xxhash64 stays the
+    fast default."""
     from pyspark.sql import functions as F
 
     from .cms import spark_key_expr
@@ -167,9 +168,8 @@ def bloom_from_dataframe(df, key_cols: list[str], m_bits: int = 1 << 20,
                          k: int = 7, combine_partitions: int = 8,
                          hash_fn: str = "xxhash64") -> BloomFilter:
     """Distributed Bloom build over the tuple of ``key_cols`` (NULL
-    tuples skipped).  Same two-level mapInPandas shape as
-    hll_from_dataframe: per-partition bit arrays, one hash-partitioned
-    combine stage, bounded driver fold."""
+    tuples skipped).  Two-level mapInPandas: per-partition bit arrays,
+    one hash-partitioned combine stage, bounded driver fold."""
 
     def build(batches):
         import pandas as pd

@@ -1,32 +1,30 @@
-"""Streaming per-key quantile tracking: a KLL sketch as grouped state.
+"""Streaming per-key quantile tracking: a KLL sketch as aggregation state.
 
-The sketch family's streaming composition: each key's
-``applyInPandasWithState`` state is one pickled KLL sketch (O(k)
-floats regardless of stream length), folded with every micro-batch's
-values and queried for the requested quantiles on each update.  This
-is what the mergeable-summary design buys in a stream: per-key
-distributional state that never grows with event volume — the same
-property the batch builder (sketch/kll.py::kll_from_dataframe) uses
-across partitions, applied across TIME.
+Each key's state is one DataSketches KLL sketch (Spark's
+``kll_sketch_agg_double``; O(k) items regardless of stream length),
+kept by a plain update-mode streaming aggregation and queried for the
+requested quantiles on each update.  This is what the mergeable-summary
+design buys in a stream: per-key distributional state that never grows
+with event volume — the property that lets the sketch merge across
+partitions, applied across TIME.
 
-Estimates are approximate within the sketch's normalized rank-error
-envelope (rank_error_bound()); the parity test pins the final
-streamed estimates against exact per-key quantiles of the full feed.
+Estimates are within the sketch's normalized rank error
+(``sketch.bounds.kll_rank_error(k, delta)``; the build is unseeded, so
+the bound holds with probability 1 - delta per sketch); the parity test
+pins the final streamed estimates against exact per-key quantiles of
+the full feed.
 
-Scale: state is ~3k float64 per key; updates touch only keys present
-in the batch.  Event-time semantics are the caller's concern (add a
-watermark upstream if late data must be bounded); the sketch itself is
-order-insensitive, so out-of-order delivery does NOT change the
-estimate distribution — unlike the funnel, no reorder buffer is
-needed.
+Event-time semantics are the caller's concern (add a watermark upstream
+if late data must be bounded); the sketch itself is order-insensitive,
+so out-of-order delivery does NOT change the estimate distribution —
+unlike the funnel, no reorder buffer is needed.
 """
 
 from __future__ import annotations
 
-import pickle
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 
 def streaming_quantiles(
@@ -37,43 +35,22 @@ def streaming_quantiles(
     k: int = 200,
 ) -> DataFrame:
     """(key, n, q_<pct>...) per key, re-emitted every micro-batch the
-    key appears in.  ``quantiles`` become columns named q_50, q_90, ...
-    (percent, trailing zeros trimmed by int cast where exact)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..sketch.kll import KLL
-
+    key appears in (run it in ``update`` mode).  ``quantiles`` become
+    columns named q_50, q_90, ... (percent, trailing zeros trimmed by
+    int cast where exact); ``n`` counts the non-null, non-NaN values,
+    and a key with none has NaN quantiles."""
     if not quantiles:
         raise ValueError("streaming_quantiles: need at least one quantile")
     names = [f"q_{int(q * 100)}" for q in quantiles]
     if len(set(names)) != len(names):
         raise ValueError("quantiles collide at integer-percent names")
-    key_type = events.schema[key_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {key_type}, n bigint, "
-        + ", ".join(f"{c} double" for c in names)
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        sketch = (
-            pickle.loads(state.get[0]) if state.exists else KLL(k=k)
-        )
-        for pdf in pdfs:
-            sketch.add(pdf[value_col].to_numpy(dtype="float64"))
-        state.update((pickle.dumps(sketch),))
-        ests = (
-            {c: [float(sketch.quantile(q))] for c, q in zip(names, quantiles)}
-            if sketch.n
-            else {c: [float("nan")] for c in names}
-        )
-        yield pd.DataFrame({key_col: [key[0]], "n": [sketch.n], **ests})
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="sketch binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    sketch = F.kll_sketch_agg_double(F.col(value_col).cast("double"), k)
+    n = F.kll_sketch_get_n_double(sketch)
+    return events.groupBy(key_col).agg(
+        n.alias("n"),
+        *[
+            F.when(n > 0, F.kll_sketch_get_quantile_double(sketch, F.lit(q)))
+            .otherwise(F.lit(float("nan"))).alias(c)
+            for c, q in zip(names, quantiles)
+        ],
     )

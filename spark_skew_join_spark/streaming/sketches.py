@@ -1,19 +1,15 @@
 """Mergeable sketches as streaming state: HLL distincts, Misra-Gries
-heavy hitters, and KMV theta samples per key.
+heavy hitters, KMV theta sketches and CMS hot keys per key.
 
-Completes the sketches-as-state family begun by streaming/quantiles.py
-(KLL): each grouped ``applyInPandasWithState`` state is one bounded
-summary — O(2^p) registers for distinct counting, O(k) counters for
-frequent items, k minimum hashes for set algebra — folded with every
-micro-batch and re-emitted on update.  The properties that make the batch builders scale across
-partitions (sketch/hll.py, operators/heavy.py) are exactly what a
-stream needs across TIME: state that never grows with event volume,
-order-insensitive folds (no reorder buffer), and estimates with known
-error bounds.
+The properties that make a sketch scale across partitions are exactly
+what a stream needs across TIME: state that never grows with event
+volume, order-insensitive folds (no reorder buffer), and estimates with
+known error bounds.
 
-* ``streaming_distinct`` — per-key distinct-value estimate via an HLL
-  (±~0.81% rse at p=14).  Values are hashed JVM-side (xxhash64) so the
-  Python state update only ever touches 8-byte ints.
+* ``streaming_distinct`` — per-key distinct-value estimate: a plain
+  update-mode streaming aggregation with Spark's DataSketches
+  ``hll_sketch_agg`` as its state (3-sigma error
+  ``sketch.bounds.hll_error(lg_config_k)``, 2.44% at lgConfigK=14).
 * ``streaming_heavy_hitters`` — per-key Misra-Gries top items: lower-
   bound counts that underestimate truth by at most the accumulated
   subtraction error ``err`` (emitted alongside), with the classic
@@ -21,65 +17,55 @@ error bounds.
   summary.  Unlike the batch operator (heavy.py), a stream cannot run
   the exact verify pass — the emitted counts are the (bounded-error)
   summary itself, which is the standard streaming trade.
-* ``streaming_theta`` — per-key KMV sketch (sketch/theta.py) whose
-  SERIALIZED SKETCH is part of every emission (≈ 8·k bytes): unlike
-  the HLL row, a consumer can load two keys' sketches and compute
-  intersections / differences / Jaccard between live audiences, or
-  merge them with batch-built sketches — KMV union is exactly
-  associative, so stream state and offline state compose.
+* ``streaming_theta`` — per-key DataSketches theta sketch
+  (``theta_sketch_agg``) whose compact bytes are part of every
+  emission: a consumer can feed two keys' sketches to
+  ``theta_intersection`` / ``theta_difference`` / ``theta_union`` for
+  set operations between live audiences, or union them with sketches
+  built in batch over the same items.
+* ``streaming_hot_keys`` — the batch ``skew_join`` CMS, sharded, as
+  grouped state.
+
+Values of a type the DataSketches aggregates do not take (anything but
+INT/BIGINT/STRING/BINARY) are sketched as their canonical xxhash64
+(``sketch.cms.key_hash``); null values are skipped.
 
 Event-time semantics are the caller's concern (watermark upstream if
-needed); all three folds are order-insensitive.
+needed); all folds are order-insensitive.
 """
 
 from __future__ import annotations
 
 import pickle
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+from ..sketch.cms import key_hash
+
+_ITEM_TYPES = ("int", "bigint", "string", "binary")
+
+
+def _item(events: DataFrame, value_col: str) -> Column:
+    """The sketch item for ``value_col``: the column itself when the HLL
+    and theta aggregates take its type, else its canonical xxhash64."""
+    if events.schema[value_col].dataType.simpleString() in _ITEM_TYPES:
+        return F.col(value_col)
+    return key_hash([value_col])
 
 
 def streaming_distinct(
     events: DataFrame,
     key_col: str,
     value_col: str,
-    p: int = 14,
+    lg_config_k: int = 14,
 ) -> DataFrame:
     """(key, n_events, distinct_est) per key, re-emitted each
-    micro-batch the key appears in."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..sketch.hll import HyperLogLog
-
-    key_type = events.schema[key_col].dataType.simpleString()
-    out_schema = f"{key_col} {key_type}, n_events bigint, distinct_est double"
-    hashed = events.select(
-        key_col, F.xxhash64(F.col(value_col)).alias("__h")
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.exists:
-            n, blob = state.get
-            sketch = pickle.loads(blob)
-        else:
-            n, sketch = 0, HyperLogLog(p)
-        for pdf in pdfs:
-            n += len(pdf)
-            sketch.add_hashed(pdf["__h"].to_numpy())
-        state.update((n, pickle.dumps(sketch)))
-        yield pd.DataFrame({
-            key_col: [key[0]], "n_events": [n],
-            "distinct_est": [float(sketch.estimate())],
-        })
-
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="n bigint, sketch binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    micro-batch the key appears in (run it in ``update`` mode)."""
+    return events.groupBy(key_col).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.hll_sketch_estimate(
+            F.hll_sketch_agg(_item(events, value_col), lg_config_k)
+        ).cast("double").alias("distinct_est"),
     )
 
 
@@ -149,52 +135,19 @@ def streaming_theta(
     events: DataFrame,
     key_col: str,
     value_col: str,
-    k: int = 1024,
+    lg_nom_entries: int = 10,
 ) -> DataFrame:
     """(key, n_events, distinct_est, sketch) per key, re-emitted each
-    micro-batch the key appears in.  ``sketch`` is the pickled
-    ThetaSketch — load with ``pickle.loads`` and combine with
-    ``theta.intersection_estimate`` / ``merge`` across keys or against
-    batch-built sketches (KMV merge is exactly associative, so online
-    and offline state compose losslessly)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..sketch.theta import ThetaSketch
-
-    key_type = events.schema[key_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {key_type}, n_events bigint, distinct_est double, "
-        "sketch binary"
-    )
-    hashed = events.select(
-        key_col, F.xxhash64(F.col(value_col)).alias("__h")
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.exists:
-            n, blob = state.get
-            sketch = pickle.loads(blob)
-        else:
-            n, sketch = 0, ThetaSketch(k)
-        for pdf in pdfs:
-            n += len(pdf)
-            sketch.add_hashed(pdf["__h"].to_numpy())
-        blob = pickle.dumps(sketch)
-        state.update((n, blob))
-        yield pd.DataFrame({
-            key_col: [key[0]], "n_events": [n],
-            "distinct_est": [float(sketch.estimate())],
-            "sketch": [blob],
-        })
-
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="n bigint, sketch binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    micro-batch the key appears in (run it in ``update`` mode).
+    ``sketch`` is the DataSketches compact theta sketch (k =
+    2^lg_nom_entries, 3-sigma error ``sketch.bounds.theta_error``):
+    combine it with Spark's ``theta_union`` / ``theta_intersection`` /
+    ``theta_difference`` across keys or against batch-built sketches."""
+    sketch = F.theta_sketch_agg(_item(events, value_col), lg_nom_entries)
+    return events.groupBy(key_col).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.theta_sketch_estimate(sketch).cast("double").alias("distinct_est"),
+        sketch.alias("sketch"),
     )
 
 
@@ -235,7 +188,7 @@ def streaming_hot_keys(
     ``max_hot_keys`` candidates — independent of stream length."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..sketch.cms import CountMinSketch, key_hash, spark_key_expr
+    from ..sketch.cms import CountMinSketch, spark_key_expr
 
     hashed = events.select(
         spark_key_expr(key_cols).alias("__k"), key_hash(key_cols).alias("__h")

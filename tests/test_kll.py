@@ -1,240 +1,188 @@
-"""KLL quantile sketch: error bounds, merge behavior, weight
-conservation, and the distributed build."""
+"""KLL quantiles from Spark's DataSketches aggregates
+(``kll_sketch_agg_double`` / ``kll_merge_agg_double`` /
+``kll_sketch_get_quantile_double``), checked against exact ranks.
 
-import functools
-import pickle
+Bound: ``kll_rank_error(k, delta=1e-6)``.  DataSketches documents the
+normalized single-rank error as 2.296/k^0.9723 at 99% confidence (1.33%
+at k=200), so a gate at that value would fail about once per 100
+sketches.  The KLL bound grows as √ln(1/δ) (Karnin, Lang & Liberty
+2016), so scaling it to δ = 1e-6 per sketch multiplies it by
+√(ln 1e6 / ln 100) = √3 ≈ 1.73: 2.30% at k=200.  The build is unseeded,
+so every check here fails with probability at most 1e-6 per sketch.
+"""
 
-import numpy as np
+from __future__ import annotations
+
 import pytest
+from pyspark.sql import functions as F
 
-from spark_skew_join_spark.sketch.kll import KLL, kll_from_dataframe
+from spark_skew_join_spark.sketch.bounds import kll_rank_error
 
 PROBES = (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
+EPS = kll_rank_error(200, delta=1e-6)
 
 
-def _max_rank_err(sketch, data):
-    srt = np.sort(data)
-    errs = []
-    for q in PROBES:
-        est = sketch.quantile(q)
-        errs.append(abs(np.searchsorted(srt, est, side="right") / len(srt) - q))
-    return max(errs)
+def _quantiles(sketch_df, probes=PROBES):
+    """The sketch's estimates at ``probes`` from a 1-row frame ``sk``."""
+    arr = F.array(*[F.lit(q) for q in probes])
+    return sketch_df.select(F.kll_sketch_get_quantile_double("sk", arr)).first()[0]
 
 
-@pytest.mark.parametrize("dist", ["uniform", "pareto", "normal", "discrete"])
-def test_rank_error_within_bound(dist):
-    rng = np.random.default_rng(17)
-    data = {
-        "uniform": rng.uniform(0, 1e6, 200_000),
-        "pareto": rng.pareto(1.5, 200_000),
-        "normal": rng.normal(0, 3, 200_000),
-        "discrete": rng.integers(0, 50, 200_000).astype(float),
-    }[dist]
-    s = KLL(k=200, seed=5)
-    for chunk in np.array_split(data, 23):
-        s.add(chunk)
-    assert s.n == len(data)
-    assert _max_rank_err(s, data) <= s.rank_error_bound()
+def _assert_ranks_within(df, ests, probes=PROBES, eps=EPS):
+    """Each estimate's exact rank interval [#{v < est}, #{v ≤ est}] / n
+    must come within ``eps`` of its probe (an interval, so that ties
+    in discrete data count for the estimate)."""
+    row = df.agg(
+        F.count("v").alias("n"),
+        *[F.sum((F.col("v") < e).cast("long")).alias(f"lo{i}") for i, e in enumerate(ests)],
+        *[F.sum((F.col("v") <= e).cast("long")).alias(f"hi{i}") for i, e in enumerate(ests)],
+    ).first()
+    for i, q in enumerate(probes):
+        lo, hi = row[f"lo{i}"] / row["n"], row[f"hi{i}"] / row["n"]
+        assert lo - eps <= q <= hi + eps, (q, ests[i], lo, hi, eps)
 
 
-def test_merge_any_order_stays_within_bound():
-    """Associativity in the sketch sense: every merge order's estimates
-    respect the same rank-error envelope (bitwise equality is not a KLL
+_DISTS = {
+    "uniform": "rand(17) * 1e6",
+    "pareto": "pow(1 - rand(17), -1 / 1.5) - 1",
+    "normal": "randn(17) * 3",
+    "discrete": "CAST(floor(rand(17) * 50) AS DOUBLE)",
+}
+
+
+@pytest.mark.parametrize("dist", list(_DISTS))
+def test_rank_error_within_bound(spark, dist):
+    df = spark.range(200_000).selectExpr(f"{_DISTS[dist]} AS v").cache()
+    try:
+        sk = df.agg(F.kll_sketch_agg_double("v", 200).alias("sk"))
+        _assert_ranks_within(df, _quantiles(sk))
+    finally:
+        df.unpersist()
+
+
+def test_merge_any_order_stays_within_bound(spark):
+    """``kll_merge_agg_double`` over 12 part sketches, in any input
+    order, respects the same envelope (bitwise equality is not a KLL
     property — compaction is randomized)."""
-    rng = np.random.default_rng(29)
-    data = rng.uniform(0, 1, 150_000)
-    parts = np.array_split(data, 12)
-    sketches = []
-    for p in parts:
-        s = KLL(k=200, seed=11)
-        s.add(p)
-        sketches.append(s)
-    left = functools.reduce(lambda a, b: a.merge(b), sketches)
-    right = functools.reduce(lambda a, b: b.merge(a), reversed(sketches))
-    # pairwise tree merge
-    level = sketches
-    while len(level) > 1:
-        level = [
-            level[i].merge(level[i + 1]) if i + 1 < len(level) else level[i]
-            for i in range(0, len(level), 2)
-        ]
-    tree = level[0]
-    for m in (left, right, tree):
-        assert m.n == len(data)
-        assert _max_rank_err(m, data) <= m.rank_error_bound()
+    df = spark.range(150_000).selectExpr("id % 12 AS part", "rand(29) AS v").cache()
+    try:
+        parts = df.groupBy("part").agg(F.kll_sketch_agg_double("v", 200).alias("sk"))
+        for ordered in (parts.orderBy("part"), parts.orderBy(F.desc("part")),
+                        parts.repartition(5)):
+            merged = ordered.agg(F.kll_merge_agg_double("sk").alias("sk"))
+            assert merged.select(F.kll_sketch_get_n_double("sk")).first()[0] == 150_000
+            _assert_ranks_within(df, _quantiles(merged))
+    finally:
+        df.unpersist()
 
 
-def test_total_weight_conserved_exactly():
-    rng = np.random.default_rng(3)
-    s = KLL(k=64, seed=2)
-    for chunk in np.array_split(rng.normal(size=100_000), 17):
-        s.add(chunk)
-    weight = sum((1 << h) * len(c) for h, c in enumerate(s.compactors))
-    assert weight == s.n == 100_000
-    assert s._size() <= s._max_size()
+def test_total_weight_conserved_exactly(spark):
+    """The sketch's n is the exact count of its non-null items after any
+    number of partial merges."""
+    df = spark.range(100_000).selectExpr(
+        "randn(3) AS v", "id % 17 AS part"
+    ).repartition(9)
+    parts = df.groupBy("part").agg(F.kll_sketch_agg_double("v", 64).alias("sk"))
+    n = parts.agg(F.kll_sketch_get_n_double(F.kll_merge_agg_double("sk"))).first()[0]
+    assert n == 100_000
 
 
-def test_small_stream_is_exact():
-    s = KLL(k=200, seed=1)
-    s.add(np.arange(100, dtype=float))
-    # below capacity nothing compacts: quantiles are exact order stats
-    assert s.quantile(0.0) == 0.0
-    assert s.quantile(0.5) == 49.0
-    assert s.quantile(1.0) == 99.0
-    assert s.rank(49.0) == 0.5
+def test_small_stream_is_exact(spark):
+    # below capacity nothing compacts: quantiles and ranks are exact
+    df = spark.range(100).selectExpr("CAST(id AS DOUBLE) AS v")
+    row = df.agg(F.kll_sketch_agg_double("v", 200).alias("sk")).select(
+        F.kll_sketch_get_quantile_double(
+            "sk", F.array(F.lit(0.0), F.lit(0.5), F.lit(1.0))
+        ).alias("q"),
+        F.kll_sketch_get_rank_double("sk", F.lit(49.0)).alias("r"),
+    ).first()
+    assert row["q"] == [0.0, 49.0, 99.0]
+    assert row["r"] == 0.5
 
 
-def test_nan_skipped_and_guards():
-    s = KLL(k=200)
-    s.add(np.array([1.0, np.nan, 3.0]))
-    assert s.n == 2
-    with pytest.raises(ValueError):
-        s.quantile(1.5)
-    with pytest.raises(ValueError):
-        KLL(k=4)
-    with pytest.raises(ValueError):
-        s.merge(KLL(k=100))
-    with pytest.raises(ValueError):
-        KLL(k=200).quantile(0.5)  # empty
+def test_nan_skipped_and_guards(spark):
+    from pyspark.errors import PySparkException
+
+    df = spark.createDataFrame([(1.0,), (float("nan"),), (3.0,), (None,)], "v double")
+    sk = df.agg(F.kll_sketch_agg_double("v").alias("sk"))
+    assert sk.select(F.kll_sketch_get_n_double("sk")).first()[0] == 2
+    with pytest.raises(PySparkException, match="KLL_SKETCH_INVALID_QUANTILE_RANGE"):
+        sk.select(F.kll_sketch_get_quantile_double("sk", F.lit(1.5))).collect()
+    with pytest.raises(PySparkException, match="KLL_SKETCH_K_OUT_OF_RANGE"):
+        df.agg(F.kll_sketch_agg_double("v", 4)).collect()
+    empty = df.where("v IS NULL").agg(F.kll_sketch_agg_double("v").alias("sk"))
+    with pytest.raises(PySparkException, match="KLL_INVALID_INPUT_SKETCH_BUFFER"):
+        empty.select(F.kll_sketch_get_quantile_double("sk", F.lit(0.5))).collect()
 
 
-def test_pickle_roundtrip():
-    s = KLL(k=128, seed=9)
-    s.add(np.random.default_rng(1).uniform(size=50_000))
-    r = pickle.loads(pickle.dumps(s))
-    assert r.n == s.n and r.k == s.k
-    assert all(np.array_equal(a, b) for a, b in zip(r.compactors, s.compactors))
+def test_sketch_bytes_roundtrip_through_parquet(spark, tmp_path):
+    """A sketch stored as bytes and read back answers as before and
+    still merges (the DataSketches binary format is the state format)."""
+    df = spark.range(50_000).selectExpr("rand(9) AS v")
+    # collect once: every execution of an unseeded build compacts anew
+    blob = df.agg(F.kll_sketch_agg_double("v", 128).alias("sk")).first()["sk"]
+    sk = spark.createDataFrame([(blob,)], "sk binary")
+    before = _quantiles(sk)
+    path = str(tmp_path / "kll")
+    sk.write.parquet(path)
+    back = spark.read.parquet(path)
+    assert _quantiles(back) == before
+    merged = back.unionByName(back).agg(F.kll_merge_agg_double("sk").alias("sk"))
+    assert merged.select(F.kll_sketch_get_n_double("sk")).first()[0] == 100_000
 
 
 def test_distributed_build_matches_exact_quantiles(spark):
     df = spark.range(0, 100_000).selectExpr("CAST(id AS DOUBLE) AS v")
-    s = kll_from_dataframe(df, "v", k=200)
-    assert s.n == 100_000
-    for q in (0.1, 0.5, 0.9):
-        assert abs(s.quantile(q) / 100_000 - q) <= s.rank_error_bound()
+    sk = df.agg(F.kll_sketch_agg_double("v", 200).alias("sk"))
+    assert sk.select(F.kll_sketch_get_n_double("sk")).first()[0] == 100_000
+    for q, est in zip(PROBES, _quantiles(sk)):
+        # values are 0..n-1, so the rank of est is (est + 1) / n
+        assert abs((est + 1) / 100_000 - q) <= EPS, (q, est)
 
 
 def test_kll_by_group_estimates_within_bound(spark):
-    """Grouped two-level fold (ADVICE r5 #4): per-group estimates honor
-    the sketch's rank-error envelope even when groups straddle
-    partitions (each partition folds only its slice of each group)."""
-    from spark_skew_join_spark.sketch.kll import kll_by_group
-
+    """Per-group sketches honor the envelope when groups straddle
+    partitions (each partition builds only its slice of each group)."""
     df = spark.range(0, 90_000).selectExpr(
         "CAST(id % 3 AS STRING) AS grp", "CAST(id AS DOUBLE) AS v"
     ).repartition(11)
-    grouped = kll_by_group(df, "grp", "v", k=200)
-    assert sorted(grouped) == ["0", "1", "2"]
-    for g, s in grouped.items():
-        assert s.n == 30_000
+    arr = F.array(*[F.lit(q) for q in (0.1, 0.5, 0.9)])
+    got = df.groupBy("grp").agg(
+        F.kll_sketch_get_n_double(F.kll_sketch_agg_double("v", 200)).alias("n"),
+        F.kll_sketch_get_quantile_double(
+            F.kll_sketch_agg_double("v", 200), arr
+        ).alias("qs"),
+    ).collect()
+    assert sorted(r["grp"] for r in got) == ["0", "1", "2"]
+    for r in got:
+        assert r["n"] == 30_000
         # group g holds values {g, g+3, g+6, ...}: quantile q ≈ 90000*q
-        for q in (0.1, 0.5, 0.9):
-            assert abs(s.quantile(q) / 90_000 - q) <= s.rank_error_bound()
+        for q, est in zip((0.1, 0.5, 0.9), r["qs"]):
+            assert abs(est / 90_000 - q) <= EPS, (r["grp"], q, est)
 
 
-# ---- md5-compat deterministic mode (VERDICT r12 #3) -----------------
-
-
-def test_compat_level_for_integer_boundaries():
-    from spark_skew_join_spark.sketch.kll import KLLCompat
-
-    k = 200
-    assert KLLCompat.level_for(0, k) == 0
-    assert KLLCompat.level_for(1, k) == 0
-    assert KLLCompat.level_for(k, k) == 0
-    assert KLLCompat.level_for(k + 1, k) == 1
-    assert KLLCompat.level_for(2 * k, k) == 1
-    assert KLLCompat.level_for(2 * k + 1, k) == 2
-    # exact power-of-two boundary a float log2 could mis-round
-    assert KLLCompat.level_for(k * (1 << 20), k) == 20
-    assert KLLCompat.level_for(k * (1 << 20) + 1, k) == 21
-
-
-def test_compat_build_is_partitioning_invariant(spark):
-    """The register set is a pure per-row hash function, so the sketch
-    must be bit-identical regardless of how the input is partitioned —
-    the property the seeded KLL cannot offer and the whole point of
-    compat mode."""
-    from spark_skew_join_spark.sketch.kll import kll_compat_from_dataframe
-
-    rng = np.random.default_rng(7)
-    rows = [(i, float(v)) for i, v in enumerate(rng.uniform(0, 1e6, 5000))]
-    df = spark.createDataFrame(rows, ["id", "v"])
-    a = kll_compat_from_dataframe(df.repartition(1), "id", "v")
-    b = kll_compat_from_dataframe(df.repartition(13, "v"), "id", "v")
-    assert a.n == b.n == 5000 and a.level == b.level
-    assert np.array_equal(a.hashes, b.hashes)
-    assert np.array_equal(a.values, b.values)
-    assert [a.quantile(q) for q in PROBES] == [b.quantile(q) for q in PROBES]
-
-
-def test_compat_merge_equals_rebuild(spark):
-    """Union-then-refilter merge must reproduce the single-pass build
-    register-for-register (the theta-sketch adaptation property)."""
-    from pyspark.sql import functions as F
-
-    from spark_skew_join_spark.sketch.kll import kll_compat_from_dataframe
-
-    rng = np.random.default_rng(11)
-    rows = [(i, float(v)) for i, v in enumerate(rng.normal(0, 50, 8000))]
-    df = spark.createDataFrame(rows, ["id", "v"])
-    full = kll_compat_from_dataframe(df, "id", "v")
-    parts = [
-        kll_compat_from_dataframe(df.where(F.col("id") % 3 == r), "id", "v")
-        for r in range(3)
-    ]
-    merged = parts[0].merge(parts[1]).merge(parts[2])
-    assert merged.n == full.n and merged.level == full.level
-    assert set(zip(merged.hashes.tolist(), merged.values.tolist())) == set(
-        zip(full.hashes.tolist(), full.values.tolist())
-    )
-
-
-def test_compat_rank_error_within_bound(spark):
-    from spark_skew_join_spark.sketch.kll import kll_compat_from_dataframe
-
-    rng = np.random.default_rng(23)
-    data = rng.pareto(1.5, 60_000)
-    rows = [(i, float(v)) for i, v in enumerate(data)]
-    df = spark.createDataFrame(rows, ["id", "v"])
-    s = kll_compat_from_dataframe(df, "id", "v")
-    assert s.n == len(data)
-    srt = np.sort(data)
-    for q in PROBES:
-        est = s.quantile(q)
-        err = abs(np.searchsorted(srt, est, side="right") / len(srt) - q)
-        assert err <= s.rank_error_bound(), (q, err, s.rank_error_bound())
-
-
-def test_compat_by_group_matches_per_group_builds(spark):
-    from pyspark.sql import functions as F
-
-    from spark_skew_join_spark.sketch.kll import (
-        kll_compat_by_group,
-        kll_compat_from_dataframe,
-    )
-
-    rng = np.random.default_rng(3)
-    rows = [
-        (i, ["a", "b", None][i % 3], float(v))
-        for i, v in enumerate(rng.uniform(0, 100, 3000))
-    ]
-    df = spark.createDataFrame(rows, ["id", "g", "v"])
-    grouped = kll_compat_by_group(df, "g", "id", "v")
-    assert set(grouped) == {"a", "b", None}
-    for g, sk in grouped.items():
-        cond = F.col("g").isNull() if g is None else (F.col("g") == g)
-        solo = kll_compat_from_dataframe(df.where(cond), "id", "v")
-        assert sk.n == solo.n and sk.level == solo.level
-        assert np.array_equal(sk.values, solo.values), g
-
-
-def test_compat_by_group_all_null_returns_empty(spark):
-    """ADVICE r13: an all-NULL value column used to crash on an empty
-    when-chain; the contract is an empty dict."""
-    from spark_skew_join_spark.sketch.kll import kll_compat_by_group
-
+def test_by_group_all_null_group_has_empty_sketch(spark):
+    """A group whose values are all NULL keeps its row with n = 0; its
+    quantiles must be guarded, as ``streaming_quantiles`` does."""
     df = spark.range(0, 10).selectExpr(
-        "id % 2 AS g", "id", "CAST(NULL AS DOUBLE) AS v"
+        "id % 2 AS g", "CASE WHEN id % 2 = 0 THEN CAST(NULL AS DOUBLE) "
+        "ELSE CAST(id AS DOUBLE) END AS v"
     )
-    assert kll_compat_by_group(df, "g", "id", "v") == {}
+    n = F.kll_sketch_get_n_double(F.kll_sketch_agg_double("v"))
+    got = {
+        r["g"]: (r["n"], r["med"])
+        for r in df.groupBy("g").agg(
+            n.alias("n"),
+            F.when(n > 0, F.kll_sketch_get_quantile_double(
+                F.kll_sketch_agg_double("v"), F.lit(0.5))).alias("med"),
+        ).collect()
+    }
+    assert got == {0: (0, None), 1: (5, 5.0)}
+
+
+def test_kll_rejects_foreign_sketch_bytes(spark):
+    from pyspark.errors import PySparkException
+
+    hll = spark.range(100).agg(F.hll_sketch_agg("id").alias("sk"))
+    with pytest.raises(PySparkException, match="KLL_INVALID_INPUT_SKETCH_BUFFER"):
+        hll.select(F.kll_sketch_get_n_double("sk")).collect()

@@ -115,6 +115,28 @@ def test_zorder_approx_default_no_window_no_python(spark):
     assert keyed.count() == 5_000
 
 
+def test_approx_quantizer_builds_all_columns_in_one_aggregate(spark):
+    """The approx quantizer reads every column's KLL boundaries from one
+    aggregate: keying on three columns runs no more Spark jobs than
+    keying on one (AQE may split the aggregate into stage jobs)."""
+    df = spark.range(20_000).selectExpr("id % 997 AS x", "id % 101 AS y", "id AS z")
+    sc = spark.sparkContext
+
+    def jobs(cols):
+        group = f"zorder-quantizer-{len(cols)}"
+        sc.setJobGroup(group, "approx quantizer boundaries")
+        try:
+            zorder_key(df, cols, bits=8)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    one = jobs(["x"])
+    assert 1 <= one <= 2
+    assert jobs(["x", "y", "z"]) == one
+
+
 def test_zorder_approx_matches_exact_locality(spark):
     """Locality equivalence (VERDICT r5 #2): the sampled-quantile map
     must produce per-bucket min/max spans statistically equivalent to

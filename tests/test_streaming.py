@@ -549,7 +549,7 @@ def test_streaming_kll_quantiles_track_exact_within_bound(spark, tmp_path):
 
     import numpy as np
 
-    from spark_skew_join_spark.sketch.kll import KLL
+    from spark_skew_join_spark.sketch.bounds import kll_rank_error
     from spark_skew_join_spark.streaming.quantiles import streaming_quantiles
 
     rng = random.Random(19)
@@ -594,7 +594,11 @@ def test_streaming_kll_quantiles_track_exact_within_bound(spark, tmp_path):
             "max_by(q_90, n) AS q_90, max(n) AS n FROM skll GROUP BY k"
         ).collect()
     }
-    bound = KLL(k=200).rank_error_bound()
+    # δ = 1e-6 per sketch: DataSketches' documented 99% single-rank
+    # error 2.296/k^0.9723 (1.33% at k=200) times √(ln(1/δ)/ln 100) =
+    # 1.73, the √ln(1/δ) growth of the KLL bound (Karnin–Lang–Liberty
+    # 2016); six estimates from two unseeded sketches
+    bound = kll_rank_error(200, delta=1e-6)
     for key, vals in per_key.items():
         assert final[key]["n"] == len(vals)
         srt = np.sort(vals)
@@ -661,12 +665,15 @@ def test_bloom_dedup_stream_at_most_once(spark, tmp_path):
 
 
 def test_streaming_distinct_hll_state(spark, tmp_path):
-    """Per-key HLL state across shuffled micro-batches: final estimate
-    within 3σ (rse ≈ 1.04/√2^p) of the exact per-key distinct count."""
+    """Per-key HLL state (``hll_sketch_agg`` as streaming aggregation
+    state) across shuffled micro-batches: final estimate within
+    ``hll_error(14)`` = 3·1.04/√2^14 (three standard errors, Flajolet et
+    al. 2007) of the exact per-key distinct count."""
     import os
     import random
     import time
 
+    from spark_skew_join_spark.sketch.bounds import hll_error
     from spark_skew_join_spark.streaming.sketches import streaming_distinct
 
     rng = random.Random(31)
@@ -705,13 +712,40 @@ def test_streaming_distinct_hll_state(spark, tmp_path):
             "max(n_events) AS n FROM sdist GROUP BY k"
         ).collect()
     }
-    rse = 1.04 / (1 << 14) ** 0.5
     for key, vals in per_key.items():
         exact = len(vals)
         assert final[key]["n"] == sum(1 for r_ in rows if r_[0] == key)
-        assert abs(final[key]["est"] - exact) <= 3 * rse * exact + 2, (
+        assert abs(final[key]["est"] - exact) <= hll_error(14) * exact, (
             key, final[key]["est"], exact
         )
+
+
+def test_streaming_sketch_aggregates_run_in_batch(spark):
+    """The DataSketches-backed streaming functions are plain aggregations,
+    so they run on a batch frame too: a DOUBLE value column (not an HLL
+    item type) is sketched through ``key_hash`` with nulls skipped, and
+    a key whose values are all null reports n = 0 with NaN quantiles."""
+    import math
+
+    from spark_skew_join_spark.sketch.bounds import hll_error
+    from spark_skew_join_spark.streaming.quantiles import streaming_quantiles
+    from spark_skew_join_spark.streaming.sketches import (
+        streaming_distinct,
+        streaming_theta,
+    )
+
+    rows = [("a", float(i % 700)) for i in range(5_000)] + [("a", None)] * 5
+    rows += [("b", None)] * 3
+    df = spark.createDataFrame(rows, "k string, v double")
+    dist = {r["k"]: r for r in streaming_distinct(df, "k", "v").collect()}
+    assert dist["a"]["n_events"] == 5_005 and dist["b"]["n_events"] == 3
+    assert abs(dist["a"]["distinct_est"] - 700) <= hll_error(14) * 700
+    assert dist["b"]["distinct_est"] == 0.0
+    theta = {r["k"]: r for r in streaming_theta(df, "k", "v").collect()}
+    assert theta["a"]["distinct_est"] == 700.0  # below k: exact
+    qs = {r["k"]: r for r in streaming_quantiles(df, "k", "v").collect()}
+    assert qs["a"]["n"] == 5_000 and qs["b"]["n"] == 0
+    assert all(math.isnan(qs["b"][c]) for c in ("q_50", "q_90", "q_99"))
 
 
 def test_streaming_heavy_hitters_mg_state(spark, tmp_path):
@@ -773,19 +807,19 @@ def test_streaming_heavy_hitters_mg_state(spark, tmp_path):
 
 
 def test_streaming_theta_state_equals_batch_sketch(spark, tmp_path):
-    """Per-key KMV state across shuffled micro-batches: the final
-    emitted sketch must be VALUE-IDENTICAL to a batch build over the
-    same rows (order-insensitive, exactly associative fold — a stronger
-    contract than an estimate envelope), and cross-key set operations
-    computed from the emitted blobs must match the batch-side result."""
+    """Per-key theta state (``theta_sketch_agg`` as streaming
+    aggregation state) across shuffled micro-batches: the final emitted
+    sketch must equal a batch ``theta_sketch_agg`` over the same rows —
+    byte for byte, since a theta union keeps the k smallest hashes of
+    its inputs whatever their order — and cross-key set operations on
+    the emitted bytes must hold the theta bounds: |A ∩ B| within
+    3·|A ∪ B|/√k, since DataSketches states set-operation error against
+    the union (RSE ≤ 1/√k, k = 2^lgNomEntries)."""
     import os
-    import pickle
     import random
     import time
 
-    import numpy as np
-
-    from spark_skew_join_spark.sketch.theta import intersection_estimate
+    from spark_skew_join_spark.sketch.bounds import theta_error
     from spark_skew_join_spark.streaming.sketches import streaming_theta
 
     rng = random.Random(47)
@@ -808,7 +842,7 @@ def test_streaming_theta_state_equals_batch_sketch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1).parquet(src)
     )
     q = (
-        streaming_theta(stream, "k", "v", k=512)
+        streaming_theta(stream, "k", "v", lg_nom_entries=9)
         .writeStream.outputMode("update").format("memory")
         .queryName("stheta").start()
     )
@@ -816,38 +850,30 @@ def test_streaming_theta_state_equals_batch_sketch(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    final = {
-        r["k"]: r for r in spark.sql(
-            "SELECT k, max_by(sketch, n_events) AS sketch, "
-            "max(n_events) AS n FROM stheta GROUP BY k"
-        ).collect()
-    }
-    batch_df = spark.createDataFrame(rows, "k string, v long")
-    from pyspark.sql import functions as F
-
-    from spark_skew_join_spark.sketch.theta import ThetaSketch
-
+    final = spark.sql(
+        "SELECT k, max_by(sketch, n_events) AS sketch, "
+        "max_by(distinct_est, n_events) AS est, max(n_events) AS n "
+        "FROM stheta GROUP BY k"
+    )
+    batch = spark.createDataFrame(rows, "k string, v long").groupBy("k").agg(
+        F.theta_sketch_agg("v", 9).alias("sketch"), F.count("v").alias("n")
+    )
+    got = {r["k"]: r for r in final.collect()}
+    want = {r["k"]: r for r in batch.collect()}
     for key in ("a", "b"):
-        streamed = pickle.loads(bytes(final[key]["sketch"]))
-        # the streaming fold hashes the raw value column (xxhash64(v)),
-        # so the bit-equality reference folds the same raw hashes
-        raw = batch_df.where(f"k = '{key}'").select(
-            F.xxhash64("v").alias("h")
-        ).toPandas()["h"].to_numpy()
-        expect = ThetaSketch(512)
-        expect.add_hashed(raw)
-        assert np.array_equal(streamed.values, expect.values), key
-        assert final[key]["n"] == sum(1 for r_ in rows if r_[0] == key)
-    # cross-key set algebra from the emitted blobs
-    sa = pickle.loads(bytes(final["a"]["sketch"]))
-    sb = pickle.loads(bytes(final["b"]["sketch"]))
-    true_inter = len(
-        {v for k_, v in rows if k_ == "a"} & {v for k_, v in rows if k_ == "b"}
-    )
-    est = intersection_estimate(sa, sb)
-    assert abs(est - true_inter) <= 6 * sa.rse() * true_inter + 5, (
-        est, true_inter
-    )
+        assert bytes(got[key]["sketch"]) == bytes(want[key]["sketch"]), key
+        assert got[key]["n"] == want[key]["n"]
+    # cross-key set algebra from the emitted bytes
+    fa = final.where("k = 'a'").select(F.col("sketch").alias("sa"))
+    fb = final.where("k = 'b'").select(F.col("sketch").alias("sb"))
+    est = fa.crossJoin(fb).select(
+        F.theta_sketch_estimate(F.theta_intersection("sa", "sb"))
+    ).first()[0]
+    set_a = {v for k_, v in rows if k_ == "a"}
+    set_b = {v for k_, v in rows if k_ == "b"}
+    true_inter, true_union = len(set_a & set_b), len(set_a | set_b)
+    assert abs(est - true_inter) <= theta_error(9) * true_union, (est, true_inter)
+    assert abs(got["a"]["est"] - len(set_a)) <= theta_error(9) * len(set_a)
 
 
 def test_streaming_hot_keys_cms_state(spark, tmp_path):

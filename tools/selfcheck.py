@@ -80,6 +80,46 @@ def norm_rows(cols, rows, quant):
     return out
 
 
+def compare(sdf, con, sql: str) -> str:
+    """EXACT / CLOSE / a failure label for a Spark frame against its
+    oracle SQL run on ``con``; "Usage" above describes each label."""
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    try:
+        cur = con.execute(sql)
+        dcols = [d[0] for d in cur.description]
+        drows = cur.fetchall()
+        dtyped = dict(
+            (r[0], r[1])
+            for r in con.execute(f"DESCRIBE {sql}").fetchall()
+        )
+    except Exception as e:
+        return f"DUCK-ERROR {type(e).__name__}: {str(e).splitlines()[0][:140]}"
+    if sorted(scols) != sorted(dcols):
+        return f"COLS-MISMATCH spark={sorted(scols)} duck={sorted(dcols)}"
+    styped = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
+    badcols = [
+        (c, styped[c], dtyped[c])
+        for c in scols
+        if _kind_spark(styped[c]) != _kind_duck(dtyped[c])
+        and "other" not in (_kind_spark(styped[c]), _kind_duck(dtyped[c]))
+    ]
+    if badcols:
+        return f"DTYPE-MISMATCH {badcols} (driver hash is type-sensitive)"
+    if len(srows) != len(drows):
+        return f"COUNT-MISMATCH spark={len(srows)} duck={len(drows)}"
+    se, de = norm_rows(scols, srows, False), norm_rows(dcols, drows, False)
+    if se == de:
+        return f"EXACT n={len(srows)}"
+    sq, dq = norm_rows(scols, srows, True), norm_rows(dcols, drows, True)
+    if sq == dq:
+        return f"CLOSE n={len(srows)} (floats differ below 9 sig digits)"
+    diff = next(
+        (i, a, b) for i, (a, b) in enumerate(zip(sq, dq)) if a != b
+    )
+    return f"MISMATCH n={len(srows)} first-diff@{diff[0]}\n    spark: {diff[1]}\n    duck:  {diff[2]}"
+
+
 def main():
     only = set(sys.argv[2:])
     import __spark_entry__ as entrymod
@@ -93,53 +133,12 @@ def main():
             continue
         try:
             sdf = fn(spark, SF_DIR)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            if name not in oracles:
+                results[name] = f"ROWS-ONLY n={sdf.count()}"
+                continue
+            results[name] = compare(sdf, con, oracles[name])
         except Exception as e:
             results[name] = f"SPARK-ERROR {type(e).__name__}: {str(e).splitlines()[0][:140]}"
-            continue
-        if name not in oracles:
-            results[name] = f"ROWS-ONLY n={len(srows)}"
-            continue
-        try:
-            cur = con.execute(oracles[name])
-            dcols = [d[0] for d in cur.description]
-            drows = cur.fetchall()
-            dtyped = dict(
-                (r[0], r[1])
-                for r in con.execute(f"DESCRIBE {oracles[name]}").fetchall()
-            )
-        except Exception as e:
-            results[name] = f"DUCK-ERROR {type(e).__name__}: {str(e).splitlines()[0][:140]}"
-            continue
-        if sorted(scols) != sorted(dcols):
-            results[name] = f"COLS-MISMATCH spark={sorted(scols)} duck={sorted(dcols)}"
-            continue
-        styped = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-        badcols = [
-            (c, styped[c], dtyped[c])
-            for c in scols
-            if _kind_spark(styped[c]) != _kind_duck(dtyped[c])
-            and "other" not in (_kind_spark(styped[c]), _kind_duck(dtyped[c]))
-        ]
-        if badcols:
-            results[name] = f"DTYPE-MISMATCH {badcols} (driver hash is type-sensitive)"
-            continue
-        if len(srows) != len(drows):
-            results[name] = f"COUNT-MISMATCH spark={len(srows)} duck={len(drows)}"
-            continue
-        se, de = norm_rows(scols, srows, False), norm_rows(dcols, drows, False)
-        if se == de:
-            results[name] = f"EXACT n={len(srows)}"
-            continue
-        sq, dq = norm_rows(scols, srows, True), norm_rows(dcols, drows, True)
-        if sq == dq:
-            results[name] = f"CLOSE n={len(srows)} (floats differ below 9 sig digits)"
-        else:
-            diff = next(
-                (i, a, b) for i, (a, b) in enumerate(zip(sq, dq)) if a != b
-            )
-            results[name] = f"MISMATCH n={len(srows)} first-diff@{diff[0]}\n    spark: {diff[1]}\n    duck:  {diff[2]}"
     width = max(len(n) for n in results)
     for name, res in results.items():
         print(f"{name:<{width}}  {res}")
