@@ -53,7 +53,9 @@ CONNECT_ESCAPES: dict[str, tuple[str, str]] = {
     ),
     "spark_skew_join_spark/operators/skew_join.py": (
         "graceful-fallback",
-        "uses only APIs Connect has: the pre-pass fetches with toArrow, "
+        "uses only APIs Connect has: the broadcast gate reads the plain "
+        "join's physical plan through the public DataFrame.explain() text "
+        "(no _jdf), the pre-pass fetches with toArrow, "
         "the hot-key table is createDataFrame(Arrow table), the fit test "
         "reads spark.sql.autoBroadcastJoinThreshold through spark.conf and "
         "the row width from df.schema; the replication cap reads "

@@ -9,11 +9,16 @@ DuckDB oracle. Schema comparison stays order- and nullability-insensitive
 like the reference (a set of (name, dataType)).
 
 Driver-side only — collect both frames; use on small test data.
+
+``skew_join_decisions`` collects the decision records ``skew_join`` logs,
+so a test can assert which strategy a call took.
 """
 
 from __future__ import annotations
 
+import logging
 import math
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -63,3 +68,29 @@ def assert_df_equal(
     )
     for i, (ar, er) in enumerate(zip(a_rows, e_rows)):
         assert ar == er, f"first differing row (sorted order, idx {i}):\n  actual:   {ar}\n  expected: {er}"
+
+
+class _Collect(logging.Handler):
+    def __init__(self, into: list) -> None:
+        super().__init__(logging.INFO)
+        self.into = into
+
+    def emit(self, record: logging.LogRecord) -> None:
+        if hasattr(record, "skew_join"):
+            self.into.append(record.skew_join)
+
+
+@contextmanager
+def skew_join_decisions():
+    """Yield a list that collects the ``Decision`` of every ``skew_join``
+    call made inside the block, in call order."""
+    got: list = []
+    logger = logging.getLogger("spark_skew_join_spark.operators.skew_join")
+    handler, level = _Collect(got), logger.level
+    logger.addHandler(handler)
+    logger.setLevel(logging.INFO)
+    try:
+        yield got
+    finally:
+        logger.removeHandler(handler)
+        logger.setLevel(level)

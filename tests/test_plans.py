@@ -18,6 +18,7 @@ from spark_skew_join_spark.plans.explain import (
     scan_schemas,
 )
 from spark_skew_join_spark.sources.tables import load_tables
+from spark_skew_join_spark.testing import skew_join_decisions
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -40,9 +41,29 @@ def test_column_pruning(spark):
 
 
 def test_skew_join_plan_is_udf_free_and_broadcasts(spark):
+    """At sf0.001 the supplier table is under the broadcast threshold, so
+    Catalyst plans the plain join as a broadcast hash join and skew_join
+    returns that join unchanged: no Python, and the broadcast is Catalyst's
+    own."""
     t = load_tables(spark, SF)
     conf = SkewJoinConf(replication_factor=0.01, hot_threshold=100)
-    j = skew_join(t["lineitem"], t["supplier"], [("l_suppkey", "s_suppkey")], "inner", conf)
+    with skew_join_decisions() as got:
+        j = skew_join(t["lineitem"], t["supplier"], [("l_suppkey", "s_suppkey")], "inner", conf)
+    assert [d.strategy for d in got] == ["broadcast"]
+    assert not has_python_udf(j), "skew_join must stay JVM-side"
+    assert has_broadcast_join(j), "Catalyst's plain join should broadcast the supplier table"
+
+
+def test_skew_join_split_plan_is_udf_free_and_broadcasts(spark):
+    """With a merge hint the plain join is a sort-merge join, so skew_join
+    takes the hot/cold split: its hot-key table and the smaller hot
+    fragment are broadcast, and no Python runs anywhere in the plan."""
+    t = load_tables(spark, SF)
+    conf = SkewJoinConf(replication_factor=0.01, hot_threshold=100)
+    supplier = t["supplier"].hint("merge")
+    with skew_join_decisions() as got:
+        j = skew_join(t["lineitem"], supplier, [("l_suppkey", "s_suppkey")], "inner", conf)
+    assert [d.strategy for d in got] == ["split_broadcast"]
     assert not has_python_udf(j), "skew_join hot path must stay JVM-side"
     assert has_broadcast_join(j), "hot-key map attach should be a broadcast join"
 

@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 
 from spark_skew_join_spark import SkewJoinConf, SkewType, skew_join
 from spark_skew_join_spark.operators.diagnostics import partition_stats
-from spark_skew_join_spark.testing import assert_df_equal
+from spark_skew_join_spark.operators.skew_join import Decision
+from spark_skew_join_spark.testing import assert_df_equal, skew_join_decisions
 
 
 # conf that actually triggers salting on the 20k-row fixtures: a key is hot
@@ -32,17 +33,32 @@ def plain(left, right, on, how):
     return out.select(*order)
 
 
+SPLIT = ("split_broadcast", "split_salted")
+
+
+def assert_split_matches_plain(left, right, on, how, conf, *, expected=None, strategies=SPLIT):
+    """``skew_join`` equals the plain join as a multiset, and its decision
+    record shows that the call took one of ``strategies``: by default the
+    hot/cold split, so an equivalence test cannot quietly compare
+    Catalyst's own join with itself. Returns the ``skew_join`` result."""
+    with skew_join_decisions() as got:
+        actual = skew_join(left, right, on, how, conf)
+    assert len(got) == 1 and got[0].strategy in strategies, got
+    if expected is None:
+        expected = plain(left, right, [on] if isinstance(on, str) else on, how)
+    assert_df_equal(actual, expected)
+    return actual
+
+
 @pytest.mark.parametrize("how", ["inner", "left", "right", "full"])
 def test_join_types_zipf(spark, zipf_left, uniform_right, how):
-    actual = skew_join(zipf_left, uniform_right, "k", how, TEST_CONF)
-    assert_df_equal(actual, plain(zipf_left, uniform_right, ["k"], how))
+    assert_split_matches_plain(zipf_left, uniform_right, "k", how, TEST_CONF)
 
 
 @pytest.mark.parametrize("how", ["left_semi", "left_anti"])
 def test_semi_anti(spark, zipf_left, uniform_right, how):
-    actual = skew_join(zipf_left, uniform_right, "k", how, TEST_CONF)
     expected = zipf_left.join(uniform_right, on=["k"], how=how)
-    assert_df_equal(actual, expected)
+    assert_split_matches_plain(zipf_left, uniform_right, "k", how, TEST_CONF, expected=expected)
 
 
 @pytest.mark.slow
@@ -50,8 +66,7 @@ def test_cross_skew_both_sides(spark, zipf_left, zipf_right):
     # bound the blowup: restrict right to keys > 3 (hot keys 1..3 excluded
     # on one side keeps output manageable while still exercising CrossSkew)
     r = zipf_right.where(F.col("k") > 2)
-    actual = skew_join(zipf_left, r, "k", "inner", TEST_CONF)
-    assert_df_equal(actual, plain(zipf_left, r, ["k"], "inner"))
+    assert_split_matches_plain(zipf_left, r, "k", "inner", TEST_CONF)
 
 
 @pytest.mark.parametrize("skew_type", [SkewType.LEFT, SkewType.RIGHT, SkewType.CROSS])
@@ -59,14 +74,15 @@ def test_skew_type_gating(spark, zipf_left, uniform_right, skew_type):
     conf = SkewJoinConf(
         replication_factor=0.1, hot_threshold=20, skew_type=skew_type
     )
-    actual = skew_join(zipf_left, uniform_right, "k", "inner", conf)
-    assert_df_equal(actual, plain(zipf_left, uniform_right, ["k"], "inner"))
+    # only the left side is skewed, so gating it off leaves no hot key
+    want = ("no_hot_keys",) if skew_type == SkewType.RIGHT else SPLIT
+    assert_split_matches_plain(zipf_left, uniform_right, "k", "inner", conf, strategies=want)
 
 
 def test_pair_on_different_names(spark, zipf_left, uniform_right):
     r = uniform_right.withColumnRenamed("k", "rk")
-    actual = skew_join(zipf_left, r, [("k", "rk")], "inner", TEST_CONF)
-    assert_df_equal(actual, plain(zipf_left, uniform_right, ["k"], "inner"))
+    expected = plain(zipf_left, uniform_right, ["k"], "inner")
+    assert_split_matches_plain(zipf_left, r, [("k", "rk")], "inner", TEST_CONF, expected=expected)
 
 
 def test_multi_column_key_and_concat_collision(spark):
@@ -81,8 +97,7 @@ def test_multi_column_key_and_concat_collision(spark):
         "k1 string, k2 string, tag string",
     )
     conf = SkewJoinConf(replication_factor=0.1, hot_threshold=10)
-    actual = skew_join(left, right, ["k1", "k2"], "inner", conf)
-    assert_df_equal(actual, plain(left, right, ["k1", "k2"], "inner"))
+    actual = assert_split_matches_plain(left, right, ["k1", "k2"], "inner", conf)
     # collision pair must NOT cross-match
     bad = actual.where((F.col("k1") == "ab") & (F.col("tag") == "m3")).count()
     assert bad == 0
@@ -98,8 +113,7 @@ def test_null_keys(spark):
     )
     conf = SkewJoinConf(replication_factor=0.1, hot_threshold=10)
     for how in ("inner", "left", "full"):
-        actual = skew_join(left, right, "k", how, conf)
-        assert_df_equal(actual, plain(left, right, ["k"], how))
+        assert_split_matches_plain(left, right, "k", how, conf)
 
 
 def test_outer_disjoint_ranges(spark):
@@ -113,8 +127,7 @@ def test_outer_disjoint_ranges(spark):
     )
     conf = SkewJoinConf(replication_factor=0.5, hot_threshold=3)
     for how in ("left", "right", "full"):
-        actual = skew_join(left, right, "k", how, conf)
-        assert_df_equal(actual, plain(left, right, ["k"], how))
+        assert_split_matches_plain(left, right, "k", how, conf)
 
 
 def test_empty_side(spark, uniform_right):
@@ -132,7 +145,7 @@ def test_duplicate_rows_multiplicity(spark):
     left = spark.createDataFrame([(1, "same")] * 40, "k bigint, v string")
     right = spark.createDataFrame([(1, "r"), (1, "r")], "k bigint, t string")
     conf = SkewJoinConf(replication_factor=0.2, hot_threshold=5)
-    actual = skew_join(left, right, "k", "inner", conf)
+    actual = assert_split_matches_plain(left, right, "k", "inner", conf)
     assert actual.count() == 80  # 40 × 2 — exactly-once pair matching
 
 
@@ -143,8 +156,7 @@ def test_estimator_cms(spark, zipf_left, uniform_right):
         estimator="cms",
         sample_fraction=0.5,
     )
-    actual = skew_join(zipf_left, uniform_right, "k", "inner", conf)
-    assert_df_equal(actual, plain(zipf_left, uniform_right, ["k"], "inner"))
+    assert_split_matches_plain(zipf_left, uniform_right, "k", "inner", conf)
 
 
 @pytest.mark.parametrize("estimator", ["cms", "sample"])
@@ -174,8 +186,7 @@ def test_estimator_outer_join_exact(spark, estimator, how):
     for left, right in ((only, other), (other, only)):
         with warnings.catch_warnings():
             warnings.simplefilter("error")
-            actual = skew_join(left, right, "k", how, conf)
-        assert_df_equal(actual, plain(left, right, ["k"], how))
+            assert_split_matches_plain(left, right, "k", how, conf)
 
 
 def test_estimator_sample(spark, zipf_left, uniform_right):
@@ -185,8 +196,7 @@ def test_estimator_sample(spark, zipf_left, uniform_right):
         estimator="sample",
         sample_fraction=0.5,
     )
-    actual = skew_join(zipf_left, uniform_right, "k", "inner", conf)
-    assert_df_equal(actual, plain(zipf_left, uniform_right, ["k"], "inner"))
+    assert_split_matches_plain(zipf_left, uniform_right, "k", "inner", conf)
 
 
 @pytest.mark.parametrize(
@@ -228,8 +238,7 @@ def test_cms_hot_keys_match_exact_on_non_string_keys(spark, dtype, freqs):
     want = fragments(exact)
     assert set(want) == set(freqs)
     assert fragments(cms) == want
-    actual = skew_join(left, right, "k", "inner", cms)
-    assert_df_equal(actual, plain(left, right, ["k"], "inner"))
+    assert_split_matches_plain(left, right, "k", "inner", cms)
 
 
 @contextmanager
@@ -257,9 +266,12 @@ def test_salting_actually_fragments(spark, zipf_left, uniform_right):
             "spark.sql.autoBroadcastJoinThreshold": broadcast_limit,
         }):
             shuffled = zipf_left.join(uniform_right.hint("merge"), "k")
-            split = skew_join(zipf_left, uniform_right, "k", "inner", TEST_CONF)
+            with skew_join_decisions() as got:
+                split = skew_join(zipf_left, uniform_right, "k", "inner", TEST_CONF)
             s_plain = partition_stats(shuffled.where(F.col("k") == top))
             s_skew = partition_stats(split.where(F.col("k") == top))
+        want = "split_salted" if broadcast_limit == "-1" else "split_broadcast"
+        assert [d.strategy for d in got] == [want]
         assert s_plain.total_records == s_skew.total_records > 0
         assert s_plain.max == s_plain.total_records, "plain shuffle join should not spread the key"
         assert s_skew.max < s_skew.total_records, f"hot key in one partition at {broadcast_limit}"
@@ -293,11 +305,10 @@ def test_key_hot_on_both_sides(spark, how, broadcast_limit):
     conf = SkewJoinConf(replication_factor=0.1, hot_threshold=20)
     with _spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": broadcast_limit}):
         for left, right in ((a, b), (b, a)):
-            actual = skew_join(left, right, "k", how, conf)
+            actual = assert_split_matches_plain(left, right, "k", how, conf)
             if how == "inner" and broadcast_limit == "1024":
                 plan = actual._jdf.queryExecution().executedPlan().toString()
                 assert "Generate explode" in plan, "hot key did not take the salted path"
-            assert_df_equal(actual, plain(left, right, ["k"], how))
 
 
 def test_replication_vectorized_matches_scalar_formula():
@@ -320,7 +331,35 @@ def test_hot_key_table_is_a_local_relation(spark, estimator, broadcast_limit):
     """The hot-key table is built from the pre-pass's Arrow result, so the
     executed plan scans it as a LocalTableScan: no RDD built from Python
     rows and no Python evaluation anywhere in the join. The inputs come
-    from ``spark.range`` so that any RDD scan would be the hot table's."""
+    from ``spark.range`` so that any RDD scan would be the hot table's.
+    ``spark.range`` inputs are small enough for Catalyst to broadcast, so
+    the right side carries a merge hint: the plain join is then a
+    sort-merge join and the call takes the split, as its record shows."""
+    left = spark.range(4_000).select(
+        F.when(F.col("id") % 2 == 0, 1).otherwise(F.col("id")).alias("k"),
+        F.col("id").alias("v"),
+    )
+    right = spark.range(1, 4_000).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("w")
+    ).hint("merge")
+    conf = SkewJoinConf(replication_factor=0.1, hot_threshold=20, estimator=estimator)
+    with _spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": broadcast_limit}):
+        with skew_join_decisions() as got:
+            actual = skew_join(left, right, "k", "inner", conf)
+        rows = actual.collect()
+        plan = actual._jdf.queryExecution().executedPlan().toString()
+    want = "split_salted" if broadcast_limit == "-1" else "split_broadcast"
+    assert [d.strategy for d in got] == [want]
+    assert len(rows) == left.join(right, "k").count()
+    assert "LocalTableScan" in plan, plan
+    for node in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert node not in plan, f"{node} in the skew_join plan:\n{plan}"
+    assert ("Generate explode" in plan) == (broadcast_limit == "-1")
+
+
+def _broadcastable_inputs(spark):
+    """``spark.range`` inputs small enough for Catalyst to broadcast their
+    plain join, with key 1 on half the left rows (hot at ``TEST_CONF``)."""
     left = spark.range(4_000).select(
         F.when(F.col("id") % 2 == 0, 1).otherwise(F.col("id")).alias("k"),
         F.col("id").alias("v"),
@@ -328,16 +367,76 @@ def test_hot_key_table_is_a_local_relation(spark, estimator, broadcast_limit):
     right = spark.range(1, 4_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("w")
     )
-    conf = SkewJoinConf(replication_factor=0.1, hot_threshold=20, estimator=estimator)
-    with _spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": broadcast_limit}):
-        actual = skew_join(left, right, "k", "inner", conf)
-        rows = actual.collect()
-        plan = actual._jdf.queryExecution().executedPlan().toString()
-    assert len(rows) == left.join(right, "k").count()
-    assert "LocalTableScan" in plan, plan
-    for node in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, f"{node} in the skew_join plan:\n{plan}"
-    assert ("Generate explode" in plan) == (broadcast_limit == "-1")
+    return left, right
+
+
+@contextmanager
+def _job_group(spark, group: str):
+    """Run the block in a Spark job group; yields a function that lists
+    the ids of the jobs the group has run so far."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.parametrize("how", ["inner", "left_anti", "left"])
+def test_broadcast_plan_is_returned_without_a_job(spark, how):
+    """When Catalyst already plans the plain join as a broadcast hash join
+    there is no shuffle partition to de-skew: ``skew_join`` returns that
+    join. The call runs no Spark job (no pre-pass), its record says
+    ``broadcast``, and the output equals the plain join."""
+    left, right = _broadcastable_inputs(spark)
+    with _job_group(spark, f"skew_join-gate-{how}") as jobs:
+        with skew_join_decisions() as got:
+            actual = skew_join(left, right, "k", how, TEST_CONF)
+        assert jobs() == []
+    assert got == [Decision("broadcast", "exact")]
+    assert_df_equal(actual, plain(left, right, ["k"], how))
+
+
+def test_gate_reads_the_top_join_when_an_input_is_a_join(spark):
+    """The gate reads the first join operator of the explain() tree, which
+    is printed in pre-order: a broadcast join inside an input does not make
+    a sort-merge top join look broadcast, and a broadcast top join is seen
+    above a sort-merge input."""
+    from spark_skew_join_spark.operators.skew_join import _plans_broadcast
+
+    left, right = _broadcastable_inputs(spark)
+    dim = spark.range(10).select(F.col("id").alias("k"), F.col("id").alias("d"))
+    bhj_input = left.join(dim, "k")
+    smj_input = left.join(dim.hint("merge"), "k")
+    assert _plans_broadcast(bhj_input) and not _plans_broadcast(smj_input)
+    assert not _plans_broadcast(bhj_input.join(right.hint("merge"), "k"))
+    assert _plans_broadcast(smj_input.join(right, "k"))
+
+
+@pytest.mark.parametrize(
+    "how, strategy",
+    [("inner", "split_salted"), ("left_anti", "split_broadcast"), ("left", "split_salted")],
+)
+def test_broadcast_off_takes_the_split(spark, how, strategy):
+    """The same inputs under ``autoBroadcastJoinThreshold=-1`` take the
+    hot/cold split: the pre-pass runs (so the job count above does see
+    jobs), and the record names the one hot key and its fragment counts.
+    Inner and left joins salt the hot pairs, since no hot fragment fits; a
+    left anti join checks hot rows against the right side's broadcast hot
+    key set, which needs no salting. The output equals the plain join."""
+    left, right = _broadcastable_inputs(spark)
+    with _spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        with _job_group(spark, f"skew_join-split-{how}") as jobs:
+            with skew_join_decisions() as got:
+                actual = skew_join(left, right, "k", how, TEST_CONF)
+            assert jobs() != []
+        [d] = got
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert (d.strategy, d.estimator, d.hot_keys) == (strategy, "exact", 1)
+        assert (d.max_r_left, d.max_r_right) == (min(200, cap), 1)
+        assert d.prepass_s > 0
+        assert_df_equal(actual, plain(left, right, ["k"], how))
 
 
 _DST_GAP = dt.datetime(2021, 3, 14, 2, 30)  # no such wall time in Los Angeles
@@ -393,12 +492,11 @@ def test_hot_keys_round_trip_every_key_type(spark, key_type, tz):
     with _spark_conf(spark, {"spark.sql.session.timeZone": tz}):
         left = spark.createDataFrame(left_rows + [nulls + ("ln",)] * 2, f"{ddl}, pl string")
         right = spark.createDataFrame(right_rows + [nulls + ("rn",)], f"{ddl}, pr string")
-        hot_df, rows_l, rows_r = _hot_key_table(left, right, keys, conf)
-        assert (hot_df.count(), rows_l, rows_r) == (2, 41, 26)
-        assert left.join(hot_df, on=keys, how="left_semi").count() == 41
-        assert right.join(hot_df, on=keys, how="left_semi").count() == 26
-        actual = skew_join(left, right, keys, "inner", conf)
-        assert_df_equal(actual, plain(left, right, keys, "inner"))
+        hot = _hot_key_table(left, right, keys, conf)
+        assert (hot.df.count(), hot.n, hot.rows_l, hot.rows_r) == (2, 2, 41, 26)
+        assert left.join(hot.df, on=keys, how="left_semi").count() == 41
+        assert right.join(hot.df, on=keys, how="left_semi").count() == 26
+        assert_split_matches_plain(left, right, keys, "inner", conf)
 
 
 def test_default_size_matches_spark(spark):
