@@ -183,13 +183,6 @@ def _phash_near_dup(self: DataFrame, **kwargs) -> DataFrame:
     return phash_near_dup(self, **kwargs)
 
 
-def _adaptive_join(self: DataFrame, right: DataFrame, on, how: str = "inner",
-                   **kwargs) -> DataFrame:
-    from .operators.adaptive import adaptive_join
-
-    return adaptive_join(self, right, on, how, **kwargs)
-
-
 def _profile(self: DataFrame, cols=None) -> DataFrame:
     from .operators.profile import profile_table
 
@@ -296,7 +289,6 @@ def register_dataframe_api() -> None:
         zorder_key=_zorder_key,
         hilbert_key=_hilbert_key,
         join_size_estimate=_join_size_estimate,
-        adaptive_join=_adaptive_join,
         profile=_profile,
         holt_winters=_holt_winters,
         triangle_count=_triangle_count,

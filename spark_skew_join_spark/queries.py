@@ -7880,16 +7880,19 @@ SELECT * FROM rows_out ORDER BY join_name
 
 
 def adaptive_join_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evidence-based join planning (operators/adaptive.py): three join
-    shapes probe into the three strategies — supplier is small enough
-    to BROADCAST (capped right-side count), orders⋈lineitem has no hot
-    key so it stays on Catalyst's plain SHUFFLE, and a synthetically
-    hot-keyed lineitem (40% of rows on one key) routes through
-    skew_join (SKEW).  Each row carries the decision inputs AND the
-    executed join's row count, so the oracle — which replays the capped
-    counts, hot-key probe, CASE logic, and plain-join counts in SQL —
-    certifies both the decision and the execution."""
-    from .operators.adaptive import adaptive_join, plan_equi_join
+    """The three outcomes of ``skew_join``'s join decision, the gate in
+    operators/skew_join.py. lineitem ⋈ supplier is small enough for
+    Catalyst to broadcast, so the call returns that join with no pre-pass
+    (``broadcast``). lineitem ⋈ orders, merge-hinted so the plain join is
+    a sort-merge join as at real scale, has no key with 200 or more rows
+    on either side (``no_hot_keys``). A lineitem whose rows with
+    l_linenumber >= 4 share one key takes the hot/cold split, with that
+    key's hot fragment broadcast (``split_broadcast``). Each row carries
+    the strategy and hot-key count from the call's decision record and the
+    executed join's row count. The calls run one after another, because
+    the decision collector and the gate's ``redirect_stdout`` are
+    process-wide."""
+    from .testing import skew_join_decisions
 
     t = load_tables(spark, sf_dir)
     conf = SkewJoinConf(replication_factor=0.01, hot_threshold=200)
@@ -7902,82 +7905,66 @@ def adaptive_join_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cases = [
         ("broadcast_supplier", li, supplier, [("l_suppkey", "s_suppkey")]),
-        ("shuffle_orders", li, orders, [("l_orderkey", "o_orderkey")]),
-        ("skew_hot_key", hot_li, orders, [("k", "o_orderkey")]),
+        ("shuffle_orders", li.hint("merge"), orders, [("l_orderkey", "o_orderkey")]),
+        ("skew_hot_key", hot_li.hint("merge"), orders, [("k", "o_orderkey")]),
     ]
-    # the three cases' probe pairs (capped right count + left hot-key
-    # aggregate) are independent driver actions — run them concurrently
-    # (guide §2.6) and feed each result into BOTH the report row and
-    # adaptive_join, which previously re-ran the identical probes
-    # (guide §1.2: 12 probe actions -> 6, overlapped to ~2 walls)
-    plans = _par_actions(*[
-        (lambda l=left, r=right, o=on: plan_equi_join(
-            l, r, o, conf, broadcast_rows=1000
-        ))
-        for name, left, right, on in cases
-    ])
     out = None
-    for (name, left, right, on), plan in zip(cases, plans):
-        joined = adaptive_join(
-            left, right, on, "inner", conf, broadcast_rows=1000, plan=plan
-        )
+    for name, left, right, on in cases:
+        with skew_join_decisions() as got:
+            joined = skew_join(left, right, on, "inner", conf)
+        [decision] = got
         row = joined.agg(F.count(F.lit(1)).alias("join_rows")).select(
             F.lit(name).alias("case_name"),
-            F.lit(plan["strategy"]).alias("strategy"),
-            F.lit(plan["n_right_capped"]).cast("long").alias("n_right_capped"),
-            F.lit(plan["n_hot_keys"]).cast("long").alias("n_hot_keys"),
-            F.lit(plan["max_key_freq"]).cast("long").alias("max_key_freq"),
+            F.lit(decision.strategy).alias("strategy"),
+            F.lit(decision.hot_keys).cast("long").alias("n_hot_keys"),
             F.col("join_rows"),
         )
         out = row if out is None else out.unionByName(row)
     return out.orderBy("case_name")
 
 
+# strategy is a literal per case: DuckDB cannot replay Catalyst's planner,
+# so a case that drifts off its branch fails the line. n_hot_keys replays
+# the exact pre-pass: non-null keys with >= 200 rows on either side, which
+# at replication_factor 0.01 fragment into R >= 2.
 ADAPTIVE_JOIN_SQL = """
-WITH sup AS (SELECT LEAST(COUNT(*), 1001) AS nr FROM supplier),
-ord AS (SELECT LEAST(COUNT(*), 1001) AS nr FROM orders),
-f_sup AS (
-  SELECT COUNT(*) FILTER (n >= 200) AS hot, MAX(n) AS mx FROM (
-    SELECT COUNT(*) AS n FROM lineitem GROUP BY l_suppkey)
+WITH hot_li AS (
+  SELECT CASE WHEN l_linenumber >= 4 THEN -999 ELSE l_orderkey END AS k
+  FROM lineitem
 ),
-f_ord AS (
-  SELECT COUNT(*) FILTER (n >= 200) AS hot, MAX(n) AS mx FROM (
-    SELECT COUNT(*) AS n FROM lineitem GROUP BY l_orderkey)
+h_ord AS (
+  SELECT COUNT(*) AS n FROM (
+    SELECT l_orderkey FROM lineitem WHERE l_orderkey IS NOT NULL
+    GROUP BY l_orderkey HAVING COUNT(*) >= 200
+    UNION
+    SELECT o_orderkey FROM orders WHERE o_orderkey IS NOT NULL
+    GROUP BY o_orderkey HAVING COUNT(*) >= 200)
 ),
-f_hot AS (
-  SELECT COUNT(*) FILTER (n >= 200) AS hot, MAX(n) AS mx FROM (
-    SELECT COUNT(*) AS n FROM lineitem
-    GROUP BY CASE WHEN l_linenumber >= 4 THEN -999 ELSE l_orderkey END)
+h_hot AS (
+  SELECT COUNT(*) AS n FROM (
+    SELECT k FROM hot_li WHERE k IS NOT NULL
+    GROUP BY k HAVING COUNT(*) >= 200
+    UNION
+    SELECT o_orderkey FROM orders WHERE o_orderkey IS NOT NULL
+    GROUP BY o_orderkey HAVING COUNT(*) >= 200)
 ),
 j_sup AS (SELECT COUNT(*) AS jr FROM lineitem l
           JOIN supplier s ON s.s_suppkey = l.l_suppkey),
 j_ord AS (SELECT COUNT(*) AS jr FROM lineitem l
           JOIN orders o ON o.o_orderkey = l.l_orderkey),
-j_hot AS (SELECT COUNT(*) AS jr FROM lineitem l
-          JOIN orders o ON o.o_orderkey =
-            CASE WHEN l.l_linenumber >= 4 THEN -999 ELSE l.l_orderkey END)
-SELECT 'broadcast_supplier' AS case_name,
-       CASE WHEN sup.nr <= 1000 THEN 'broadcast'
-            WHEN f_sup.hot > 0 THEN 'skew' ELSE 'shuffle' END AS strategy,
-       CAST(sup.nr AS BIGINT) AS n_right_capped,
-       CAST(f_sup.hot AS BIGINT) AS n_hot_keys,
-       CAST(f_sup.mx AS BIGINT) AS max_key_freq,
-       CAST(j_sup.jr AS BIGINT) AS join_rows
-FROM sup, f_sup, j_sup
+j_hot AS (SELECT COUNT(*) AS jr FROM hot_li h
+          JOIN orders o ON o.o_orderkey = h.k)
+SELECT 'broadcast_supplier' AS case_name, 'broadcast' AS strategy,
+       CAST(0 AS BIGINT) AS n_hot_keys, CAST(j_sup.jr AS BIGINT) AS join_rows
+FROM j_sup
 UNION ALL
-SELECT 'shuffle_orders',
-       CASE WHEN ord.nr <= 1000 THEN 'broadcast'
-            WHEN f_ord.hot > 0 THEN 'skew' ELSE 'shuffle' END,
-       CAST(ord.nr AS BIGINT), CAST(f_ord.hot AS BIGINT),
-       CAST(f_ord.mx AS BIGINT), CAST(j_ord.jr AS BIGINT)
-FROM ord, f_ord, j_ord
+SELECT 'shuffle_orders', 'no_hot_keys', CAST(h_ord.n AS BIGINT),
+       CAST(j_ord.jr AS BIGINT)
+FROM h_ord, j_ord
 UNION ALL
-SELECT 'skew_hot_key',
-       CASE WHEN ord.nr <= 1000 THEN 'broadcast'
-            WHEN f_hot.hot > 0 THEN 'skew' ELSE 'shuffle' END,
-       CAST(ord.nr AS BIGINT), CAST(f_hot.hot AS BIGINT),
-       CAST(f_hot.mx AS BIGINT), CAST(j_hot.jr AS BIGINT)
-FROM ord, f_hot, j_hot
+SELECT 'skew_hot_key', 'split_broadcast', CAST(h_hot.n AS BIGINT),
+       CAST(j_hot.jr AS BIGINT)
+FROM h_hot, j_hot
 ORDER BY case_name
 """
 
@@ -10262,7 +10249,6 @@ SCALAR_BNL_OK = (
     # tiny anchor set broadcasts over the corpus (embarrassingly
     # parallel, no shuffle); at scale swap in an LSH/IVF candidate join
     "q11_important_parts",
-    "q15_top_supplier",
     "q22_inactive_customers",
     "heavy_hitter_suppliers",
     "tfidf_top_terms",  # 1-row n_docs count broadcast for the IDF term
@@ -10280,26 +10266,15 @@ SCALAR_BNL_OK = (
     "dq_audit_orders",  # 1-row metric frames combined by scalar cross-join
     "delete_propagation_stats",  # 1-row per-table count frames cross-joined
     "temperature_mix_sources",  # 1-row Σn^alpha normalizer broadcast
-    "dsir_importance_docs",  # 1-row corpus/target gram-total broadcasts
-    "dsir_resample_docs",  # same DSIR 1-row gram-total broadcasts
-    "pipeline_train_mix",  # composes the DSIR scalar broadcasts
     "join_size_estimate_cms",  # 1-row est/true/Na/Nb frames cross-joined
     "image_near_dup_phash",  # 1-row pair-stats x corpus-stats cross-join
     "image_near_dup_png",  # same 1-row stats cross-join shape
     "audio_near_dup_awhash",  # same 1-row stats cross-join shape
-    "adaptive_join_strategies",  # 1-row per-case decision frames unioned
     "triangle_count_copurchase",  # 1-row node/edge/triangle frames joined
-    "hybrid_retrieval_rrf",  # BM25's 1-row corpus-scalar broadcast x3
     "zipf_vocab_stats_docs",  # 1-row totals x 1-row OLS-fit cross-join
     # (langid entries left this list in r13: the weight matrix now
     # broadcasts as a (D+1)-row RELATION equi-joined on bucket — a
     # BroadcastHashJoin, not a BNL)
-    "quality_classifier_docs",  # 1-row weight-vector relation broadcast
-    # (the langid _weights_rel precedent, r14): the fold reads __w from a
-    # 1-row array<double> attached by crossJoin(broadcast(...)) so every
-    # GD iteration + scoring share one compiled class — scalar BNL by
-    # construction, never data x data
-    "classifier_calibration_docs",  # sweeps the same scored relation
     "semdedup_embeddings",  # n_clusters-row centroid table broadcast:
     # each vector fans out exactly x n_clusters for scoring (the IVF
     # assignment shape), bounded by the quantizer size — never data x data

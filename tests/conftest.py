@@ -7,6 +7,7 @@ empty sides, duplicate rows).
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import random
 
@@ -15,6 +16,17 @@ from pyspark.sql import SparkSession
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def selfcheck():
+    """``tools/selfcheck.py`` as a module: ``duck_con`` opens the oracle
+    tables and ``compare`` checks a Spark frame against oracle SQL."""
+    path = os.path.join(os.path.dirname(__file__), "..", "tools", "selfcheck.py")
+    spec = importlib.util.spec_from_file_location("selfcheck", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture(scope="session")

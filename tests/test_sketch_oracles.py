@@ -11,7 +11,6 @@ first).
 
 from __future__ import annotations
 
-import importlib.util
 import os
 
 import pytest
@@ -24,15 +23,6 @@ SKETCH_LINES = (
     "kll_quantiles_by_priority",
     "theta_sketch_orders",
 )
-
-
-@pytest.fixture(scope="module")
-def selfcheck():
-    path = os.path.join(os.path.dirname(__file__), "..", "tools", "selfcheck.py")
-    spec = importlib.util.spec_from_file_location("selfcheck", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 @pytest.mark.parametrize("name", SKETCH_LINES)

@@ -8,6 +8,7 @@ skew sides, estimators, and the FIXTURES.md §B edge cases.
 from __future__ import annotations
 
 import datetime as dt
+import os
 from contextlib import contextmanager
 from decimal import Decimal
 
@@ -18,6 +19,8 @@ from spark_skew_join_spark import SkewJoinConf, SkewType, skew_join
 from spark_skew_join_spark.operators.diagnostics import partition_stats
 from spark_skew_join_spark.operators.skew_join import Decision
 from spark_skew_join_spark.testing import assert_df_equal, skew_join_decisions
+
+SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 # conf that actually triggers salting on the 20k-row fixtures: a key is hot
@@ -80,9 +83,110 @@ def test_skew_type_gating(spark, zipf_left, uniform_right, skew_type):
 
 
 def test_pair_on_different_names(spark, zipf_left, uniform_right):
+    # the key is not the left's first column: the output keeps the left's
+    # column order, then the right's non-key columns (not Spark's USING
+    # order, which puts the keys first)
+    left = zipf_left.select("payload_l", "k")
     r = uniform_right.withColumnRenamed("k", "rk")
-    expected = plain(zipf_left, uniform_right, ["k"], "inner")
-    assert_split_matches_plain(zipf_left, r, [("k", "rk")], "inner", TEST_CONF, expected=expected)
+    expected = plain(left, uniform_right, ["k"], "inner")
+    out = assert_split_matches_plain(left, r, [("k", "rk")], "inner", TEST_CONF, expected=expected)
+    assert out.columns == ["payload_l", "k", "payload_r"]
+
+
+def _sides(spark, hot: bool, n_right: int):
+    """2,000 left rows spread over keys 0..49 (40 rows each); with ``hot``
+    every odd row moves to key 0. The right side has keys 0..n_right-1.
+    Both are ``spark.range`` projections, so Catalyst knows their sizes and
+    broadcasts their plain join unless a hint says otherwise."""
+    k = F.col("id") % 50
+    if hot:
+        k = F.when(F.col("id") % 2 == 1, F.lit(0)).otherwise(k)
+    left = spark.range(2_000).select(k.cast("int").alias("k"), F.col("id").cast("int").alias("v"))
+    right = spark.range(n_right).select(
+        F.col("id").cast("int").alias("k"), F.concat(F.lit("r"), F.col("id")).alias("name")
+    )
+    return left, right
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_broadcast_decision_and_equivalence(spark):
+    """A 40-row right side is under Catalyst's broadcast threshold, so the
+    gate returns the plain broadcast hash join without a pre-pass, and the
+    output equals the plain join."""
+    left, right = _sides(spark, hot=False, n_right=40)
+    with skew_join_decisions() as got:
+        out = skew_join(left, right, "k", "inner", SkewJoinConf(hot_threshold=500))
+    assert got == [Decision("broadcast", "exact")]
+    assert "BroadcastHashJoin" in _executed_plan(out)
+    assert_df_equal(out, plain(left, right, ["k"], "inner"))
+
+
+def test_shuffle_decision(spark):
+    """A merge-hinted plain join is a sort-merge join, so the pre-pass runs.
+    No key reaches the 500-row threshold (40 rows each), so the record says
+    ``no_hot_keys`` and the plain sort-merge join is returned."""
+    left, right = _sides(spark, hot=False, n_right=500)
+    conf = SkewJoinConf(hot_threshold=500)
+    with skew_join_decisions() as got:
+        out = assert_split_matches_plain(
+            left.hint("merge"), right, "k", "inner", conf, strategies=("no_hot_keys",)
+        )
+    [d] = got
+    assert (d.hot_keys, d.max_r_left, d.max_r_right) == (0, 0, 0)
+    assert "SortMergeJoin" in _executed_plan(out)
+
+
+def test_one_hot_key_of_a_merge_hinted_join_takes_the_split(spark):
+    """A merge-hinted plain join is a sort-merge join, so the gate lets the
+    pre-pass run. Key 0 holds the 1,000 odd rows plus the 40 even
+    multiples of 50: 1,040 rows, the one key at the 500-row threshold,
+    split into int(1,040 × 0.01) = 10 left fragments."""
+    left, right = _sides(spark, hot=True, n_right=500)
+    conf = SkewJoinConf(hot_threshold=500, replication_factor=0.01, num_partitions=16)
+    with skew_join_decisions() as got:
+        assert_split_matches_plain(left.hint("merge"), right, "k", "inner", conf)
+    [d] = got
+    assert (d.hot_keys, d.max_r_left, d.max_r_right) == (1, 10, 1)
+
+
+def test_pair_keys_and_column_order(spark):
+    """A pair key joins different names; the output keeps the left's key
+    name and column order, then the right's non-key columns. The
+    broadcast-hinted path and the merge-hinted pre-pass path agree on rows
+    and order."""
+    left = spark.createDataFrame([(1, 10), (2, 20)], "lk int, v int")
+    right = spark.createDataFrame([(1, "a"), (3, "c")], "rk int, s string")
+    conf = SkewJoinConf(hot_threshold=100)
+    with skew_join_decisions() as got:
+        outs = [skew_join(lhs, rhs, [("lk", "rk")], "inner", conf)
+                for lhs, rhs in ((left, right.hint("broadcast")), (left.hint("merge"), right))]
+    assert [d.strategy for d in got] == ["broadcast", "no_hot_keys"]
+    for out in outs:
+        assert out.columns == ["lk", "v", "s"]
+        assert [tuple(r) for r in out.collect()] == [(1, 10, "a")]
+
+
+def test_adaptive_join_strategies_matches_oracle(spark, selfcheck):
+    """The registry line ``adaptive_join_strategies`` reports the gate's
+    three outcomes (``broadcast``, ``no_hot_keys``, ``split_broadcast``)
+    with each case's hot-key count and join row count. Its DuckDB oracle
+    names each case's strategy as a literal and replays the exact
+    pre-pass and the join counts, so the rows must match exactly. The
+    line is eager: its pre-passes run when it is constructed."""
+    from spark_skew_join_spark import queries as q
+
+    name = "adaptive_join_strategies"
+    assert name in q.EAGER_QUERIES
+    sdf = q.QUERIES[name](spark, SF_DIR)
+    con = selfcheck.duck_con(SF_DIR)
+    try:
+        result = selfcheck.compare(sdf, con, q.ORACLES[name])
+    finally:
+        con.close()
+    assert result.startswith("EXACT"), result
 
 
 def test_multi_column_key_and_concat_collision(spark):

@@ -1,7 +1,8 @@
 """The scripts kept in ``tools/`` (``selfcheck``, ``dump_plans``,
 ``shuffle_audit``) still compile, and every ``spark_skew_join_spark``
 name they import or read off an imported module (``q.QUERIES``)
-exists — a package deletion must not silently break them."""
+exists — a package deletion must not silently break them. Each puts its
+own checkout, not a fixed directory, on ``sys.path``."""
 
 from __future__ import annotations
 
@@ -51,4 +52,15 @@ def test_tool_compiles_and_resolves_package_names(path):
         and not hasattr(modules[node.value.id], node.attr)
     ]
     assert not missing, missing
+    # the repo root goes on sys.path derived from ``__file__``: a fixed
+    # directory would import whatever package lives there, so a copy of
+    # the repo would check other code than its own
+    fixed = [
+        ast.unparse(node)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and ast.unparse(node.func) in ("sys.path.insert", "sys.path.append")
+        and any(isinstance(a, ast.Constant) and isinstance(a.value, str) for a in node.args)
+    ]
+    assert not fixed, fixed
 
