@@ -11,7 +11,12 @@ oracle-checkable in ANSI SQL. Near-dup comes in three flavors:
   shingles can be dropped like stopwords (``max_shingle_df``).
 * ``minhash_pairs`` — MinHash+LSH banding: per-doc signature via codegen
   hash functions (xxhash64 with seed = permutation index), band → bucket →
-  candidate pairs → exact Jaccard verify. No Python in the signature path.
+  candidate pairs → exact Jaccard verify. The verify fans each candidate
+  pair out to its two docs' shingles and counts, per pair, |S_a| + |S_b|
+  and |S_a ∪ S_b| (cost: |S_a| + |S_b| shingles per candidate pair; no
+  join keyed on shingle). It needs the shingle input to hold distinct
+  (id, shingle) rows per doc, as ``shingles`` builds it. No Python
+  anywhere on the path.
 * ``simhash_pairs`` — 64-bit SimHash over shingle hashes; near-dups share
   band-chunks of the fingerprint.
 * ``embedding_near_dup`` — cosine >= threshold pairs over an embedding
@@ -338,7 +343,13 @@ def jaccard_for_pairs(
     so the size aggregate and the intersection shuffle move candidate
     docs' shingles only — at low candidate selectivity that is a tiny
     fraction of the corpus (and AQE turns the id semi-joins into
-    broadcasts when the pair list is small)."""
+    broadcasts when the pair list is small).
+
+    Callers: ``containment_for_pairs`` and ``operators.incremental``,
+    which need ``inter`` and the sizes. ``minhash_pairs`` needs only the
+    Jaccard and verifies in one join and one per-pair aggregate
+    instead. Like it, this assumes ``sh`` holds distinct (id, shingle)
+    rows per doc."""
     # no distinct on ids: left_semi deduplicates on the build side anyway,
     # and skipping it saves a shuffle
     ids = pairs.select(F.col("id_a").alias(id_col)).unionByName(
@@ -561,37 +572,51 @@ def minhash_pairs(
 
     Bands of r = num_perm/n_bands hashes; docs colliding in >= 1 band are
     candidates (P[collide] = 1-(1-s^r)^b); ONLY those candidates are then
-    verified with exact n-gram Jaccard (``jaccard_for_pairs``) — the
-    verify stage never materializes the all-pairs Jaccard table, which is
-    the quadratic job LSH exists to avoid. Output: (id_a, id_b, jaccard).
+    verified with exact n-gram Jaccard — the verify never materializes
+    the all-pairs Jaccard table, which is the quadratic job LSH exists
+    to avoid. Output: (id_a, id_b, jaccard), pairs with no shared
+    shingle left out (as in ``jaccard_for_pairs``).
+
+    The verify: each distinct candidate pair is exploded to its two doc
+    ids and joined to the shingle table on id, then grouped per pair:
+    count = |S_a| + |S_b| and size(collect_set) = |S_a ∪ S_b|, so
+    |S_a ∩ S_b| = count − |S_a ∪ S_b| and jaccard = ∩ / ∪. No join is
+    keyed on ``shingle``, and the pair list is read once. Cost: each
+    verified pair moves |S_a| + |S_b| shingles into its group — the
+    order of a fan-out join through the shingle table. The join to the
+    shingle table is keyed on doc id, and while the exploded pair list
+    is small AQE broadcasts it, so the shingle table is scanned to
+    probe the candidate ids but not shuffled. The count is
+    |S_a| + |S_b| only because ``shingle_df`` holds distinct
+    (id, shingle) rows per document, as ``shingles`` builds it; that is
+    the input contract.
 
     ``max_bucket_size`` caps band-bucket fan-out (see ``band_bucket_cap``):
     over-cap buckets emit star pairs instead of a clique, keeping a
     degenerate corpus (thousands of identical docs) O(n) instead of O(n²).
 
-    ``sig_prefilter_margin`` (VERDICT r3 #4): before the exact shingle
-    verify, candidates are screened by their signature-agreement fraction
-    — matching positions / num_perm, an unbiased estimate of Jaccard
-    (E[agree] = J, one Bernoulli(J) trial per permutation). Pairs with
-    agreement < threshold − margin are dropped WITHOUT touching the
-    shingle table, which is the verify's cost center. The margin buys
-    safety: a true pair at J = threshold has agreement ~ Binom(num_perm,
-    J)/num_perm, σ = √(J(1-J)/num_perm) ≈ 0.08 at num_perm = 32, so the
-    default margin 0.3 puts the cut ≈ 3.7σ below the threshold
-    (miss ≈ 1e-4 per borderline pair; far-above-threshold pairs are
-    unaffected). Set None to disable (full LSH recall, slower verify).
+    ``sig_prefilter_margin`` (VERDICT r3 #4): candidates are screened by
+    their signature-agreement fraction — matching positions / num_perm,
+    an unbiased estimate of Jaccard (E[agree] = J, one Bernoulli(J) trial
+    per permutation). Pairs with agreement < threshold − margin are
+    dropped before the verify reads their shingles. The margin buys
+    safety: a true pair at J = threshold has agreement
+    ~ Binom(num_perm, J)/num_perm,
+    σ = √(J(1-J)/num_perm) ≈ 0.08 at num_perm = 32, so the default
+    margin 0.3 puts the cut ≈ 3.7σ below the threshold (miss ≈ 1e-4 per
+    borderline pair; far-above-threshold pairs are unaffected). Set
+    None to disable (full LSH recall).
 
-    Shingle cache lifetime: pass ``shingle_df`` (an already-persisted set
-    from ``shingles``) to share one materialization across calls — the
-    caller owns unpersist. Without it, this builds and persists its own
-    set, which stays cached for the session (persist feeds both the
-    signature build and the verify joins; there is no safe point to
-    unpersist before the lazy result is materialized)."""
+    ``cache_bands`` (any truthy mode of ``_session_cache``) caches the
+    bands and, with the prefilter on, the signature — read by the band
+    explode and both prefilter joins; the entries sit in the band ledger
+    until released. The shingle set is read twice (signature and
+    verify): pass ``shingle_df`` (e.g. a persisted set from
+    ``shingles``) to build it once and share it across calls — its
+    owner releases it. Without it, both reads re-run the shingle
+    explode; nothing is persisted outside the ledger."""
     r = num_perm // n_bands
-    if shingle_df is not None:
-        sh = shingle_df
-    else:
-        sh = shingles(df, text_col, id_col, n).persist()
+    sh = shingle_df if shingle_df is not None else shingles(df, text_col, id_col, n)
     sig = minhash_signatures(df, text_col, id_col, n, num_perm, shingle_df=sh)
     if sig_prefilter_margin is not None and cache_bands:
         # sig now has 3 consumers (bands + both prefilter joins) — cache
@@ -658,13 +683,22 @@ def minhash_pairs(
                 .where(agree >= F.lit(min_agree))
                 .select("id_a", "id_b")
             )
-    # the verify consumes cand 3× (both id-scoping semi-joins + the
-    # intersection fan-out) — persist the tiny post-prefilter pair list so
-    # the band self-join + signature screen run once, not per consumer
-    cand = _session_cache(cand)
-    verified = jaccard_for_pairs(cand, sh, id_col)
-    return verified.where(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
+    # each pair fans out to its two docs' shingles; grouped per pair,
+    # count = |S_a| + |S_b| and collect_set = S_a ∪ S_b, so
+    # |S_a ∩ S_b| = count − |S_a ∪ S_b| with no join keyed on shingle
+    union = F.col("__union")
+    inter = F.col("__n") - union
+    return (
+        cand.select("id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias(id_col))
+        .join(sh, on=id_col)
+        .groupBy("id_a", "id_b")
+        .agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.size(F.collect_set("shingle")).alias("__union"),
+        )
+        .where(inter > 0)
+        .select("id_a", "id_b", (inter.cast("double") / union).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
     )
 
 

@@ -751,6 +751,10 @@ def _dedup_family(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     # to a LogicalRDD leaf. Measured fresh-JVM A/B (alternating): build
     # 30.7/19.9 s vs 42.1/29.9, six consumers 20.5/15.2 s vs
     # 52.9/25.6 — ckpt won every adjacent comparison.
+    # With cache_bands="ckpt" minhash_pairs checkpoints its signature
+    # and bands; its verify joins only the candidate pairs' doc ids to
+    # this shingle checkpoint and counts each pair's shingles in one
+    # aggregate, so no pair-plan step is keyed on shingle.
     sh = _session_cache(shingles(docs, n=8), mode="ckpt")
     pairs = minhash_pairs(
         docs, threshold=0.5, n=8, shingle_df=sh, cache_bands="ckpt"

@@ -33,7 +33,10 @@ def selfcheck():
 def spark():
     from spark_skew_join_spark.sources.tables import get_spark
 
-    s = get_spark("sj-tests", cpus=int(os.environ.get("SPARK_TEST_CPUS", "8")))
+    # SPARK_TEST_CPUS overrides the width; otherwise get_spark takes it
+    # from SPARK_GRAFT_CPUS or the CPUs the process may use
+    cpus = os.environ.get("SPARK_TEST_CPUS")
+    s = get_spark("sj-tests", cpus=int(cpus) if cpus else None)
     yield s
     s.stop()
 

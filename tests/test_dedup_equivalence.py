@@ -57,13 +57,39 @@ def test_embedding_lsh_full_recall_vs_brute(spark):
     assert len(brute) > 0, "fixture has no qualifying pairs — test is vacuous"
 
 
-def test_minhash_full_recall_vs_exact_jaccard(spark):
-    """MinHash-LSH candidates cover every >=0.5-Jaccard pair on the fixtures
-    (verify stage makes precision 1, so equality == full recall)."""
+@pytest.fixture(scope="module")
+def exact_jaccard_05(spark):
+    """(id_a, id_b, jaccard) of every pair at Jaccard >= 0.5, all-pairs."""
     docs = load_tables(spark, SF)["documents"]
     exact = ngram_jaccard_pairs(docs, threshold=0.5, n=8, cache_shingles=False)
+    return _pairs(exact, "id_a", "id_b", "jaccard")
+
+
+def test_minhash_full_recall_vs_exact_jaccard(spark, exact_jaccard_05):
+    """MinHash-LSH finds every >=0.5-Jaccard pair on the fixtures and
+    reports its exact Jaccard bit for bit: the per-pair verify gives the
+    same doubles as the all-pairs shingle join (so equality is full
+    recall AND exact precision)."""
+    docs = load_tables(spark, SF)["documents"]
     mh = minhash_pairs(docs, threshold=0.5, n=8)
-    assert _pairs(mh, "id_a", "id_b") == _pairs(exact, "id_a", "id_b")
+    assert _pairs(mh, "id_a", "id_b", "jaccard") == exact_jaccard_05
+    assert exact_jaccard_05, "fixture has no qualifying pairs — test is vacuous"
+
+
+@pytest.mark.parametrize(
+    "cache_bands, margin", [("auto", None), (True, 0.3), ("ckpt", 0.3), (False, 0.3)]
+)
+def test_minhash_exact_jaccard_in_every_cache_mode(
+    spark, exact_jaccard_05, cache_bands, margin
+):
+    """The same exact output without the signature prefilter, and with
+    the signature and bands persisted, checkpointed or not cached."""
+    docs = load_tables(spark, SF)["documents"]
+    mh = minhash_pairs(
+        docs, threshold=0.5, n=8, cache_bands=cache_bands,
+        sig_prefilter_margin=margin,
+    )
+    assert _pairs(mh, "id_a", "id_b", "jaccard") == exact_jaccard_05
 
 
 def test_minhash_bucket_cap_is_noop_on_fixtures(spark):

@@ -7,6 +7,8 @@ not a production run.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from spark_skew_join_spark import SkewJoinConf, skew_join
@@ -80,25 +82,67 @@ def test_groupby_single_shuffle(spark):
     assert num_shuffles(q) <= 1, "partial aggregation should leave one exchange"
 
 
-def test_minhash_verify_is_candidate_scoped(spark):
-    """The exact-Jaccard verify must run over the LSH candidate set, not all
-    pairs: the only join keyed on `shingle` alone would be the all-pairs
-    intersection build — in the candidate-scoped plan every shingle join
-    also carries a doc id key (id_b)."""
-    import re
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """Line ``i`` of a tree string and the lines of its descendants."""
 
+    def depth(line: str) -> int:
+        return len(re.match(r"[\s:|+-]*", line).group(0))
+
+    out = [lines[i]]
+    for line in lines[i + 1:]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return out
+
+
+def test_minhash_verify_is_candidate_scoped(spark):
+    """The exact-Jaccard verify runs over the LSH candidate pairs only: no
+    join anywhere in the plan is keyed on ``shingle`` (an all-pairs
+    intersection build, or a fan-out through the shingle table keyed on
+    it, would be), and the per-pair ``collect_set(shingle)`` aggregate
+    reads only shingles joined by doc id to the two docs of a distinct
+    candidate pair."""
     from spark_skew_join_spark.operators.dedup import minhash_pairs
 
     docs = load_tables(spark, SF)["documents"]
-    plan = (
+    lines = (
         minhash_pairs(docs, threshold=0.5, n=8)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
+        .splitlines()
     )
-    for cond in re.findall(r"Join \w+, \((.*)\)", plan):
-        if "shingle" in cond:
-            assert "id_b" in cond, f"all-pairs shingle join in verify: {cond}"
+    joins = [
+        m.group(0)
+        for line in lines
+        for m in [
+            re.search(r"Join \w+, \(.*\)", line)
+            or re.search(r"\w+Join \[.*?\], \[.*?\]", line)
+        ]
+        if m
+    ]
+    assert joins, "plan has no join — the regexes no longer match it"
+    keyed = [c for c in joins if re.search(r"\bshingle#", c)]
+    assert not keyed, f"join keyed on shingle: {keyed}"
+    verify = [
+        i for i, line in enumerate(lines)
+        if re.search(r"Aggregate \[id_a#\d+L?, id_b#\d+L?\], .*collect_set\(shingle#", line)
+    ]
+    assert verify, "verify is not a per-pair collect_set of shingles"
+    below = _subtree(lines, verify[0])
+    fan = [
+        i for i, line in enumerate(below)
+        if re.search(r"Generate explode\(array\(id_a#\d+L?, id_b#\d+L?\)\)", line)
+    ]
+    assert fan, "verify does not fan each pair out to its two doc ids"
+    assert re.search(
+        r"Join Inner, \(doc_id#\d+L? = doc_id#\d+L?\)", "\n".join(below)
+    ), "shingles do not join the pair's doc ids"
+    assert re.search(
+        r"Aggregate \[id_a#\d+L?, id_b#\d+L?\], \[id_a#\d+L?, id_b#\d+L?\]",
+        "\n".join(_subtree(below, fan[0])),
+    ), "the fanned-out pairs are not the distinct candidate pairs"
 
 
 def test_embedding_lsh_plan_has_no_cartesian(spark):

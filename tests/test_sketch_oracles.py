@@ -5,8 +5,8 @@ outputs only exact columns, so its rows must equal the oracle's exact
 SQL as a sorted multiset (``tools/selfcheck.py``'s comparison).  A gate
 miss shows up as a missing row.  Each line is also one lazy plan:
 given its tables, constructing it runs no Spark job (opening a parquet
-table reads its schema with a job of its own, so the tables are opened
-first).
+table reads its schema with a job of its own, and ``load_tables`` opens
+a table on its first lookup, so every table is looked up first).
 """
 
 from __future__ import annotations
@@ -14,6 +14,8 @@ from __future__ import annotations
 import os
 
 import pytest
+
+from spark_skew_join_spark.sources.tables import TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SKETCH_LINES = (
@@ -30,7 +32,8 @@ def test_sketch_line_matches_oracle(spark, selfcheck, monkeypatch, name):
     from spark_skew_join_spark import queries as q
 
     assert name not in q.EAGER_QUERIES
-    tables = q.load_tables(spark, SF_DIR)
+    lazy = q.load_tables(spark, SF_DIR)
+    tables = {t: lazy[t] for t in TABLES}
     monkeypatch.setattr(q, "load_tables", lambda spark_, sf_dir: tables)
     sc = spark.sparkContext
     group = f"construct-{name}"

@@ -126,7 +126,7 @@ def main():
     import __spark_entry__ as entrymod
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    spark = get_spark("selfcheck", cpus=16)
+    spark = get_spark("selfcheck")
     con = duck_con(SF_DIR)
     results = {}
     for name, fn in qs.items():
