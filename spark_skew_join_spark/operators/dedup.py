@@ -242,8 +242,9 @@ def shingles(
         # a narrow (single-row-group) scan serializes the explode+hash
         # partial aggregate onto one core; fan out first (no-op at
         # production partition counts — measured 8.8 s -> ~2 s on the
-        # family's sf0.1 materialization)
-        fan_out_narrow(df.select(F.col(id_col), F.col(text_col).alias("__t")))
+        # family's sf0.1 materialization); by id, so the distinct needs
+        # no second shuffle
+        fan_out_narrow(df.select(id_col, F.col(text_col).alias("__t")), by=id_col)
         .select(id_col, "__t", pos)
         .where(F.length("__t") >= n)
         .select(

@@ -8,12 +8,13 @@ of characters in the most frequent n-gram), adapted to the fixture corpus
 (single-line, single-space-separated text, so the line-based rules don't
 apply and repetition is measured on word n-grams).
 
-Scale design (100 TB): per-doc scalar signals are one codegen projection
-over the scan.  The top-n-gram fraction needs a per-(doc, ngram) count →
-per-doc max; that is an explode + two-level aggregation keyed by
-``(doc_id, ngram)`` then ``doc_id`` — both hash-partitioned with map-side
-partial aggregation, no driver participation and no skew (doc_id is unique,
-so the reduce keys are near-uniform).  No Python UDFs anywhere.
+Scale design (100 TB): the scan fans out by doc id; one ``select``
+computes the scalar signals and the token array, one ``explode_outer``
+emits every unigram and bigram as an ``(n, xxhash64)`` row, and the
+``(doc, n, gram)`` then ``doc`` aggregates both reuse the doc-id
+partitioning: one exchange, no join, no Python UDFs. Compute a per-row
+array in a ``select`` *before* the one that explodes: Spark evaluates a
+select's other expressions above its ``Generate``, once per position.
 """
 
 from __future__ import annotations
@@ -21,64 +22,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import punct_count, token_count
-
-
-def top_ngram_fraction(docs: DataFrame, id_col: str, text_col: str, n: int,
-                       out_col: str) -> DataFrame:
-    """(id_col, out_col): occurrences of the doc's most frequent word
-    n-gram divided by its n-gram count; 0.0 for docs with < n words.
-
-    Count-based, so n-gram ties don't affect the result (deterministic
-    across engines and partitionings). Grams build as explode_outer
-    over POSITIONS + slice/array_join (the NULL row for short docs is
-    preserved), not a transform() HOF — the lambda falls out of
-    whole-stage codegen (1.7 s → codegen at sf0.1, BASELINE.md r9)."""
-    tokens = F.split(F.col(text_col), " ")
-    size = F.size(tokens)
-    idx = F.when(size >= n, F.sequence(F.lit(0), size - n)).otherwise(
-        F.array().cast("array<int>")
-    )
-    grams = docs.select(
-        F.col(id_col), tokens.alias("__tk"), F.explode_outer(idx).alias("__i")
-    ).select(
-        id_col,
-        # gram identity is all the aggregation needs — xxhash64 the
-        # string so the (doc, gram) shuffle moves 8-byte ints (the
-        # shingle/setsim trick); short-doc NULL rows stay NULL
-        F.when(
-            F.col("__i").isNotNull(),
-            F.xxhash64(
-                F.array_join(F.slice(F.col("__tk"), F.col("__i") + 1, n), " ")
-            ),
-        ).alias("_ng"),
-    )
-    per_gram = grams.groupBy(id_col, "_ng").agg(F.count(F.lit(1)).alias("_cnt"))
-    return per_gram.groupBy(id_col).agg(
-        F.when(
-            F.max(F.when(F.col("_ng").isNotNull(), F.col("_cnt"))).isNull(), F.lit(0.0)
-        )
-        .otherwise(
-            F.max(F.when(F.col("_ng").isNotNull(), F.col("_cnt")))
-            / F.sum(F.when(F.col("_ng").isNotNull(), F.col("_cnt")).otherwise(F.lit(0)))
-        )
-        .alias(out_col)
-    )
+from ..sources.tables import fan_out_narrow
 
 
 def duplicate_ngram_fraction(docs: DataFrame, id_col: str, text_col: str,
                              n: int, out_col: str) -> DataFrame:
     """(id_col, out_col): fraction of the doc's word n-grams that are
     repeats of an earlier occurrence — 1 - distinct/total. The Gopher
-    duplicate-n-gram family of repetition signals (top_ngram_fraction
+    duplicate-n-gram family of repetition signals (gopher_quality_signals
     covers the "most frequent n-gram" variant; this covers the
     "duplicate n-grams" variant). Docs with < n words are excluded.
 
     Same explode-positions + slice shape as the contamination gram
     builder (HOF transform() lambdas fall out of codegen and ran 5×
-    slower there); two-level aggregation keyed (doc, gram) → doc."""
+    slower there); two-level aggregation keyed (doc, gram) → doc, both
+    in the partition the doc-id fan-out put the document in."""
     toks = F.split(F.col(text_col), " ")
     base = (
-        docs.where(F.size(toks) >= n)
+        fan_out_narrow(docs, by=id_col)
+        .where(F.size(toks) >= n)
         .select(F.col(id_col), toks.alias("__tk"))
         .select(
             id_col,
@@ -106,15 +68,16 @@ def gopher_quality_signals(docs: DataFrame, id_col: str = "doc_id",
     Columns: n_tokens, mean_word_len, symbol_word_ratio, top_unigram_frac,
     top_bigram_frac, passes_quality.  All ratios are int/int divisions in
     double — bit-identical across engines, so the whole output hash-checks
-    against a SQL oracle.
+    against a SQL oracle.  A top-n-gram fraction is the count of the doc's
+    most frequent word n-gram over its n-gram count (0.0 below n words).
+    ``id_col`` is a unique key; rows with a NULL id are dropped.
 
     Thresholds are the Gopher shapes scaled to the fixture corpus:
     10 ≤ words ≤ 1000, 2 ≤ mean word length ≤ 12, symbol:word ≤ 0.3,
     top-unigram fraction ≤ 0.25, top-bigram fraction ≤ 0.18.
     """
     ntok = token_count(text_col)
-    base = docs.select(
-        F.col(id_col),
+    scalars = [
         ntok.alias("n_tokens"),
         # single-space text: non-space chars = length - (n_tokens - 1)
         F.when(ntok == 0, F.lit(0.0))
@@ -123,10 +86,38 @@ def gopher_quality_signals(docs: DataFrame, id_col: str = "doc_id",
         F.when(ntok == 0, F.lit(0.0))
         .otherwise(punct_count(text_col) / ntok)
         .alias("symbol_word_ratio"),
+    ]
+    # the scalars ride as grouping keys (they add no groups); they are
+    # never NaN or -0.0, which grouping would normalize
+    keys = [id_col, "n_tokens", "mean_word_len", "symbol_word_ratio"]
+    tokens = fan_out_narrow(docs.where(F.col(id_col).isNotNull()), by=id_col).select(
+        F.col(id_col), *scalars, F.split(F.col(text_col), " ").alias("__tk")
     )
-    uni = top_ngram_fraction(docs, id_col, text_col, 1, "top_unigram_frac")
-    bi = top_ngram_fraction(docs, id_col, text_col, 2, "top_bigram_frac")
-    out = base.join(uni, id_col).join(bi, id_col)
+    # positions 0..size-1 are the unigrams, size..2·size-2 the bigrams;
+    # a doc with no tokens (NULL text) keeps one NULL row
+    pos, size = F.col("__j"), F.size("__tk")
+    positions = tokens.select(
+        *keys, "__tk",
+        F.explode_outer(F.when(size > 0, F.sequence(F.lit(0), 2 * size - 2))).alias("__j"),
+    )
+    n = F.when(pos < size, F.lit(1)).when(pos >= size, F.lit(2))
+    start = F.when(pos < size, pos).otherwise(pos - size) + 1
+    per_gram = positions.select(
+        *keys,
+        n.alias("__n"),
+        # gram identity is all the count needs: hash the string so the
+        # aggregates hold 8-byte ints
+        F.xxhash64(F.array_join(F.slice("__tk", start, n), " ")).alias("__g"),
+    ).groupBy(*keys, "__n", "__g").agg(F.count(F.lit(1)).alias("__c"))
+
+    def top_fraction(k: int):
+        c = F.when(F.col("__n") == k, F.col("__c"))
+        return F.coalesce(F.max(c) / F.sum(c), F.lit(0.0))
+
+    out = per_gram.groupBy(*keys).agg(
+        top_fraction(1).alias("top_unigram_frac"),
+        top_fraction(2).alias("top_bigram_frac"),
+    )
     return out.withColumn(
         "passes_quality",
         (F.col("n_tokens").between(10, 1000))

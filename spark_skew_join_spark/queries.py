@@ -5050,7 +5050,7 @@ GROUP BY 1, 2 HAVING COUNT(*) >= 4
 def repetition_signals_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher duplicate-n-gram repetition signals: per doc, the fraction
     of word 2-grams / 3-grams that repeat an earlier occurrence
-    (1 - distinct/total). Complements top_ngram_fraction inside
+    (1 - distinct/total). Complements the top-n-gram fractions of
     gopher_quality_signals (most-frequent-gram variant)."""
     from .operators.quality import duplicate_ngram_fraction
 

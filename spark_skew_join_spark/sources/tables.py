@@ -42,7 +42,8 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 _NPARTS_MEMO: dict = {}
 
 
-def fan_out_narrow(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
+def fan_out_narrow(df: DataFrame, min_fraction: float = 0.5,
+                   by: str | None = None) -> DataFrame:
     """Repartition a NARROW scan up to the cluster's parallelism.
 
     The test fixtures are single-row-group parquet files, so every scan
@@ -55,6 +56,12 @@ def fan_out_narrow(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     100 TB) already exceeds it, so this is a no-op at scale and the
     added exchange moves only the narrow input's rows (kilobytes to a
     few MB here).
+
+    ``by`` hash-partitions on that column instead of round-robin. Every
+    row of one ``by`` value then sits in one partition, which satisfies
+    any later ``groupBy`` whose keys include ``by``: those aggregates
+    plan no exchange. The explicit partition count keeps AQE from
+    coalescing the fan-out back onto one task.
 
     Spark Connect has no SparkContext and no ``.rdd``; there we derive
     the target width from ``spark.sql.shuffle.partitions`` and assume
@@ -76,7 +83,7 @@ def fan_out_narrow(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     except Exception:  # .rdd / semanticHash unsupported (Connect) — assume narrow
         nparts = 1
     if nparts < floor:
-        return df.repartition(par)
+        return df.repartition(par) if by is None else df.repartition(par, by)
     return df
 
 

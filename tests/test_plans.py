@@ -16,6 +16,7 @@ from spark_skew_join_spark.plans.explain import (
     has_broadcast_join,
     has_python_udf,
     num_shuffles,
+    plan_string,
     pushed_filters,
     scan_schemas,
 )
@@ -143,6 +144,36 @@ def test_minhash_verify_is_candidate_scoped(spark):
         r"Aggregate \[id_a#\d+L?, id_b#\d+L?\], \[id_a#\d+L?, id_b#\d+L?\]",
         "\n".join(_subtree(below, fan[0])),
     ), "the fanned-out pairs are not the distinct candidate pairs"
+
+
+def test_gopher_signals_plan_is_one_pass(spark):
+    """Over the one-row-group documents scan the Gopher signals are one
+    explode and two aggregates in the partition the doc-id fan-out puts
+    each document in: no join, and that fan-out is the only exchange."""
+    from spark_skew_join_spark.operators.quality import gopher_quality_signals
+
+    out = gopher_quality_signals(load_tables(spark, SF)["documents"])
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in optimized, optimized
+    physical = plan_string(out, "simple")
+    assert num_shuffles(out) == 1, physical
+    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\)", physical), physical
+    assert optimized.count("Generate ") == 1, optimized
+
+
+def test_shingles_distinct_runs_in_the_scan_stage(spark):
+    """``shingles`` fans the narrow scan out by doc id, so its distinct on
+    (doc_id, shingle) needs no second shuffle: the plan's one exchange is
+    the doc-id hash fan-out, below the explode."""
+    from spark_skew_join_spark.operators.dedup import shingles
+
+    out = shingles(load_tables(spark, SF)["documents"], n=8)
+    lines = plan_string(out, "simple").splitlines()
+    exchanges = [i for i, line in enumerate(lines) if "Exchange" in line]
+    assert num_shuffles(out) == 1, lines
+    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\)", lines[exchanges[0]])
+    generate = [i for i, line in enumerate(lines) if "Generate explode" in line]
+    assert generate and exchanges[0] > generate[0], "an exchange sits above the explode"
 
 
 def test_embedding_lsh_plan_has_no_cartesian(spark):
