@@ -41,10 +41,9 @@ CONNECT_ESCAPES: dict[str, tuple[str, str]] = {
     ),
     "spark_skew_join_spark/operators/dedup.py": (
         "graceful-fallback",
-        "spill-table orphan cleanup (_jvm/_jsc) and the plan-size "
-        "estimate (_jdf) are try/except-wrapped: under Connect cleanup "
-        "is skipped and the estimate reports 'huge', which routes the "
-        "session cache to the safe table mode",
+        "_release_df's unpersist of a localCheckpoint's wrapped RDD "
+        "(_jdf) is try/except-wrapped: under Connect only the "
+        "DataFrame.unpersist half runs",
     ),
     "spark_skew_join_spark/operators/pq.py": (
         "loud-error",

@@ -32,53 +32,11 @@ from ..functions.text import fingerprint
 # LSH band/signature DataFrames are consumed ~5× inside one plan (bucket
 # stats, cap anti-join, both self-join sides, star pairs); without a persist
 # each consumer re-runs the projection/signature shuffle — measured 3.5×
-# slower at sf0.1. The operators cache them here; ``clear_band_cache``
-# (also called by queries.clear_dedup_cache) releases the blocks and drops
-# any spill tables, and ``cache_snapshot``/``entries_since``/
-# ``release_entries`` release the entries registered within one scope.
-#
-# Cache modes (VERDICT r3 #5 — executor memory is the wrong home for a
-# billion-row band list at 100 TB):
-#   True    — .persist() in executor memory/disk (fastest locally)
-#   "table" — write once to a temp warehouse table, read back (bounded
-#             storage memory; the write is an eager job at plan
-#             construction)
-#   "auto"  — pick by Catalyst's optimizedPlan sizeInBytes estimate of the
-#             subtree: below _SPILL_THRESHOLD_BYTES persist, above spill
-#             to table. The estimate is scan-proportional (it derives from
-#             the parquet footprint feeding the subtree, ~600 KB at sf0.1),
-#             so it is a coarse scale signal, not a precise band size —
-#             exactly what the decision needs.
+# slower at sf0.1. The operators cache them here, in one ledger;
+# ``clear_band_cache`` (also called by queries.clear_dedup_cache) releases
+# the blocks, and ``cache_snapshot``/``entries_since``/``release_entries``
+# release the entries registered within one scope.
 _CACHED_BANDS: list[DataFrame] = []
-_SPILL_TABLES: list[tuple] = []  # (SparkSession, table_name)
-_SPILL_THRESHOLD_BYTES = 4 << 30  # ~4 GiB of input scan → table mode
-_SPILL_SEQ = [0]
-_SPILL_TOKEN = __import__("uuid").uuid4().hex[:8]
-
-
-def _drop_orphan_location(spark, name: str) -> None:
-    """Delete a leftover managed-table directory for ``name`` (a killed
-    session drops nothing — saveAsTable then fails with
-    LOCATION_ALREADY_EXISTS even though the catalog has no such table)."""
-    try:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).replace("file:", "")
-        p = jvm.org.apache.hadoop.fs.Path(f"{wh}/{name.lower()}")
-        fs = p.getFileSystem(conf)
-        if fs.exists(p):
-            fs.delete(p, True)
-    except Exception:  # best-effort — saveAsTable will surface real errors
-        pass
-
-
-def _plan_size_estimate(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # estimate unavailable — treat as huge (safe mode)
-        return 1 << 62
 
 
 def _release_df(df: DataFrame) -> None:
@@ -111,6 +69,9 @@ def register_ckpt(df: DataFrame) -> DataFrame:
 
 
 def _session_cache(df: DataFrame, mode=True) -> DataFrame:
+    """Cache ``df`` in the band ledger: ``True`` persists it in executor
+    memory/disk, ``"ckpt"`` localCheckpoints it eagerly. Any other mode
+    raises ``ValueError``."""
     if mode == "ckpt":
         # eager localCheckpoint: unlike persist, this truncates the
         # LOGICAL plan to a LogicalRDD leaf, so every later action over
@@ -121,72 +82,52 @@ def _session_cache(df: DataFrame, mode=True) -> DataFrame:
         # through _release_df which also unpersists the checkpoint RDD.
         # Release is ONE-WAY (see register_ckpt).
         return register_ckpt(df.localCheckpoint())
-    if mode == "auto":
-        mode = (
-            "table"
-            if _plan_size_estimate(df) > _SPILL_THRESHOLD_BYTES
-            else True
-        )
-    if mode == "table":
-        spark = df.sparkSession
-        _SPILL_SEQ[0] += 1
-        # process-unique name: a KILLED session can never drop its spill
-        # tables (the in-memory catalog dies with it, leaving orphaned
-        # warehouse directories), and a fixed name then fails every
-        # later session with LOCATION_ALREADY_EXISTS. Uniqueness avoids
-        # the collision; the defensive drop clears a same-name orphan.
-        name = f"__sgsj_spill_{_SPILL_TOKEN}_{_SPILL_SEQ[0]}"
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        _drop_orphan_location(spark, name)
-        df.write.mode("overwrite").saveAsTable(name)
-        _SPILL_TABLES.append((spark, name))
-        return spark.table(name)
+    if mode is not True:
+        raise ValueError(f"cache mode must be True or 'ckpt', got {mode!r}")
     df = df.persist()
     _CACHED_BANDS.append(df)
     return df
 
 
+# The ledger API keeps a two-slot shape, (band frames, spill tables), for
+# perfbench's harness, which compares ``cache_snapshot`` values and
+# releases ``entries_since`` through ``release_entries(bands, spills)``.
+# The band cache has no spill mode, so the second slot is always empty.
+
+
 def cache_snapshot() -> tuple[int, int]:
-    """Current lengths of the band/spill registries — pair with
-    ``entries_since`` / ``release_entries`` for scoped release
+    """Current length of the band ledger, as a two-slot snapshot — pair
+    with ``entries_since`` / ``release_entries`` for scoped release
     (VERDICT r11 #1a)."""
-    return (len(_CACHED_BANDS), len(_SPILL_TABLES))
+    return (len(_CACHED_BANDS), 0)
 
 
 def entries_since(snap: tuple[int, int]) -> tuple[list, list]:
-    """Band DataFrames and spill-table entries registered after
-    ``snap`` (a ``cache_snapshot`` value)."""
-    nb, ns = snap
-    return list(_CACHED_BANDS[nb:]), list(_SPILL_TABLES[ns:])
+    """Band DataFrames registered after ``snap`` (a ``cache_snapshot``
+    value), and an empty spill list."""
+    return list(_CACHED_BANDS[snap[0]:]), []
 
 
-def _unregister(bands: list, spills: list) -> None:
-    """Remove the given entries from the registries without releasing
-    them — their new owner releases them (identity-based — DataFrame
-    __eq__ builds a Column, so list.remove is unusable here)."""
+def _unregister(bands: list) -> None:
+    """Remove the given frames from the ledger without releasing them —
+    their new owner releases them (identity-based — DataFrame __eq__
+    builds a Column, so list.remove is unusable here)."""
     band_ids = {id(b) for b in bands}
     _CACHED_BANDS[:] = [b for b in _CACHED_BANDS if id(b) not in band_ids]
-    spill_ids = {id(s) for s in spills}
-    _SPILL_TABLES[:] = [s for s in _SPILL_TABLES if id(s) not in spill_ids]
 
 
-def release_entries(bands: list, spills: list) -> None:
-    """Unpersist the given band frames and drop the given spill tables,
-    removing them from the registries."""
+def release_entries(bands: list, spills: list = ()) -> None:
+    """Release the given band frames and remove them from the ledger
+    (``spills`` is the always-empty second slot of ``entries_since``)."""
     for df in bands:
         _release_df(df)
-    for spark, name in spills:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-        except Exception:  # session already stopped — nothing to drop
-            pass
-    _unregister(bands, spills)
+    _unregister(bands)
 
 
 def clear_band_cache() -> None:
-    """Release every operator-cached band/signature DataFrame — unpersist
-    memory blocks and drop spill tables (idempotent)."""
-    release_entries(*entries_since((0, 0)))
+    """Release every operator-cached band/signature DataFrame
+    (idempotent)."""
+    release_entries(list(_CACHED_BANDS))
 
 
 def exact_dedup(
@@ -332,49 +273,47 @@ def jaccard_for_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard for a given pair list only.
 
-    ``pairs``: (id_a, id_b); ``sh``: (id, shingle) as built by ``shingles``.
-    Output: (id_a, id_b, inter, size_a, size_b, jaccard) — pairs with zero
-    shingle overlap are absent (their Jaccard is 0).
+    ``pairs``: distinct (id_a, id_b) rows; ``sh``: (id, shingle) as built
+    by ``shingles``. Output: (id_a, id_b, inter, size_a, size_b,
+    jaccard) — pairs with zero shingle overlap are absent (their Jaccard
+    is 0).
 
-    Scale: cost is O(Σ |shingles(a)| over candidate pairs), NOT O(n²) — the
-    pair list fans out through the shingle table on id_a, then an equi-join
-    on (id_b, shingle) counts the intersection. All joins are hash-
-    partitionable on ids; nothing touches non-candidate documents: the
-    shingle table is first semi-joined down to docs that appear in a pair,
-    so the size aggregate and the intersection shuffle move candidate
-    docs' shingles only — at low candidate selectivity that is a tiny
-    fraction of the corpus (and AQE turns the id semi-joins into
-    broadcasts when the pair list is small).
-
-    Callers: ``containment_for_pairs`` and ``operators.incremental``,
-    which need ``inter`` and the sizes. ``minhash_pairs`` needs only the
-    Jaccard and verifies in one join and one per-pair aggregate
-    instead. Like it, this assumes ``sh`` holds distinct (id, shingle)
-    rows per doc."""
-    # no distinct on ids: left_semi deduplicates on the build side anyway,
-    # and skipping it saves a shuffle
-    ids = pairs.select(F.col("id_a").alias(id_col)).unionByName(
-        pairs.select(F.col("id_b").alias(id_col))
-    )
-    sh_c = sh.join(ids, on=id_col, how="left_semi")
-    sizes = sh_c.groupBy(id_col).agg(F.count(F.lit(1)).alias("size"))
-    sa = sh_c.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = sh_c.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sa, on="id_a")
-        .join(sb, on=["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    Each pair is exploded to its two doc ids, with the position saying
+    which side an id is, and joined to the shingle table on id, then
+    grouped per pair: count = |S_a| + |S_b|, the position-0 rows give
+    |S_a|, and size(collect_set) = |S_a ∪ S_b|, so
+    |S_a ∩ S_b| = count − |S_a ∪ S_b|. No join is keyed on ``shingle``,
+    and a self-pair (id_a = id_b) counts each side once. Cost: each pair
+    moves |S_a| + |S_b| shingles into its group, O(candidate shingles),
+    NOT O(n²). The join to the shingle table is keyed on doc id, and
+    while the exploded pair list is small AQE broadcasts it, so the
+    shingle table is scanned to probe the candidate ids but not
+    shuffled. The count is |S_a| + |S_b| only because ``sh`` holds
+    distinct (id, shingle) rows per document, as ``shingles`` builds
+    it; that is the input contract."""
+    n = F.col("__n")
+    union = F.col("__union")
+    inter = n - union
     return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("size").alias("size_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("size").alias("size_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("inter")),
+        pairs.select(
+            "id_a", "id_b",
+            F.posexplode(F.array("id_a", "id_b")).alias("__pos", id_col),
         )
-        .select("id_a", "id_b", "inter", "size_a", "size_b", "jaccard")
+        .join(sh, on=id_col)
+        .groupBy("id_a", "id_b")
+        .agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.count_if(F.col("__pos") == 0).alias("size_a"),
+            F.size(F.collect_set("shingle")).alias("__union"),
+        )
+        .where(inter > 0)
+        .select(
+            "id_a", "id_b",
+            inter.alias("inter"),
+            "size_a",
+            (n - F.col("size_a")).alias("size_b"),
+            (inter.cast("double") / union).alias("jaccard"),
+        )
     )
 
 
@@ -474,7 +413,7 @@ def containment_for_pairs(
 ) -> DataFrame:
     """Directed containment for a candidate pair list only (the scale path).
 
-    ``pairs``: (id_a, id_b) unordered candidates (e.g. from MinHash/LSH
+    ``pairs``: distinct (id_a, id_b) unordered candidates (e.g. from MinHash/LSH
     banding — containment ≥ t implies Jaccard ≥ t·|S_i|/(|S_i|+|S_o|), so
     a band pass at a lowered threshold generates the candidates);
     ``sh``: (id, shingle). Output mirrors ``ngram_containment_pairs`` but
@@ -566,7 +505,7 @@ def minhash_pairs(
     n_bands: int = 8,
     shingle_df: DataFrame | None = None,
     max_bucket_size: int | None = 1000,
-    cache_bands: bool | str = "auto",
+    cache_bands: bool | str = True,
     sig_prefilter_margin: float | None = 0.3,
 ) -> DataFrame:
     """LSH-banded candidate pairs verified by exact Jaccard.
@@ -578,19 +517,10 @@ def minhash_pairs(
     to avoid. Output: (id_a, id_b, jaccard), pairs with no shared
     shingle left out (as in ``jaccard_for_pairs``).
 
-    The verify: each distinct candidate pair is exploded to its two doc
-    ids and joined to the shingle table on id, then grouped per pair:
-    count = |S_a| + |S_b| and size(collect_set) = |S_a ∪ S_b|, so
-    |S_a ∩ S_b| = count − |S_a ∪ S_b| and jaccard = ∩ / ∪. No join is
-    keyed on ``shingle``, and the pair list is read once. Cost: each
-    verified pair moves |S_a| + |S_b| shingles into its group — the
-    order of a fan-out join through the shingle table. The join to the
-    shingle table is keyed on doc id, and while the exploded pair list
-    is small AQE broadcasts it, so the shingle table is scanned to
-    probe the candidate ids but not shuffled. The count is
-    |S_a| + |S_b| only because ``shingle_df`` holds distinct
-    (id, shingle) rows per document, as ``shingles`` builds it; that is
-    the input contract.
+    The verify is ``jaccard_for_pairs`` over the distinct candidate
+    pairs: one join to the shingle table keyed on doc id and one
+    per-pair aggregate, with no join keyed on ``shingle``; the pair list
+    is read once.
 
     ``max_bucket_size`` caps band-bucket fan-out (see ``band_bucket_cap``):
     over-cap buckets emit star pairs instead of a clique, keeping a
@@ -608,7 +538,8 @@ def minhash_pairs(
     borderline pair; far-above-threshold pairs are unaffected). Set
     None to disable (full LSH recall).
 
-    ``cache_bands`` (any truthy mode of ``_session_cache``) caches the
+    ``cache_bands`` (``True`` persists, ``"ckpt"`` localCheckpoints;
+    see ``_session_cache``; ``False`` caches nothing) caches the
     bands and, with the prefilter on, the signature — read by the band
     explode and both prefilter joins; the entries sit in the band ledger
     until released. The shingle set is read twice (signature and
@@ -684,21 +615,9 @@ def minhash_pairs(
                 .where(agree >= F.lit(min_agree))
                 .select("id_a", "id_b")
             )
-    # each pair fans out to its two docs' shingles; grouped per pair,
-    # count = |S_a| + |S_b| and collect_set = S_a ∪ S_b, so
-    # |S_a ∩ S_b| = count − |S_a ∪ S_b| with no join keyed on shingle
-    union = F.col("__union")
-    inter = F.col("__n") - union
     return (
-        cand.select("id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias(id_col))
-        .join(sh, on=id_col)
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.size(F.collect_set("shingle")).alias("__union"),
-        )
-        .where(inter > 0)
-        .select("id_a", "id_b", (inter.cast("double") / union).alias("jaccard"))
+        jaccard_for_pairs(cand, sh, id_col)
+        .select("id_a", "id_b", "jaccard")
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -851,7 +770,7 @@ def embedding_near_dup_lsh(
     band_bits: int = 4,
     seed: int = 42,
     max_bucket_size: int | None = 1000,
-    cache_bands: bool | str = "auto",
+    cache_bands: bool | str = True,
 ) -> DataFrame:
     """Scale path for cosine near-dup pairs: random-hyperplane LSH candidates
     + exact cosine verify. Same output schema as ``embedding_near_dup``

@@ -263,8 +263,8 @@ def incremental_minhash_dups(
         how="left_semi",
     )
     if shingle_df is not None:
-        # jaccard_for_pairs semi-joins its shingle input down to pair
-        # ids itself — the full shared table is safe to pass verbatim
+        # jaccard_for_pairs joins its shingle input to the pair ids
+        # itself — the full shared table is safe to pass verbatim
         sh = shingle_df
     else:
         sh = shingles(hist_cand, text_col, id_col, n).unionByName(

@@ -296,9 +296,8 @@ def kneser_ney_logprob(docs: DataFrame, id_col: str = "doc_id",
     materialization Catalyst re-executes the whole explode+aggregate
     subtree per branch — ~5 corpus passes (the round-11 PLANS.md dump
     made this visible).  Both shared tables therefore ride the
-    ``_session_cache("auto")`` idiom: the tf table and the bigram-type
-    table persist below the spill threshold and spill to warehouse
-    tables above it, cutting the plan to ONE gram pass + one token
+    ``_session_cache`` idiom: the tf table and the bigram-type table
+    persist, cutting the plan to ONE gram pass + one token
     pass (measured 2x-3x cold at 20M tokens; bench tags these lines
     cache-registering and records them cold, the ADVICE r10 #1
     convention).  ``clear_band_cache()`` releases them.
@@ -325,8 +324,7 @@ def kneser_ney_logprob(docs: DataFrame, id_col: str = "doc_id",
     tf = _session_cache(
         grams.groupBy(id_col, "__hab", "__ha", "__hb").agg(
             F.count(F.lit(1)).alias("__n")
-        ),
-        "auto",
+        )
     )
     uni = docs.select(
         F.explode(F.split(F.col(text_col), " ")).alias("__tok")
@@ -337,8 +335,7 @@ def kneser_ney_logprob(docs: DataFrame, id_col: str = "doc_id",
     bcnt = _session_cache(
         tf.groupBy("__hab", "__ha", "__hb").agg(
             F.sum("__n").alias("__cab")
-        ),
-        "auto",
+        )
     )
     n1_fw = bcnt.groupBy("__ha").agg(
         F.count(F.lit(1)).alias("__n1f")

@@ -207,13 +207,10 @@ def semdedup(
     # the assignment aggregate feeds three consumers (both pair-join
     # sides + the verdict join); cache it through the session registry
     # (released by dedup.clear_band_cache) so the broadcast-score +
-    # max_by stage runs once — (id, vec, cluster, norm) rows; memory
-    # persist (MEMORY_AND_DISK spills per-partition), not the table
-    # spill: the fanout join above inflates the plan-size estimate and
-    # "auto" would eagerly write a table costing more than the recompute
+    # max_by stage runs once — (id, vec, cluster, norm) rows
     from .dedup import _session_cache
 
-    withn = _session_cache(withn, mode=True)
+    withn = _session_cache(withn)
     assigned = withn.drop("__n")
     a = withn.select(
         F.col("vec_id").alias("id_a"), F.col("__v").alias("__va"),

@@ -56,8 +56,8 @@ Everything is equi-join + groupBy — no cartesian, no Python UDFs:
   distributed across doc groups;
 * the per-doc ordered array is consumed three times in one plan (prefix
   explode + both verify sides), so it is session-cached through the
-  dedup family's ``_session_cache`` (auto memory-vs-table by plan size;
-  released by ``clear_band_cache``) instead of being recomputed per
+  dedup family's ``_session_cache`` (a persist, released by
+  ``clear_band_cache``) instead of being recomputed per
   consumer;
 * the candidate join shuffles only prefix token hashes (a few rare
   grams per doc); the verify join ships hash arrays for candidate
@@ -143,7 +143,7 @@ def set_similarity_join(
 
         # tok feeds BOTH the df aggregation and the array build —
         # uncached, Spark runs the tokenize+hash+distinct subtree twice
-        tok = _session_cache(tok, "auto")
+        tok = _session_cache(tok)
     dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
 
     # Per-doc token array sorted by the global (df asc, hash asc) order.
@@ -162,7 +162,7 @@ def set_similarity_join(
         )
     )
     if cache_ordered:
-        ordered = _session_cache(ordered, "auto")
+        ordered = _session_cache(ordered)
 
     # size-canonical asymmetric prefixes (PPJoin): the a-role (smaller
     # set, ties by id) explodes |x| - ceil(2t/(1+t)·|x|) + 1 tokens,

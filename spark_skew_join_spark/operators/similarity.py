@@ -134,7 +134,7 @@ def lsh_topk(
     band_bits: int = 4,
     seed: int = 42,
     max_bucket_size: int | None = 1000,
-    cache_bands: bool | str = "auto",
+    cache_bands: bool | str = True,
     probe_codes: int = 1,
 ) -> DataFrame:
     """Approximate top-k: candidates share >=1 SimHash band bucket.
@@ -205,8 +205,7 @@ def lsh_topk(
     )
     if cache_bands:
         # corpus bands feed both the hot-bucket stats and the probe join —
-        # cache via the shared registry (dedup.clear_band_cache releases);
-        # "auto" spills to a temp table above the size estimate threshold
+        # cache via the shared registry (dedup.clear_band_cache releases)
         from .dedup import _session_cache
 
         cb = _session_cache(cb, mode=cache_bands)

@@ -682,7 +682,7 @@ def _session_key(spark: SparkSession):
         return id(spark)
 
 
-# (family, session key, sf_dir) -> (value, band frames, spill tables)
+# (family, session key, sf_dir) -> (value, band frames)
 _FAMILIES: dict[tuple, tuple] = {}
 
 
@@ -709,9 +709,9 @@ def _family(build: Callable) -> Callable:
         except BaseException:
             dd.release_entries(*dd.entries_since(snap))
             raise
-        bands, spills = dd.entries_since(snap)
-        dd._unregister(bands, spills)
-        _FAMILIES[key] = (value, bands, spills)
+        bands, _ = dd.entries_since(snap)
+        dd._unregister(bands)
+        _FAMILIES[key] = (value, bands)
         return value
 
     return family
@@ -726,8 +726,7 @@ def clear_dedup_cache() -> None:
     from .operators.pq import clear_pq_broadcasts
 
     while _FAMILIES:
-        _, bands, spills = _FAMILIES.popitem()[1]
-        release_entries(bands, spills)
+        release_entries(_FAMILIES.popitem()[1][1])
     clear_band_cache()
     # LUT broadcasts pq_topk left alive for its lazy result DataFrames
     # (one per lut_chunk — ADVICE r8 #4)
@@ -10195,9 +10194,6 @@ EAGER_QUERIES = (
     "ann_ivf_topk",
     "ann_ivf_refined_topk",
     "ann_ivfpq_refined_topk",
-    # corpus band table may spill via _session_cache("auto") at
-    # construction (the setsim precedent)
-    "ann_lsh_refined_topk",
     "bpe_train_docs",
     "bpe_tokenize_docs",
     "unigram_tokenizer_docs",
@@ -10219,9 +10215,6 @@ EAGER_QUERIES = (
     "skew_join_lineitem_supplier",
     "skew_join_multicol",
     "q3_via_skew_join",
-    # _session_cache(ordered, "auto") at plan construction runs an eager
-    # saveAsTable when the spill threshold trips (ADVICE r8 #5)
-    "setsim_join_docs",
     "dedup_clusters_docs",
     "dedup_fuzzy_survivors",
     # broadcast-size guard materializes + counts the benchmark gram set

@@ -206,35 +206,6 @@ def get_spark(app_name: str = "spark_skew_join_spark", cpus: int | None = None) 
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
-    _sweep_stale_spill_dirs(spark)
     return configure(spark)
 
 
-def _sweep_stale_spill_dirs(spark, max_age_sec: int = 90 * 60) -> None:
-    """Remove orphaned ``__sgsj_spill_*`` warehouse directories left by
-    KILLED sessions (VERDICT r14 #7/#8): a killed JVM drops nothing,
-    and the spill names are process-unique, so orphans accumulate
-    forever. Age-based (default 90 min — far beyond any live segment's
-    lifetime) so a CONCURRENT process's live spill tables are never
-    touched; the current process's own tables are seconds old."""
-    import shutil
-    import time
-
-    try:
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).replace("file:", "")
-        if not os.path.isdir(wh):
-            return
-        now = time.time()
-        for name in os.listdir(wh):
-            if not name.startswith("__sgsj_spill_"):
-                continue
-            p = os.path.join(wh, name)
-            try:
-                if now - os.path.getmtime(p) > max_age_sec:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                continue
-    except Exception:  # best-effort hygiene — never block session start
-        pass

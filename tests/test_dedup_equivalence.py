@@ -77,7 +77,7 @@ def test_minhash_full_recall_vs_exact_jaccard(spark, exact_jaccard_05):
 
 
 @pytest.mark.parametrize(
-    "cache_bands, margin", [("auto", None), (True, 0.3), ("ckpt", 0.3), (False, 0.3)]
+    "cache_bands, margin", [(True, None), (True, 0.3), ("ckpt", 0.3), (False, 0.3)]
 )
 def test_minhash_exact_jaccard_in_every_cache_mode(
     spark, exact_jaccard_05, cache_bands, margin

@@ -198,7 +198,9 @@ def test_minhash_agrees_with_exact_jaccard(spark):
 
 def test_jaccard_for_pairs_matches_full_table(spark):
     """Candidate-scoped Jaccard == the all-pairs computation restricted to
-    those pairs (the minhash verify correctness argument)."""
+    those pairs (the minhash verify correctness argument): the same
+    intersection, sizes and Jaccard, and a self-pair counts each side
+    once."""
     from spark_skew_join_spark.operators.dedup import jaccard_for_pairs, shingles
 
     rows = [
@@ -208,18 +210,22 @@ def test_jaccard_for_pairs_matches_full_table(spark):
         (4, "the quick brown fox jumps over the lazy dog again"),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    cols = ("inter", "size_a", "size_b", "jaccard")
     full = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
+        (r["id_a"], r["id_b"]): tuple(r[c] for c in cols)
         for r in ngram_jaccard_pairs(docs, threshold=0.0, n=5).collect()
     }
-    cand = spark.createDataFrame(
-        [(1, 2), (1, 4), (2, 3)], "id_a bigint, id_b bigint"
-    )
+    sh = shingles(docs, n=5)
+    n4 = sh.where("doc_id = 4").count()
+    full[(4, 4)] = (n4, n4, n4, 1.0)
+    want = {(1, 2), (1, 4), (2, 3), (4, 4)}
+    cand = spark.createDataFrame(sorted(want), "id_a bigint, id_b bigint")
     scoped = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_for_pairs(cand, shingles(docs, n=5)).collect()
+        (r["id_a"], r["id_b"]): tuple(r[c] for c in cols)
+        for r in jaccard_for_pairs(cand, sh).collect()
     }
-    assert scoped == {k: v for k, v in full.items() if k in {(1, 2), (1, 4), (2, 3)}}
+    assert scoped == {k: v for k, v in full.items() if k in want}
+    assert {(1, 2), (1, 4), (4, 4)} <= set(scoped)
 
 
 @pytest.mark.slow
@@ -388,11 +394,11 @@ def test_lsh_probe_codes_validation(spark):
             lsh_topk(df, df, k=1, dim=8, band_bits=4, probe_codes=bad)
 
 
-def test_band_cache_table_mode_same_result_and_cleanup(spark):
-    """VERDICT r3 #5: cache_bands="table" spills band/signature DataFrames
-    to temp warehouse tables instead of executor memory — identical output,
-    and clear_band_cache drops the tables."""
-    from spark_skew_join_spark.operators.dedup import clear_band_cache, minhash_pairs
+def test_band_cache_modes_same_result_and_cleanup(spark):
+    """Uncached, persisted and checkpointed band caches give identical
+    rows; clear_band_cache returns the ledger to its starting snapshot
+    and leaves no warehouse table behind."""
+    from spark_skew_join_spark.operators import dedup as dd
 
     docs = spark.createDataFrame(
         [
@@ -402,21 +408,36 @@ def test_band_cache_table_mode_same_result_and_cleanup(spark):
         ],
         "doc_id bigint, text string",
     )
-    mem = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in minhash_pairs(docs, threshold=0.5, cache_bands=True).collect()
+    dd.clear_band_cache()  # earlier tests may leave entries registered
+    snap = dd.cache_snapshot()
+    got = {
+        mode: sorted(
+            tuple(r)
+            for r in dd.minhash_pairs(docs, threshold=0.5, cache_bands=mode).collect()
+        )
+        for mode in (False, True, "ckpt")
     }
-    clear_band_cache()
-    tbl = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in minhash_pairs(docs, threshold=0.5, cache_bands="table").collect()
-    }
-    assert tbl == mem and (1, 2) in {(a, b) for a, b, _ in tbl}
-    spilled = [t.name for t in spark.catalog.listTables() if "__sgsj_spill" in t.name]
-    assert spilled, "table mode should have created spill tables"
-    clear_band_cache()
+    assert got[False] == got[True] == got["ckpt"]
+    assert (1, 2) in {(a, b) for a, b, _ in got[True]}
+    assert dd.cache_snapshot() != snap
+    dd.clear_band_cache()
+    assert dd.cache_snapshot() == snap
     left = [t.name for t in spark.catalog.listTables() if "__sgsj_spill" in t.name]
-    assert not left, f"spill tables not dropped: {left}"
+    assert not left, left
+
+
+@pytest.mark.parametrize("mode", ["tabel", "table", "auto"])
+def test_band_cache_rejects_unknown_modes(spark, mode):
+    from spark_skew_join_spark.operators import dedup as dd
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id bigint, text string",
+    )
+    snap = dd.cache_snapshot()
+    with pytest.raises(ValueError, match="cache mode"):
+        dd.minhash_pairs(docs, threshold=0.5, cache_bands=mode)
+    assert dd.cache_snapshot() == snap
 
 
 def test_connected_components_chains_and_singletons(spark):
@@ -678,33 +699,6 @@ def test_real_bmp_resize_through_spark(spark):
     yi = (np.arange(4) * 10 // 4).clip(0, 9)
     xi = (np.arange(5) * 20 // 5).clip(0, 19)
     assert np.array_equal(resized, arr[yi][:, xi])
-
-
-def test_spill_orphan_location_recovery(spark, tmp_path):
-    """A killed session leaves managed-table directories no later
-    session can drop via the catalog; _session_cache must clear the
-    orphan instead of dying with LOCATION_ALREADY_EXISTS."""
-    import os
-
-    from spark_skew_join_spark.operators.dedup import (
-        _SPILL_SEQ, _SPILL_TOKEN, _drop_orphan_location, _session_cache,
-        clear_band_cache,
-    )
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
-    orphan_name = f"__sgsj_spill_{_SPILL_TOKEN}_{_SPILL_SEQ[0] + 1}"
-    orphan_dir = os.path.join(wh, orphan_name.lower())
-    os.makedirs(orphan_dir, exist_ok=True)
-    with open(os.path.join(orphan_dir, "junk"), "w") as f:
-        f.write("stale")
-    df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    out = _session_cache(df, "table")  # must not raise
-    assert out.count() == 10
-    clear_band_cache()
-    assert not os.path.exists(orphan_dir)
-
-    # the helper is safe on a nonexistent path too
-    _drop_orphan_location(spark, "__sgsj_spill_nonexistent_999")
 
 
 def test_simhash_md5_mode_python_replay(spark):

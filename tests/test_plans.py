@@ -134,7 +134,7 @@ def test_minhash_verify_is_candidate_scoped(spark):
     below = _subtree(lines, verify[0])
     fan = [
         i for i, line in enumerate(below)
-        if re.search(r"Generate explode\(array\(id_a#\d+L?, id_b#\d+L?\)\)", line)
+        if re.search(r"Generate posexplode\(array\(id_a#\d+L?, id_b#\d+L?\)\)", line)
     ]
     assert fan, "verify does not fan each pair out to its two doc ids"
     assert re.search(
